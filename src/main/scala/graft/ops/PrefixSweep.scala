@@ -187,7 +187,10 @@ object PrefixSweep {
     val oc = orderCols.map(col)
     def run(nParts: Int): DataFrame = {
       // lazy pin of the sampled range boundaries (see sweep): the
-      // histogram collect below is the materializing action
+      // histogram collect below is the materializing action. With
+      // nParts == 1 there is no collect and the pin first fires at
+      // readout; that is safe because repartitionByRange(1) samples no
+      // boundaries, so every evaluation puts all rows in partition 0
       val parted = df.repartitionByRange(nParts, oc: _*)
         .withColumn("__pid", spark_partition_id())
         .localCheckpoint(false)

@@ -2367,9 +2367,9 @@ object AggQueries {
       .groupBy("grp")
       .agg(sum("cnt").as("n_g"),
         sum(col("z").cast("decimal(9,1)") *
-          col("cnt").cast("decimal(14,0)")).as("s1"),
+          col("cnt").cast("decimal(19,0)")).as("s1"),
         sum((col("z") * col("z")).cast("decimal(18,2)") *
-          col("cnt").cast("decimal(14,0)")).as("s2"))
+          col("cnt").cast("decimal(19,0)")).as("s2"))
     val tot = g.agg(count(lit(1)).as("k"), sum("n_g").as("n"),
       sum("s1").as("s"))
     val terms = g.crossJoin(broadcast(tot))

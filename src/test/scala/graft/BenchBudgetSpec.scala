@@ -125,6 +125,10 @@ class BenchBudgetSpec extends AnyFunSuite {
     "q_udaf_wavg" -> 1.0, "q_udf_time_until_close" -> 0.8,
     // text / vector pipeline
     "q_text_tokenize" -> 0.4, "q_text_dedup_exact" -> 0.4,
+    // both minhash budgets assume an earlier query in the sweep already
+    // paid for the session-shared LSH banding build (ContractionCache);
+    // a focused run of one of them alone pays that build cold and can
+    // read over its budget without any regression
     "q_text_minhash" -> 0.7,
     // minhash pairs + union-find contraction (the two stages composed)
     "q_text_minhash_groups" -> 1.5,

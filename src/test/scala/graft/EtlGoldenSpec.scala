@@ -1,7 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import graft.etl.Normalize
-import org.apache.spark.sql.Row
+import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, Encoders, Row}
+import org.apache.spark.sql.functions.expr
 
 /** Golden end-to-end ETL test (SURVEY.md §5.2): the committed fixture
   * NDJSON (FIXTURES.md §2 coverage list) through [[Normalize]] must yield
@@ -135,10 +142,104 @@ class EtlGoldenSpec extends SparkSpecBase {
 
   test("normalization is idempotent (re-run produces identical tables)") {
     val again = Normalize.normalize(split._1)
-    Seq("business", "open_hours", "business_amenity").foreach { t =>
+    assert(tables.size == 11 && again.keySet == tables.keySet)
+    tables.keys.foreach { t =>
       val a = tables(t).collect().toSet
       val b = again(t).collect().toSet
       assert(a == b, s"table $t differs between runs")
     }
+  }
+
+  test("bridge ids are 1..n over a null and a repeated name") {
+    // bridges are numbered before their dim is joined on, so a null name
+    // must be dropped before numbering or it would leave a gap in the ids
+    val records = Seq(
+      """{"bizId": "biz-x", "ranking": 1, "name": "X", """ +
+        """"food_category": ["Pubs", null, "Bars", "Pubs"]}""",
+      """{"bizId": "biz-y", "ranking": 2, "name": "Y", """ +
+        """"food_category": [null, "Cafes"]}""")
+    val valid = Normalize.validate(spark.read.schema(Schemas.scrapedBusiness)
+      .json(spark.createDataset(records)(Encoders.STRING)))._1
+    val out = Normalize.normalize(valid)
+    val dim = out("food_category").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    assert(dim.toSeq == Seq((1L, "Bars"), (2L, "Cafes"), (3L, "Pubs")))
+    val bridge = out("business_food_category")
+      .select("id", "business_id", "food_category_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    assert(bridge.toSeq == Seq((1L, 1L, 1L), (2L, 1L, 3L), (3L, 1L, 3L),
+      (4L, 2L, 2L)))
+  }
+
+  test("a failing branch surfaces its own exception and leaves no thread") {
+    // open_hours is the only branch that reads the day struct's fields
+    val renamed = split._1.withColumn("open_hours", expr(
+      "transform(open_hours, o -> named_struct('day', o.weekday, " +
+        "'open_hours', o.open_hours))"))
+    val e = intercept[AnalysisException](Normalize.normalize(renamed))
+    assert(e.getMessage.contains("weekday"))
+    val branches = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == "normalize-branch")
+    branches.foreach(_.join(10000))
+    assert(!branches.exists(_.isAlive))
+  }
+
+  test("a failing branch cancels the other branches' jobs") {
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](
+      Normalize.inBranches(spark, 2) { submit =>
+        // one task that runs until its job is cancelled, or for 2 min
+        val slow = submit {
+          sc.parallelize(Seq(1), 1).map { x =>
+            val tc = TaskContext.get()
+            val end = System.nanoTime() + 120e9.toLong
+            while (!tc.isInterrupted() && System.nanoTime() < end)
+              Thread.sleep(10)
+            x
+          }.count()
+          spark.emptyDataFrame
+        }
+        val failing = submit {
+          Thread.sleep(500)
+          throw new IllegalStateException("branch failed")
+        }
+        Seq("slow" -> slow, "failing" -> failing)
+      })
+    assert(e.getMessage == "branch failed")
+    // inBranches waits for every branch, so only a cancelled slow job
+    // lets it return this early
+    assert(System.nanoTime() - t0 < 60e9.toLong)
+  }
+
+  test("every job normalize starts carries the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("etl-golden", "normalize under a caller's group")
+      try Normalize.normalize(split._1)
+      finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen,
+      // every job normalize started has been seen too
+      sc.setJobGroup("marker", "end of normalize's jobs")
+      try sc.parallelize(Seq(1)).count()
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!groups.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    val seen = groups.asScala.toSeq
+    assert(seen.lastOption.contains("marker"))
+    val normalizeJobs = seen.init
+    // at least the count job of each of the ten numberings
+    assert(normalizeJobs.size >= 10, normalizeJobs)
+    assert(normalizeJobs.forall(_ == "etl-golden"), normalizeJobs)
   }
 }
