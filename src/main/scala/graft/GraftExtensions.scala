@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graftfns.{DotProduct, MinHashes, ShingleHashes, SimHash64, TokenBigrams, TokenHashes, TokenNgrams}
+import org.apache.spark.sql.graftfns.{DotProduct, MinHashes, ParseHours, ShingleHashes, SimHash64, TokenBigrams, TokenHashes, TokenNgrams}
 import org.apache.spark.sql.types.IntegerType
 
 /** Session extension wiring: exposes the engine's custom Catalyst
@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.IntegerType
   * `token_hashes` replacing the interpreted per-token lambda:
   * `minhashes(shingle_hashes(token_hashes(split(text, ' ')), 3), 64)`,
   * `simhash64(token_hashes(split(text, ' ')))`; `token_bigrams` exposes
-  * the compiled co-occurrence unit the same way.
+  * the compiled co-occurrence unit the same way, and `parse_hours` the
+  * opening-hours parser.
   * No custom optimizer rules or strategies are injected: the operator
   * inventory is expressible in declarative plans Catalyst already
   * optimizes (SURVEY.md §4.1). */
@@ -90,6 +91,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         arity("token_ngrams", args, 2)
         TokenNgrams(args(0), litInt("token_ngrams", args(1), 1))
+      }))
+    e.injectFunction((
+      FunctionIdentifier("parse_hours"),
+      new ExpressionInfo(classOf[ParseHours].getName, "parse_hours"),
+      (args: Seq[Expression]) => {
+        arity("parse_hours", args, 1)
+        ParseHours(args(0))
       }))
   }
 }

@@ -183,21 +183,22 @@ object Normalize {
       weekdays.zipWithIndex.map { case (w, i) => (i + 1L, w) })
       .toDF("id", "name")
 
-    // open_hours: explode day rows, parse the hours grammar, explode
-    // ranges (the §2.L generator) → one row per contiguous open interval
-    // (parse_and_upload_to_db.py:111-118); unparseable strings are
-    // dropped like the reference's raise-per-record, but set-wise.
+    // open_hours: explode day rows, then each day's parsed intervals
+    // (the §2.L generator) → one row per contiguous open interval
+    // (parse_and_upload_to_db.py:111-118). The outer explode yields a
+    // null interval for an unparseable string (parse NULL) and for
+    // "Closed" (no intervals); filtering it drops them like the
+    // reference's raise-per-record, but set-wise. The inner explode would
+    // let InferFiltersFromGenerate add `size(parse) > 0`, a second run
+    // of the parse per day row.
     def openHours: DataFrame = withId.select(col("id").as("business_id"),
         explode(col("open_hours")).as("oh"))
       .select(col("business_id"), col("oh.weekday").as("weekday_name"),
-        col("oh.open_hours").as("hours_str"))
-      .filter(HoursParser.isParseable(col("hours_str")))
-      .withColumn("opens", HoursParser.opens(col("hours_str")))
-      .withColumn("closes", HoursParser.closes(col("hours_str")))
-      .select(col("business_id"), col("weekday_name"), col("closes"),
-        posexplode(col("opens")))
-      .withColumn("open_time", col("col"))
-      .withColumn("close_time", element_at(col("closes"), col("pos") + 1))
+        explode_outer(HoursParser.parse(col("oh.open_hours"))).as("iv"))
+      .filter(col("iv").isNotNull)
+      .select(col("business_id"), col("weekday_name"),
+        col("iv.open_time").as("open_time"),
+        col("iv.close_time").as("close_time"))
       .join(broadcast(weekday.select(col("id").as("weekday_id"),
         col("name").as("weekday_name"))), "weekday_name")
       .transform(df => Relational.globalRowNumber(df,

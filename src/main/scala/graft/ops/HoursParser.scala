@@ -1,12 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{lit, when}
+import org.apache.spark.sql.graftfns.HoursFunctions.parse_hours
 
 /** Opening-hours string parser — the reference's one domain-specific
-  * "function" (`database/parse_and_upload_to_db.py:58-81`), re-expressed as
-  * a pure Catalyst expression pipeline (no UDF: stays inside whole-stage
-  * codegen and is pushed/pruned like any built-in; SURVEY.md §7.3).
+  * "function" (`database/parse_and_upload_to_db.py:58-81`), as one
+  * codegen'd Catalyst expression ([[org.apache.spark.sql.graftfns.ParseHours]],
+  * SQL `parse_hours`): no UDF and no higher-order function, so the parse
+  * compiles into the surrounding whole-stage code like any built-in
+  * (SURVEY.md §7.3). Validity, opening and closing times are all
+  * projections of that one parse.
   *
   * Grammar (reference docstring, `parse_and_upload_to_db.py:64-74`):
   *  - `"Closed"`                                      → no intervals
@@ -16,64 +20,30 @@ import org.apache.spark.sql.functions._
   *                                                    → two intervals
   *  - `"4:00 PM - 12:00 AM (Next day)"` suffix is cosmetic: close < open
   *    already encodes the overnight interval            → [(57600, 0)]
+  *  - anything else fails the anchored full-string grammar
+  *    ([[org.apache.spark.sql.graftfns.ParseHours.grammar]]): hour 1–12,
+  *    minute 00–59, minutes optional — the reference's strptime raises
+  *    on it.
   *
   * Times are seconds-since-midnight longs (the engine's TIME
   * representation, SURVEY.md §7.4.1).
   */
 object HoursParser {
 
-  /** Minutes are optional: the reference's fallback time format `"%I %p"`
-    * (`parse_and_upload_to_db.py:54-55`) accepts `"11 AM"`. */
-  private val timePattern = "(\\d{1,2}(?::\\d{2})? [AP]M)"
-
-  /** Parse one `"h:mm AM"` / `"h AM"` time string to seconds since
-    * midnight. */
-  def timeToSec(t: Column): Column = {
-    val h = regexp_extract(t, "^(\\d{1,2})", 1).cast("int")
-    val m = coalesce(
-      nullif(regexp_extract(t, ":(\\d{2})", 1), lit("")), lit("0"))
-      .cast("int")
-    val isPm = substring_index(t, " ", -1) === "PM"
-    ((when(isPm, (h % 12) + 12).otherwise(h % 12)) * 3600 + m * 60).cast("long")
-  }
-
-  /** All `h:mm AM/PM` tokens of an hours string, in text order. */
-  def times(hoursStr: Column): Column =
-    regexp_extract_all(hoursStr, lit(timePattern), lit(1))
-
-  /** Opening times of each range (even-indexed tokens), with sentinel
-    * handling. */
-  def opens(hoursStr: Column): Column = sentinels(hoursStr, lit(0L),
-    filter(transform(times(hoursStr), timeToSec _),
-      (_, i) => i % 2 === 0))
-
-  /** Closing times of each range (odd-indexed tokens), with sentinel
-    * handling; 24 h sentinel closes at 86399 (= 23:59:59, reference
-    * `parse_and_upload_to_db.py:74`). */
-  def closes(hoursStr: Column): Column = sentinels(hoursStr, lit(86399L),
-    filter(transform(times(hoursStr), timeToSec _),
-      (_, i) => i % 2 === 1))
-
-  private def sentinels(s: Column, open24: Column, parsed: Column): Column =
-    when(s === "Closed", array().cast("array<long>"))
-      .when(s === "Open 24 hours", array(open24))
-      .otherwise(parsed)
-
-  /** Full-string grammar for a non-sentinel hours value: one or more
-    * glued `T - T` ranges, optional `" (Next day)"` suffix, where T is a
-    * strict 12-hour time (hour 1–12, minute 00–59, minutes optional).
-    * Anchored whole-string matching is essential: token-level checks let
-    * a malformed prefix re-tokenize into a shorter valid token (e.g.
-    * `"1:5 PM"` → token `"5 PM"`) and fabricate intervals from garbage
-    * the reference's strptime raises on. */
-  private val timeStrict = "(?:1[0-2]|[1-9])(?::[0-5][0-9])? [AP]M"
-  private val hoursGrammar =
-    s"^(?:$timeStrict - $timeStrict)+(?: \\(Next day\\))?$$"
+  /** `array<struct<open_time, close_time>>` of the string's intervals in
+    * text order; NULL when it fails the grammar. */
+  def parse(hoursStr: Column): Column = parse_hours(hoursStr)
 
   /** Row-wise validity (reference raises ValueError on garbage,
     * `parse_and_upload_to_db.py:78-79`; we quarantine instead). */
-  def isParseable(s: Column): Column =
-    s.isin("Closed", "Open 24 hours") || s.rlike(hoursGrammar)
+  def isParseable(s: Column): Column = parse(s).isNotNull
+
+  /** Opening times of each range, text order. */
+  def opens(hoursStr: Column): Column = parse(hoursStr).getField("open_time")
+
+  /** Closing times of each range, text order. */
+  def closes(hoursStr: Column): Column =
+    parse(hoursStr).getField("close_time")
 
   /** Overnight membership: is `probeSec` inside [open, close), where
     * close < open wraps past midnight — the 3-disjunct filter of

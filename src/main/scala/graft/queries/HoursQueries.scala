@@ -34,14 +34,13 @@ object HoursQueries {
   }
 
   /** q_udf_parse_hours — hours-string → open/close second lists via the
-    * pure-expression parser ([[HoursParser]]; ref `parse_hours`
+    * compiled parser ([[HoursParser]]; ref `parse_hours`
     * `database/parse_and_upload_to_db.py:58-81`). */
   private val parseHours: Q = (s, dir) =>
-    // same single-split lift as hoursExplode below: the regex/HOF parse
-    // (filter∘transform is CodegenFallback) otherwise sits in the
-    // one-split scan stage BELOW the presentation sort's range
-    // exchange and runs on one core (r19 bench: the whole 2.4 s quiet
-    // cost was this one serial stage)
+    // same single-split lift as hoursExplode below: the parse is this
+    // query's per-row work and otherwise sits in the one-split scan stage
+    // BELOW the presentation sort's range exchange, on one core (r19
+    // bench: the whole 2.4 s quiet cost was that one serial stage)
     withHoursStr(Tables.parallelized(Tables.load(s, dir, "events")))
       // the parser returns BIGINT arrays; the final projection serializes
       // them to '|'-joined strings only so the driver's scalar comparator
@@ -55,27 +54,25 @@ object HoursQueries {
 
   /** q_udtf_hours_explode — one row per open interval (ref nested
     * insert loop `database/parse_and_upload_to_db.py:111-118`); generator
-    * = explode over the parser's array output, no custom Generator needed
-    * (SURVEY.md §7.3). */
+    * = explode over the parser's interval array, no custom Generator
+    * needed (SURVEY.md §7.3). */
   private val hoursExplode: Q = (s, dir) =>
-    // the parse is the one interpreted-HOF hot path (filter∘transform is
-    // CodegenFallback) — lift the single-split scan to full parallelism
-    // before it, or the whole stage runs on one core (round-3 bench)
+    // the parse is the per-row work — lift the single-split scan to full
+    // parallelism before it, or the whole stage runs on one core
+    // (round-3 bench)
     withHoursStr(Tables.parallelized(Tables.load(s, dir, "events")))
-      .withColumn("opens", HoursParser.opens(col("hours_str")))
-      .withColumn("closes", HoursParser.closes(col("hours_str")))
       // posexplode_OUTER + pos-not-null ≡ inner posexplode, but dodges
-      // InferFiltersFromGenerate: the inner form infers `size(opens)>0`,
-      // and predicate pushdown drags that filter — with the ENTIRE
-      // interpreted parse inlined — below the repartition exchange into
-      // the single-split scan task, re-running the whole parse serially
-      // (measured: ~70% of this query's round-3 bench cost)
-      .select(col("event_id"), col("closes"), posexplode_outer(col("opens")))
+      // InferFiltersFromGenerate: the inner form infers `size(parse)>0`,
+      // and predicate pushdown drags that filter — with the parse
+      // inlined — below the repartition exchange into the single-split
+      // scan task, re-running the whole parse serially (measured: ~70% of
+      // this query's round-3 bench cost, with the interpreted parser)
+      .select(col("event_id"),
+        posexplode_outer(HoursParser.parse(col("hours_str"))))
       .filter(col("pos").isNotNull)
-      .withColumn("range_idx", col("pos").cast("long"))
-      .withColumn("open_sec", col("col"))
-      .withColumn("close_sec", element_at(col("closes"), col("pos") + 1))
-      .select("event_id", "range_idx", "open_sec", "close_sec")
+      .select(col("event_id"), col("pos").cast("long").as("range_idx"),
+        col("col.open_time").as("open_sec"),
+        col("col.close_time").as("close_sec"))
       .orderBy("event_id", "range_idx")
 
   /** q_udaf_wavg — weighted average via the typed Aggregator surface

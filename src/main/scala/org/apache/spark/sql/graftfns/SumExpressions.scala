@@ -29,9 +29,11 @@ import org.apache.spark.sql.types._
   * `Cast(decimalSum AS DOUBLE)` uses, so the emitted double is
   * bit-identical to the decimal-sum-then-cast chain it replaces.
   *
-  * Contract: inputs are NON-NEGATIVE longs ≤ ~8.2e18 (so lo + child
-  * cannot overflow and remainder/divide are plain non-negative ops);
-  * null inputs are skipped and an all-null (or empty) group reads
+  * Contract: inputs are NON-NEGATIVE longs ≤ [[Sum128Eval.MaxInput]]
+  * (~8.2e18, so lo + child cannot overflow and remainder/divide are
+  * plain non-negative ops); any other input fails the query with
+  * [[Sum128InputOutOfRange]] instead of wrapping the accumulator. Null
+  * inputs are skipped and an all-null (or empty) group reads
   * null — SQL sum semantics. Capacity: hi counts 10¹⁸-chunks, so the
   * true sum may reach ~9.2e36 — far past any 100 TB power sum. */
 case class Sum128(child: Expression, scale: Int)
@@ -60,7 +62,9 @@ case class Sum128(child: Expression, scale: Int)
     Seq(Literal(0L), Literal(0L), Literal(false))
 
   override lazy val updateExpressions: Seq[Expression] = {
-    val t = Add(lo, child)
+    val checked = StaticInvoke(Sum128Eval.getClass, LongType, "checked",
+      Seq(child), Seq(LongType), returnNullable = false)
+    val t = Add(lo, checked)
     Seq(
       If(IsNull(child), hi, Add(hi, IntegralDivide(t, base))),
       If(IsNull(child), lo, Remainder(t, base)),
@@ -91,6 +95,13 @@ object Sum128Eval {
   val Base: Long = 1000000000000000000L // 10^18
   private val BaseBig = java.math.BigInteger.valueOf(Base)
 
+  /** Largest input: lo < 10¹⁸, so lo + MaxInput ≤ Long.MaxValue. */
+  val MaxInput: Long = Long.MaxValue - (Base - 1)
+
+  /** `v`, or [[Sum128InputOutOfRange]] when it breaks the contract. */
+  def checked(v: Long): Long =
+    if (v >= 0 && v <= MaxInput) v else throw new Sum128InputOutOfRange(v)
+
   /** Exact double of the decimal (hi·10¹⁸ + lo)·10^-scale — the same
     * value path as Spark's Decimal.toDouble (java BigDecimal
     * doubleValue on the identical unscaled value and scale). */
@@ -99,6 +110,11 @@ object Sum128Eval {
       java.math.BigInteger.valueOf(hi).multiply(BaseBig)
         .add(java.math.BigInteger.valueOf(lo)), scale).doubleValue()
 }
+
+/** A [[Sum128]] input outside 0..[[Sum128Eval.MaxInput]]: summing it
+  * would silently wrap the (hi, lo) accumulator. */
+class Sum128InputOutOfRange(val value: Long) extends ArithmeticException(
+  s"sum128 input $value is outside 0..${Sum128Eval.MaxInput}")
 
 /** Column bridge (same shim rationale as [[VectorFunctions]]). */
 object SumFunctions {

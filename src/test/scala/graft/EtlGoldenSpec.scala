@@ -9,6 +9,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, Encoders, Row}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Golden end-to-end ETL test (SURVEY.md §5.2): the committed fixture
   * NDJSON (FIXTURES.md §2 coverage list) through [[Normalize]] must yield
@@ -57,6 +58,17 @@ class EtlGoldenSpec extends SparkSpecBase {
       (4L, 1L, 39600L, 54000L), // Delta Mon minute-less fallback
       (4L, 7L, 43200L, 0L), //     Delta Sun noon-midnight
       (5L, 5L, 28800L, 39600L))) // Golf Fri (Thu gibberish dropped)
+  }
+
+  test("open_hours keeps its written schema: names, types, nullability") {
+    // times come out of the parse's interval structs, whose fields are
+    // nullable like the (opens, closes) array pair they replaced
+    assert(tables("open_hours").schema == StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("business_id", LongType, nullable = false),
+      StructField("open_time", LongType),
+      StructField("close_time", LongType),
+      StructField("weekday_id", LongType, nullable = false))))
   }
 
   test("dims are distinct names with deterministic ids") {

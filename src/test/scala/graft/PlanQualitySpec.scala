@@ -273,19 +273,20 @@ class PlanQualitySpec extends SparkSpecBase {
 
   test("q_udtf_hours_explode keeps the parse above the exchange, run once") {
     // the inner-posexplode form lets InferFiltersFromGenerate add
-    // `size(opens) > 0`, which predicate pushdown drags — with the whole
-    // interpreted parse inlined — below the repartition exchange into the
+    // `size(parse_hours(..)) > 0`, which predicate pushdown drags — with
+    // the whole parse inlined — below the repartition exchange into the
     // single-split scan task (the round-3 19.5 s driver bench). The
     // outer-explode + pos-not-null form must plan with NO Filter carrying
-    // the parse regex, and the lifted parallelism must survive.
+    // the parse kernel, and the lifted parallelism must survive.
     val p = plan("q_udtf_hours_explode")
     val lines = p.linesIterator.toSeq
+    assert(p.contains("parse_hours"), "the parse kernel is not in the plan")
     // formatted mode: filter predicates print on "Condition :" lines and
-    // scan-level residuals on "DataFilters" — the parse regex on either
-    // means the inferred filter is back
+    // scan-level residuals on "DataFilters" — the kernel on either means
+    // the inferred filter is back
     val filterLines = lines.filter(l =>
       (l.contains("Condition") || l.contains("DataFilters")) &&
-        l.contains("regexp_extract_all"))
+        l.contains("parse_hours"))
     assert(filterLines.isEmpty,
       "the parse is re-run inside an inferred filter:\n" +
         filterLines.mkString("\n").take(500))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfns.{Sum128Eval, Sum128InputOutOfRange}
 import org.apache.spark.sql.graftfns.SumFunctions.sum128
 import org.apache.spark.sql.types._
 
@@ -99,5 +100,32 @@ class Sum128Spec extends SparkSpecBase {
       .orderBy("g").collect()
     assert(out(0).getDouble(1) == 0.12) // (5+7)/100, nulls skipped
     assert(out(1).isNullAt(1)) // all-null group reads null, like sum
+  }
+
+  test("sum128 is exact up to its input bound and names the error past it") {
+    val max = Sum128Eval.MaxInput
+    // 16 rows at the bound over 4 partitions: every update and merge
+    // carries into hi, none may wrap
+    val atBound = spark.range(0, 16, 1, 4)
+      .select(when(col("id") % 2 === 0, lit(max)).otherwise(lit(0L))
+        .as("v"))
+    val want = new java.math.BigDecimal(
+      java.math.BigInteger.valueOf(max).multiply(
+        java.math.BigInteger.valueOf(8)), 2).doubleValue()
+    val got = atBound.agg(sum128(col("v"), 2)).head.getDouble(0)
+    assert(bits(got) == bits(want), s"$got vs $want")
+    // one step past either end of the contract fails the query with the
+    // named error instead of summing a wrapped accumulator
+    Seq(max + 1, -1L, Long.MinValue).foreach { bad =>
+      val df = spark.range(0, 8, 1, 2)
+        .select(when(col("id") === 5, lit(bad)).otherwise(col("id"))
+          .as("v"))
+      val e = intercept[Exception](df.agg(sum128(col("v"), 0)).collect())
+      val named = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null)
+        .collectFirst { case r: Sum128InputOutOfRange => r }
+      assert(named.exists(_.value == bad),
+        s"input $bad: expected Sum128InputOutOfRange, got $e")
+    }
   }
 }
