@@ -1,10 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): times every registered query at
   * `SPARK_GRAFT_SF_DIR`, prints ONE compact JSON line as the FINAL stdout
-  * line, and writes the full-precision report to
-  * `/root/repo/target/bench.json`.
+  * line, and writes the full-precision report to `target/bench.json`
+  * under [[GraftSession.root]].
   *
   * Methodology: one untimed warm-up execution per query (JIT/codegen and
   * first-touch setup are one-time costs that amortize at scale), then
@@ -27,15 +27,9 @@ object Bench {
         .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCores
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
     // untimed warm-up: session/codegen/scheduler startup should not be
     // attributed to whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -44,87 +38,9 @@ object Bench {
     // not the one-off fixture write
     graft.queries.SourceQueries.prepareFixtures(spark, sfDir)
     graft.ops.Multimodal.mediaFixture(spark)
-    // per-query hygiene (the round-14 judged-number killer): many
-    // operators localCheckpoint()/persist() intermediate stages, and in
-    // a single 357-query JVM those blocks are only reclaimed when the
-    // ContextCleaner notices the RDD is garbage — which a 128 GiB heap
-    // may not GC for hundreds of queries. The leaked blocks squeeze the
-    // unified memory pool until mid-bench queries spill and thrash
-    // (r14: q_text_decon_ngram 1.9 s first sample, 45/31 s after; 1.2 s
-    // isolated). Dropping every persisted block + a periodic GC breath
-    // (to let ContextCleaner release accumulated broadcasts) between
-    // queries keeps sample N as clean as sample 1.
-    var sinceGc = 0
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      // the shared co-order contractions (graft.ops.CoOrderGraph) are
-      // the DOCUMENTED cross-query state of the graph family — one
-      // corpus-sized graph build per session instead of one per query
-      // (r16 verdict task #4). Unpersisting them here would not just
-      // lose the reuse: a localCheckpointed RDD whose blocks are
-      // dropped cannot be recomputed (lineage is truncated).
-      val keep = graft.ops.CoOrderGraph.protectedRddIds
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!keep.contains(id)) rdd.unpersist(blocking = false) }
-      // streaming leftovers (r19): every finished streaming run leaves
-      // its state-store providers (RocksDB ones: native memory + a
-      // background maintenance slot each) in the global registry until
-      // the 60 s maintenance tick notices the query is gone — in a
-      // session that runs hundreds of short streaming queries the
-      // registry grows into real native-memory and maintenance churn
-      // (q_src_stream_file read 6.6–12.9 s late in the full r19 run vs
-      // 1.4 s in a fresh session, with quiet host probes). No stream is
-      // active between bench queries, so dropping terminated handles
-      // and unloading all providers is pure cleanup.
-      spark.streams.resetTerminated()
-      org.apache.spark.sql.graftfns.StreamHygiene.unloadAllStateStores()
-      sinceGc += 1
-      if (sinceGc >= 25) { sinceGc = 0; System.gc() }
-    }
-    // Host-noise probe (round-16): a FIXED, SF-independent two-stage
-    // micro-job (1M-row range → modulo groupBy → count) timed around
-    // every query's samples. Its quiet cost is a known constant, so a
-    // probe reading far above it means the host was contended DURING
-    // that query's measurement window — the per-query, per-moment load
-    // signal that run-level loadavg cannot give (the r15 judged run
-    // breached budgets on queries whose own loadavg samples read a
-    // mild 2.5-2.7 while canary queries elsewhere in the run measured
-    // quiet-fast: host noise is temporally local). BenchBudgetSpec /
-    // BenchSlopeSpec divide each query's median by
-    // max(1, probeMedian/probeRef) before judging, making the gates
-    // load-robust without loosening them on quiet runs — a genuine
-    // plan regression leaves the probes at their quiet floor.
-    def probeOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(1L << 20).selectExpr("id % 997 AS k")
-        .groupBy("k").count().count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // CPU-work probe (round-18): the scheduler probe above is a
-    // 2-3-job micro-query whose cost is scheduler LATENCY — it is
-    // demonstrably blind to CPU-THROUGHPUT contention (the r17 judged
-    // run: q_text_decon_ngram's samples ran at loadavg 12-13 while its
-    // scheduler probes read a quiet 0.29-0.55 s → correction 1.0).
-    // This leg is fixed CPU work fanned across every core (268M
-    // codegen'd xxhash64 over a range, 32 partitions, bit_xor fold —
-    // no shuffle, no memory): external busy cores slow it roughly in
-    // proportion to the cores they steal, which is exactly the signal
-    // that slows a codegen'd CPU-bound kernel. Quiet floor is a
-    // committed constant (BenchGate.cpuProbeRef, ProbeCal-calibrated);
-    // readings land at the FIRST and LAST probe positions only (the
-    // sustained-contention signal needs a bracket, not per-sample
-    // granularity, and two ~0.17 s legs keep the added wall-clock per
-    // query negligible).
-    def cpuProbeOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 1L << 28, 1, 32)
-        .selectExpr("bit_xor(xxhash64(id)) AS h").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
     // warm the probe paths once so the first per-query reading is not
     // codegen-cold (which would overstate the first query's correction)
-    (1 to 3).foreach { _ => probeOnce(); cpuProbeOnce() }
+    (1 to 3).foreach { _ => probeOnce(spark); cpuProbeOnce(spark) }
     val resampledB = scala.collection.mutable.ArrayBuffer.empty[String]
     // dev convenience: SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run
     // for focused optimization loops (the driver never sets it → full
@@ -147,11 +63,8 @@ object Bench {
       // while writing nothing. Totals are NOT comparable to the
       // count()-era anchors (BASELINE.md marks the generation switch).
       def runOnce(): (Double, Double) =
-        try {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9, loadavg())
-        } catch {
+        try (noopSeconds(fn(spark, sfDir)), loadavg())
+        catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             (-1.0, loadavg())
@@ -176,17 +89,17 @@ object Bench {
           : (Seq[(Double, Double)], Seq[Double], Seq[Double]) = {
         val pb = scala.collection.mutable.ArrayBuffer.empty[Double]
         val cb = scala.collection.mutable.ArrayBuffer.empty[Double]
-        cb += cpuProbeOnce()
-        pb += probeOnce()
+        cb += cpuProbeOnce(spark)
+        pb += probeOnce(spark)
         val ss = Seq.fill(runs) {
-          val r = runOnce(); pb += probeOnce(); r
+          val r = runOnce(); pb += probeOnce(spark); r
         }
-        cb += cpuProbeOnce()
+        cb += cpuProbeOnce(spark)
         (ss, pb.toSeq, cb.toSeq)
       }
       val (first, firstProbes, firstCpu) =
         if (firstWarmFailed && runOnce()._1 < 0)
-          (Seq((-1.0, loadavg())), Seq(probeOnce()), Seq(cpuProbeOnce()))
+          (Seq((-1.0, loadavg())), Seq(probeOnce(spark)), Seq(cpuProbeOnce(spark)))
         else { runOnce(); sampleSet() }
       // auto-resample (r14 postmortem): a transient host/JVM spike can
       // turn one sample into a 20x outlier and drag the MEDIAN with it
@@ -222,7 +135,7 @@ object Bench {
         System.err.println(s"[bench] $name samples " +
           s"${best._1.map(_._1)} unstable; resampling (#${attempts + 1})")
         if (attempts == 0) resampledB += name
-        hygiene()
+        hygiene(spark)
         val next = sampleSet()
         // a set containing a failed run (time ≤ 0) reports spread 1.0
         // — never let it displace a noisy-but-successful set (the
@@ -237,7 +150,7 @@ object Bench {
       val median =
         if (times.exists(_ < 0)) -1.0
         else times.sorted.apply(times.size / 2)
-      hygiene()
+      hygiene(spark)
       name -> (median, samples, firstWarmFailed, probes, cpuProbes)
     }
     val retried = results.collect { case (k, (_, _, true, _, _)) => k }
@@ -277,7 +190,7 @@ object Bench {
       s""""sf":"$sfDir""""))
     // absolute path: a cwd-relative one would land outside the repo when
     // launched from elsewhere (same contract as SourceQueries.scratch)
-    val out = new java.io.File("/root/repo/target/bench.json")
+    val out = new java.io.File(s"${GraftSession.target}/bench.json")
     out.getParentFile.mkdirs()
     val w = new java.io.PrintWriter(out)
     try w.println(fullJson) finally w.close()
@@ -287,7 +200,7 @@ object Bench {
     val sfBase = sfDir.replaceAll("/+$", "")
       .substring(sfDir.replaceAll("/+$", "").lastIndexOf('/') + 1)
       .replaceAll("[^A-Za-z0-9.]", "_")
-    val perSf = new java.io.File(s"/root/repo/target/bench_$sfBase.json")
+    val perSf = new java.io.File(s"${GraftSession.target}/bench_$sfBase.json")
     val w2 = new java.io.PrintWriter(perSf)
     try w2.println(fullJson) finally w2.close()
     // cpu-stamped copy, and the one the stdout line points at (r20): the
@@ -299,7 +212,7 @@ object Bench {
     // empty two rounds running). A file stamped by core count survives
     // its sibling run; each run's stdout line points at its OWN artifact.
     val stamped =
-      new java.io.File(s"/root/repo/target/bench_cpus${cpus}_$sfBase.json")
+      new java.io.File(s"${GraftSession.target}/bench_cpus${cpus}_$sfBase.json")
     val w3 = new java.io.PrintWriter(stamped)
     try w3.println(fullJson) finally w3.close()
     // stop BEFORE the final println so no shutdown logging can land after
@@ -322,5 +235,92 @@ object Bench {
     // exactly the round-2 "parsed: null" failure
     println(Seq(Some(2), Some(1), None).map(compact)
       .find(_.length <= 1850).getOrElse(compact(None)))
+  }
+
+  // per-query hygiene (the round-14 judged-number killer): many
+  // operators localCheckpoint()/persist() intermediate stages, and in
+  // a single 357-query JVM those blocks are only reclaimed when the
+  // ContextCleaner notices the RDD is garbage — which a 128 GiB heap
+  // may not GC for hundreds of queries. The leaked blocks squeeze the
+  // unified memory pool until mid-bench queries spill and thrash
+  // (r14: q_text_decon_ngram 1.9 s first sample, 45/31 s after; 1.2 s
+  // isolated). Dropping every persisted block + a periodic GC breath
+  // (to let ContextCleaner release accumulated broadcasts) between
+  // queries keeps sample N as clean as sample 1.
+  private var sinceGc = 0
+  def hygiene(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    // the shared co-order contractions (graft.ops.CoOrderGraph) are
+    // the DOCUMENTED cross-query state of the graph family — one
+    // corpus-sized graph build per session instead of one per query
+    // (r16 verdict task #4). Unpersisting them here would not just
+    // lose the reuse: a localCheckpointed RDD whose blocks are
+    // dropped cannot be recomputed (lineage is truncated).
+    val keep = graft.ops.CoOrderGraph.protectedRddIds
+    spark.sparkContext.getPersistentRDDs
+      .foreach { case (id, rdd) =>
+        if (!keep.contains(id)) rdd.unpersist(blocking = false) }
+    // streaming leftovers (r19): every finished streaming run leaves
+    // its state-store providers (RocksDB ones: native memory + a
+    // background maintenance slot each) in the global registry until
+    // the 60 s maintenance tick notices the query is gone — in a
+    // session that runs hundreds of short streaming queries the
+    // registry grows into real native-memory and maintenance churn
+    // (q_src_stream_file read 6.6–12.9 s late in the full r19 run vs
+    // 1.4 s in a fresh session, with quiet host probes). No stream is
+    // active between bench queries, so dropping terminated handles
+    // and unloading all providers is pure cleanup.
+    spark.streams.resetTerminated()
+    org.apache.spark.sql.graftfns.StreamHygiene.unloadAllStateStores()
+    sinceGc += 1
+    if (sinceGc >= 25) { sinceGc = 0; System.gc() }
+  }
+  // Host-noise probe (round-16): a FIXED, SF-independent two-stage
+  // micro-job (1M-row range → modulo groupBy → count) timed around
+  // every query's samples. Its quiet cost is a known constant, so a
+  // probe reading far above it means the host was contended DURING
+  // that query's measurement window — the per-query, per-moment load
+  // signal that run-level loadavg cannot give (the r15 judged run
+  // breached budgets on queries whose own loadavg samples read a
+  // mild 2.5-2.7 while canary queries elsewhere in the run measured
+  // quiet-fast: host noise is temporally local). BenchBudgetSpec /
+  // BenchSlopeSpec divide each query's median by
+  // max(1, probeMedian/probeRef) before judging, making the gates
+  // load-robust without loosening them on quiet runs — a genuine
+  // plan regression leaves the probes at their quiet floor.
+  def probeOnce(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(1L << 20).selectExpr("id % 997 AS k")
+      .groupBy("k").count().count()
+    (System.nanoTime() - t0) / 1e9
+  }
+  // CPU-work probe (round-18): the scheduler probe above is a
+  // 2-3-job micro-query whose cost is scheduler LATENCY — it is
+  // demonstrably blind to CPU-THROUGHPUT contention (the r17 judged
+  // run: q_text_decon_ngram's samples ran at loadavg 12-13 while its
+  // scheduler probes read a quiet 0.29-0.55 s → correction 1.0).
+  // This leg is fixed CPU work fanned across every core (268M
+  // codegen'd xxhash64 over a range, 32 partitions, bit_xor fold —
+  // no shuffle, no memory): external busy cores slow it roughly in
+  // proportion to the cores they steal, which is exactly the signal
+  // that slows a codegen'd CPU-bound kernel. Quiet floor is a
+  // committed constant (BenchGate.cpuProbeRef, calibrated by `Dev probes`);
+  // readings land at the FIRST and LAST probe positions only (the
+  // sustained-contention signal needs a bracket, not per-sample
+  // granularity, and two ~0.17 s legs keep the added wall-clock per
+  // query negligible).
+  def cpuProbeOnce(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0, 1L << 28, 1, 32)
+      .selectExpr("bit_xor(xxhash64(id)) AS h").collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Seconds to run `df` into the noop sink, which materializes every
+    * output row (what a real consumer pays) while writing nothing. */
+  def noopSeconds(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
   }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.IntegerType
 /** Session extension wiring: exposes the engine's custom Catalyst
   * expressions to SQL users.
   *
-  * Register with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Register with a session builder's `.withExtensions(new
+  * GraftExtensions)` (as [[GraftSession]] does) or
   * `spark.sql.extensions=graft.GraftExtensions`; afterwards
   * `SELECT dot_product(a, b)` resolves like a built-in (parsed,
   * analyzed, codegen'd — no UDF registry indirection), and the whole

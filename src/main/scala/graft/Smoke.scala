@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke surface: run [[SparkEntry.entry]] (flagship query on sf0.001) and
   * print its row count — the driver's rows>0 check, runnable locally via
   * `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     try {
       val df = SparkEntry.entry(spark)
       val n = df.count()

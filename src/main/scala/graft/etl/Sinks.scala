@@ -118,9 +118,9 @@ object Sinks {
     * engine drops `derby.log`) into the repo's target dir BEFORE the
     * first connection boots the engine. Without this Derby writes
     * `derby.log` into the process CWD — the only files this build may
-    * create live under /root/repo (environment contract). */
+    * create live under [[graft.GraftSession.root]]. */
   private lazy val derbyHome: Unit = {
-    val home = "/root/repo/target/derby"
+    val home = s"${graft.GraftSession.target}/derby"
     new java.io.File(home).mkdirs()
     if (System.getProperty("derby.system.home") == null)
       System.setProperty("derby.system.home", home)

@@ -126,7 +126,7 @@ object Multimodal {
     * 256-value byte cycle and the 5-value length cycle = 1280) wrap:
     * ids 0–1119 each have exactly one byte-identical partner at id+1280,
     * so the dedup has real work. */
-  val fixturePath = "/root/repo/target/tmp/media_fixture_v1"
+  val fixturePath = s"${graft.GraftSession.target}/tmp/media_fixture_v1"
   val fixtureRows = 2400
 
   def mediaFixture(spark: SparkSession): String = {

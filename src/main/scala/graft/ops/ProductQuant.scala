@@ -101,7 +101,7 @@ object ProductQuant {
   }
 
   /** Mean squared reconstruction error of `codebooks` over the corpus —
-    * the Lloyd objective (spec gate + IvfBench reporting). */
+    * the Lloyd objective the spec gate checks. */
   def reconstructionMse(corpus: DataFrame, vecCol: String,
                         codebooks: Array[Array[Array[Double]]]): Double = {
     val dsub = codebooks(0)(0).length

@@ -512,8 +512,8 @@ object TextSim {
     * use, so late execution recomputes instead of throwing. The stamp
     * covers the plan's input files (path, length, mtime), so regenerating
     * the backing files in-session misses the cache instead of silently
-    * reusing stale centroids — same contract as ndjsonFixture's
-    * sourceStamp (SourceQueries). */
+    * reusing stale centroids — same contract as the fixture stamp
+    * of SourceQueries.stampedFixture. */
   private val ivfCacheMax = 8
   private val ivfCache = new java.util.LinkedHashMap[
       (String, Int, Int, Int, Int),

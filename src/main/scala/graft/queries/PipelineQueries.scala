@@ -139,26 +139,20 @@ object PipelineQueries {
   }
 
   /** Build the 11-table warehouse for `dir` ONCE per (scale, source
-    * content) and reuse it — same build-once contract and stamp key as
-    * [[SourceQueries.sourceStamp]]'s NDJSON fixture: the warehouse is a
+    * content, engine code) and reuse it
+    * ([[SourceQueries.stampedFixture]]): the warehouse is a
     * deterministic function of the (immutable) events table, so
-    * rebuilding it per invocation would only time sink throughput, and a
-    * regenerated source can never be read through a stale warehouse. */
+    * rebuilding it per invocation would only time sink throughput, and
+    * neither a regenerated source nor an edited `Normalize` can be read
+    * through a stale warehouse. */
   private def etlWarehouse(s: SparkSession, dir: String): String =
-    this.synchronized {
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val stamp = SourceQueries.sourceStamp(s"$dir/events.parquet")
-      val wh = s"${SourceQueries.scratch}/etl_wh_${key}_$stamp"
-      val done = new java.io.File(s"$wh/_DONE")
-      if (!done.exists()) {
-        // NOT underscore-prefixed: Hadoop's hidden-file filter would
-        // silently list the dir as empty on read-back (see Normalize.run)
-        val input = s"$wh/input.ndjson"
-        syntheticScraped(s, dir).write.mode("overwrite").json(input)
-        Normalize.run(s, input, wh)
-        done.createNewFile(): Unit
-      }
-      wh
+    SourceQueries.stampedFixture("etl_wh", dir, "events", "_DONE") { wh =>
+      // NOT underscore-prefixed: Hadoop's hidden-file filter would
+      // silently list the dir as empty on read-back (see Normalize.run)
+      val input = s"$wh/input.ndjson"
+      syntheticScraped(s, dir).write.mode("overwrite").json(input)
+      Normalize.run(s, input, wh)
+      new java.io.File(s"$wh/_DONE").createNewFile(): Unit
     }
 
   /** q_etl_normalize — the reference's core lifecycle END TO END
@@ -621,7 +615,8 @@ object PipelineQueries {
     * readout is a constant-width unpivot of those 1-row results.
     * NULL handling is explicit in every predicate (NULL violates a
     * not-null'd bound), so both engines count identically; counts are
-    * integers, the rate divides once. */
+    * integers, the rate divides once (`try_divide`: an empty table
+    * gives a NULL rate, DuckDB's x/0). */
   private val etlContract: Q = (s, dir) => {
     val o = Tables.load(s, dir, "orders")
     val l = Tables.load(s, dir, "lineitem")
@@ -656,7 +651,8 @@ object PipelineQueries {
       .unionAll(row(lAgg, "lineitem.discount_in_[0,0.08]", "v_disc"))
       .unionAll(row(tAgg, "lineitem.shipdate_gte_orderdate", "v_ship"))
       .withColumn("viol_rate",
-        round(col("n_violations").cast("double") / col("n_checked"), 4))
+        round(try_divide(col("n_violations").cast("double"),
+          col("n_checked")), 4))
       .orderBy("rule")
   }
 
@@ -1618,7 +1614,8 @@ object PipelineQueries {
         .crossJoin(orphans.agg(count(lit(1)).as("n_orphan")))
         .select(lit(name).as("relationship"), col("n_child"),
           col("n_orphan"),
-          round(col("n_orphan") / col("n_child"), 4).as("orphan_pct"))
+          round(try_divide(col("n_orphan"), col("n_child")), 4)
+            .as("orphan_pct"))
     }
     val laggedSupplier = Tables.load(s, dir, "supplier")
       .filter(col("s_suppkey") % 10 =!= 0)

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
 object SourceQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Scratch dir for sources that need a materialized intermediate file.
-    * Must stay inside /root/repo (environment contract). */
-  private[graft] val scratch = "/root/repo/target/tmp"
+  /** Scratch dir for sources that need a materialized intermediate file,
+    * under [[graft.GraftSession.root]]. */
+  private[graft] val scratch = s"${graft.GraftSession.target}/tmp"
 
   /** Per-thread previous scratch output dir per sink query, deleted on
     * the thread's next invocation (same rationale as [[lastStreamSink]]:
@@ -85,26 +85,34 @@ object SourceQueries {
     d
   }
 
-  /** Reader-semantics version, folded into every fixture stamp. Bump
-    * whenever [[Tables.load]]'s interpretation of a source column
-    * changes: the r9→r10 TIMESTAMP(NANOS)→(MICROS) reader fix left
-    * content-stamped fixtures on disk that were WRITTEN by the old
-    * (collapsing) reader against the new data — stamp matched, values
-    * wrong. v2 = native-µs events reader. */
-  // v3: ndjson fixture layout changed to 16 files (see ndjsonFixture) —
-  // the version bump invalidates any single-file fixture surviving in
-  // target/tmp from an earlier JVM
-  private val readerVersion = "v3"
-
-  /** Fingerprint of the source file(s) backing a fixture: CRC32 over
-    * (relative path, length, mtime) of every file, sorted, prefixed with
-    * [[readerVersion]]. Folded into the fixture directory name so a
-    * REGENERATED source (same path, new content) — or a reader-semantics
-    * change — can never be read through a stale fixture that survived in
-    * target/tmp from an earlier JVM — that failure mode would look like
-    * an engine correctness bug (fixture rows vs fresh-parquet oracle). */
-  private[graft] def sourceStamp(src: String): String = {
+  /** Content CRC of the engine's class files — the code source of
+    * [[graft.etl.Normalize]], a classes directory or a jar — computed
+    * once per JVM and folded into every fixture stamp: a fixture or
+    * warehouse written by other code (an edited `Normalize`, a changed
+    * reader) is rebuilt, never read back. */
+  private[graft] lazy val codeStamp: String = {
     val crc = new java.util.zip.CRC32
+    def walk(f: java.io.File, rel: String): Unit =
+      if (f.isDirectory) f.listFiles().sortBy(_.getName)
+        .foreach(c => walk(c, s"$rel/${c.getName}"))
+      else {
+        crc.update(rel.getBytes("UTF-8"))
+        crc.update(java.nio.file.Files.readAllBytes(f.toPath))
+      }
+    walk(new java.io.File(graft.etl.Normalize.getClass.getProtectionDomain
+      .getCodeSource.getLocation.toURI), "")
+    java.lang.Long.toHexString(crc.getValue)
+  }
+
+  /** Fingerprint of a fixture's inputs: CRC32 over `code` and the
+    * (relative path, length, mtime) of every file under `src`, sorted.
+    * A REGENERATED source (same path, new content) can thus never be
+    * read through a fixture that survived in target/tmp from an
+    * earlier JVM — that failure mode would look like an engine
+    * correctness bug (fixture rows vs fresh-parquet oracle). */
+  private def fixtureStamp(src: String, code: String): String = {
+    val crc = new java.util.zip.CRC32
+    crc.update(code.getBytes("UTF-8"))
     def walk(f: java.io.File, rel: String): Seq[String] =
       if (f.isDirectory)
         f.listFiles().sortBy(_.getName).toSeq
@@ -112,27 +120,46 @@ object SourceQueries {
       else Seq(s"$rel:${f.length}:${f.lastModified}")
     walk(new java.io.File(src), "").foreach(l =>
       crc.update(l.getBytes("UTF-8")))
-    s"${readerVersion}_${java.lang.Long.toHexString(crc.getValue)}"
+    java.lang.Long.toHexString(crc.getValue)
   }
 
-  /** Materialize a file-format fixture of the events table once and
-    * reuse it: a fixture is a deterministic function of the (immutable)
-    * source table, so re-writing it per query invocation would only
-    * pollute the timing of the operator under test with sink throughput.
-    * Keyed by SF dir AND a content stamp of the source parquet
-    * ([[sourceStamp]]), so neither different scales nor regenerated data
-    * ever share a fixture; one shared protocol so the stamp/caching/
-    * sweeper-name contract (see [[sinkDirNameRe]]) lives in one place. */
+  /** Build-once fixture `scratch/<prefix>_<key>_<stamp>` derived from
+    * table `table` of SF dir `dir` (key = the dir, stamp =
+    * [[fixtureStamp]] of the table and `code`): a fixture is a
+    * deterministic function of the (immutable) source table, so
+    * re-writing it per query invocation would only pollute the timing
+    * of the operator under test with sink throughput. `build(path)`
+    * runs only while `path/<marker>` is missing, and first deletes this
+    * prefix's and key's directories under other stamps, so scratch
+    * does not grow with every compile. The one protocol for every
+    * persistent fixture, so the stamp/caching/sweeper-name contract
+    * (see [[sinkDirNameRe]]) lives in one place. */
+  private[graft] def stampedFixture(prefix: String, dir: String,
+      table: String, marker: String = "_SUCCESS",
+      code: => String = codeStamp)(build: String => Unit): String =
+    synchronized {
+      val head = s"${prefix}_${dir.replaceAll("[^A-Za-z0-9.]", "_")}_"
+      val name = head + fixtureStamp(s"$dir/$table.parquet", code)
+      val path = s"$scratch/$name"
+      if (!new java.io.File(s"$path/$marker").exists()) {
+        Option(new java.io.File(scratch).listFiles())
+          .getOrElse(Array.empty[java.io.File])
+          // the optional `vN_` form is the retired reader-versioned
+          // stamp, swept the same way
+          .filter(f => f.getName.startsWith(head) && f.getName != name &&
+            f.getName.drop(head.length).matches("(v[0-9]+_)?[0-9a-f]+"))
+          .foreach(rmTree)
+        build(path)
+      }
+      path
+    }
+
+  /** Events-table fixture of columns `cols`, written by `write`. */
   private def eventsFixture(s: SparkSession, dir: String, prefix: String,
                             cols: Seq[String])(
-      write: (DataFrame, String) => Unit): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val stamp = sourceStamp(s"$dir/events.parquet")
-    val path = s"$scratch/${prefix}_${key}_$stamp"
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
-      write(Tables.load(s, dir, "events").select(cols.map(col): _*), path)
-    path
-  }
+      write: (DataFrame, String) => Unit): String =
+    stampedFixture(prefix, dir, "events")(path =>
+      write(Tables.load(s, dir, "events").select(cols.map(col): _*), path))
 
   /** NDJSON fixture (scraper-log shape, nested props included).
     * Written as 16 files, not the events table's single split: a real
@@ -181,12 +208,8 @@ object SourceQueries {
     * at fixture-creation time only (64 tiny files, content-stamped like
     * every other fixture); the OPERATOR under test is the distributed
     * `binaryFile` scan. */
-  private def binFixture(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val stamp = sourceStamp(s"$dir/documents.parquet")
-    val path = s"$scratch/bin_${key}_$stamp"
-    val done = new java.io.File(s"$path/_SUCCESS")
-    if (!done.exists()) {
+  private def binFixture(s: SparkSession, dir: String): String =
+    stampedFixture("bin", dir, "documents") { path =>
       new java.io.File(path).mkdirs()
       Tables.load(s, dir, "documents").filter(col("doc_id") < 64)
         .select(col("doc_id").cast("long"), col("text")).collect()
@@ -196,10 +219,8 @@ object SourceQueries {
             r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           : Unit
         }
-      done.createNewFile(): Unit
+      new java.io.File(s"$path/_SUCCESS").createNewFile(): Unit
     }
-    path
-  }
 
   /** Pre-build fixtures outside any timed region (Bench calls this before
     * the timing loop). */
@@ -555,18 +576,13 @@ object SourceQueries {
     * injection (every " a " becomes "\na " — length-preserving), so
     * the written CSV contains QUOTED MULTILINE fields. Standard
     * doubled-quote escaping on write and read. */
-  private def csvMultilineFixture(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val stamp = sourceStamp(s"$dir/documents.parquet")
-    val path = s"$scratch/csvml_${key}_$stamp"
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
+  private def csvMultilineFixture(s: SparkSession, dir: String): String =
+    stampedFixture("csvml", dir, "documents")(path =>
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           expr("replace(text, ' a ', chr(10) || 'a ')").as("text2"))
         .write.mode("overwrite").option("header", "true")
-        .option("escape", "\"").csv(path)
-    path
-  }
+        .option("escape", "\"").csv(path))
 
   /** q_src_csv_multiline — CSV with embedded newlines in quoted
     * fields, read in multiLine mode ([[csvMultilineFixture]]): the

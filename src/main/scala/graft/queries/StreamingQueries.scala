@@ -344,11 +344,8 @@ object StreamingQueries {
     * once. */
   private val foreachbatch: Q = (s, dir) => {
     import s.implicits._
-    val stamp = SourceQueries.sourceStamp(s"$dir/events.parquet")
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val target = s"${SourceQueries.scratch}/fb_${key}_$stamp"
-    val done = new java.io.File(s"$target/_batches/3")
-    if (!done.exists()) {
+    val target = SourceQueries.stampedFixture("fb", dir, "events",
+        "_batches/3") { target =>
       val ev = Tables.load(s, dir, "events")
         .filter(col("user_id").isNotNull && col("value").isNotNull)
         .select(col("event_id"), col("user_id"), col("event_type"),

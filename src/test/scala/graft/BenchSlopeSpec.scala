@@ -72,7 +72,8 @@ class BenchSlopeSpec extends AnyFunSuite {
     // target/slope_sf1.json. One more decade of evidence on exactly
     // the rows where hidden superlinearity would hurt most.
     val f = new java.io.File("/root/repo/target/slope_sf1.json")
-    assume(f.exists(), "no target/slope_sf1.json — run graft.SlopeSf1")
+    assume(f.exists(),
+      "no target/slope_sf1.json — run graft.Dev slope /root/testdata/sf0.1")
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
     def leg(k: String): Map[String, Double] = {
       val node = root.path(k)

@@ -508,6 +508,28 @@ class PipelinePatternSpec extends SparkSpecBase {
       "z" -> ((2L, 2L, 2.0, 2.0, true))), s"got $got")
   }
 
+  test("q_etl_contract / q_etl_ri: empty tables yield NULL rates (never DIVIDE_BY_ZERO)") {
+    val dir = nullFixtureDir("empty_audit")
+    // schema-only copies of the sf0.001 tables: every rule checks 0
+    // rows, so each rate is 0/0. Under ANSI a plain `/` would abort;
+    // try_divide yields NULL, as DuckDB's x/0 does on the same files.
+    Seq("orders", "lineitem", "part", "supplier", "customer").foreach { t =>
+      spark.read.parquet(s"$sf0001/$t.parquet").limit(0)
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    def rates(q: String) = SparkEntry.queries(q)(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.isNullAt(3)))
+      .toSeq
+    assert(rates("q_etl_contract") == Seq(
+      "lineitem.discount_in_[0,0.08]", "lineitem.quantity_in_[1,45]",
+      "lineitem.shipdate_gte_orderdate", "orders.orderdate_in_1992_1998",
+      "orders.status_in_OFP", "orders.totalprice_in_(0,400000]")
+      .map(r => (r, 0L, 0L, true)))
+    assert(rates("q_etl_ri") == Seq("lineitem->part",
+      "lineitem->supplier_lagged", "orders->customer")
+      .map(r => (r, 0L, 0L, true)))
+  }
+
   test("q_evt_anomaly: zero-variance groups emit no outliers (never throw)") {
     val dir = nullFixtureDir("anomaly_const")
     // 'const' has σ = 0: a plain `/` under ANSI would kill the scan on

@@ -117,6 +117,32 @@ class SinksAndApproxSpec extends SparkSpecBase {
     } finally SourceQueries.sinkDirMaxAgeMs = saved
   }
 
+  test("stamped fixtures: a new code stamp rebuilds and sweeps the old dir") {
+    import graft.queries.SourceQueries
+    val src = Files.createTempDirectory("graft_stamp")
+    Files.writeString(src.resolve("t.parquet"), "x")
+    // a second source whose key extends the first one's: never swept
+    val other = Files.createDirectories(
+      java.nio.file.Paths.get(s"${src}_b"))
+    Files.writeString(other.resolve("t.parquet"), "y")
+    var builds = 0
+    def fixture(dir: java.nio.file.Path, code: String): java.io.File =
+      new java.io.File(SourceQueries.stampedFixture("stamptest",
+          dir.toString, "t", code = code) { p =>
+        builds += 1
+        new java.io.File(p).mkdirs()
+        new java.io.File(s"$p/_SUCCESS").createNewFile(): Unit
+      })
+    val keep = fixture(other, "a")
+    val a = fixture(src, "a")
+    assert(fixture(src, "a") == a && builds == 2, "built once per stamp")
+    val b = fixture(src, "b")
+    assert(b != a && builds == 3)
+    assert(b.isDirectory && !a.exists(), "older stamp not swept")
+    assert(keep.isDirectory, "swept another source's fixture")
+    Seq(b, keep).foreach { d => d.listFiles().foreach(_.delete()); d.delete() }
+  }
+
   test("merged daily HLL sketches track exact distinct users (q_agg_sketch)") {
     // the property that matters at scale: union-of-daily-sketches must
     // estimate the same cardinality as one sketch over the whole span
