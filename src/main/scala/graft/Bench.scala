@@ -250,13 +250,13 @@ object Bench {
   private var sinceGc = 0
   def hygiene(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    // the shared co-order contractions (graft.ops.CoOrderGraph) are
-    // the DOCUMENTED cross-query state of the graph family — one
-    // corpus-sized graph build per session instead of one per query
-    // (r16 verdict task #4). Unpersisting them here would not just
-    // lose the reuse: a localCheckpointed RDD whose blocks are
-    // dropped cannot be recomputed (lineage is truncated).
-    val keep = graft.ops.CoOrderGraph.protectedRddIds
+    // the session cache's contractions (graft.ops.SessionCache) are
+    // the DOCUMENTED cross-query state — one corpus-sized build per
+    // session instead of one per query (r16 verdict task #4).
+    // Unpersisting them here would not just lose the reuse: a
+    // localCheckpointed RDD whose blocks are dropped cannot be
+    // recomputed (lineage is truncated).
+    val keep = graft.ops.SessionCache.protectedRddIds(spark)
     spark.sparkContext.getPersistentRDDs
       .foreach { case (id, rdd) =>
         if (!keep.contains(id)) rdd.unpersist(blocking = false) }

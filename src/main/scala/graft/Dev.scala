@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{CoOrderGraph, ProductQuant, TextSim}
+import graft.ops.{ProductQuant, SessionCache, TextSim}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
@@ -88,14 +88,13 @@ object Dev {
     }
 
   /** COLD-session price: each query in a FRESH SparkSession (block
-    * manager, broadcasts, RDD caches and the shared CoOrderGraph
-    * contraction all start empty; only JVM-level JIT/codegen caches
-    * persist, which the long bench session also keeps). This is what
+    * manager, broadcasts, RDD caches and the [[SessionCache]] all
+    * start empty; only JVM-level JIT/codegen caches persist, which
+    * the long bench session also keeps). This is what
     * the in-bench warm median undercounts (the r16 q_graph_powerlaw
     * breach: 2.79 s warm anchor, 4.5–5.1 s cold). */
   private def cold(dir: String, names: Seq[String]): Unit =
     queryNames(names).foreach { name =>
-      CoOrderGraph.invalidate()
       val spark = GraftSession()
       try println(f"COLD $name ${warmSeconds(spark, dir, name)}%.3f")
       catch { case e: Exception =>
@@ -258,7 +257,7 @@ object Dev {
   private def slope(spark: SparkSession, src: String): Unit = {
     val out = s"${GraftSession.target}/sf1synth"
     synthesizeSf1(spark, src, out)
-    def hygiene(): Unit = { CoOrderGraph.invalidate(); Bench.hygiene(spark) }
+    def hygiene(): Unit = { SessionCache.clear(); Bench.hygiene(spark) }
     def leg(dir: String): Seq[(String, Double)] =
       top25.flatMap { q =>
         // a row that cannot run on the synthesized corpus is dropped

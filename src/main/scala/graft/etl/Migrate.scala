@@ -61,10 +61,6 @@ object Migrate {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     java.nio.file.Files.move(java.nio.file.Paths.get(backupDir), p,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(doomed.toFile)
+    Sinks.rmTree(doomed.toFile)
   }
 }

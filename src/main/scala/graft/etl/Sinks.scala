@@ -20,6 +20,12 @@ import org.apache.spark.sql.DataFrame
   */
 object Sinks {
 
+  /** Delete `f` and, for a directory, everything under it. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete(): Unit
+  }
+
   /** Append-only NDJSON sink (scraper-style event log). */
   def appendNdjson(df: DataFrame, path: String): Unit =
     df.write.mode("append").json(path)
@@ -235,13 +241,7 @@ object Sinks {
     val keepNames = (live +: versions.map(_.getName)
       .filterNot(_ == live).take(keep - 1).toSeq).toSet
     val before = versions.length.toLong
-    versions.filterNot(f => keepNames(f.getName)).foreach { f =>
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-        x.delete(); ()
-      }
-      rm(f)
-    }
+    versions.filterNot(f => keepNames(f.getName)).foreach(rmTree)
     // count what actually survives on disk — keepNames.size over-counts
     // when the pointer target is missing or not a v\d+ name
     val after = Option(new java.io.File(targetDir).listFiles())

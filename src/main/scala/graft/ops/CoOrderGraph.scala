@@ -25,14 +25,13 @@ import org.apache.spark.sql.functions._
   *    top ask). The sorted array makes (x before y) ≡ (x < y), so
   *    the edge SET is bit-identical to the join form and every
   *    downstream oracle is unchanged.
-  * 2. **One contraction per (context, dir, variant), not one per
-  *    query.** The edge list is `localCheckpoint`ed and memoised, so
-  *    a bench session (or a Verify sweep) pays each corpus-sized
-  *    graph build once; every later op in the family reads the
-  *    checkpointed blocks. `graft.Bench`'s inter-query hygiene
-  *    excludes [[protectedRddIds]] from its unpersist sweep for
-  *    exactly this reason — the cache is the documented, priced
-  *    cross-query state (r16 verdict task #4), not an accident.
+  * 2. **One contraction per (context, dir, variant, input files),
+  *    not one per query.** The edge list is `localCheckpoint`ed in
+  *    the [[SessionCache]], so a bench session (or a Verify sweep)
+  *    pays each corpus-sized graph build once; every later op in the
+  *    family reads the checkpointed blocks, and `graft.Bench`'s
+  *    inter-query hygiene leaves them alone. Rewriting `lineitem` or
+  *    `part` in the session rebuilds the contraction.
   *
   * At 100 TB the same shape holds: the contraction is one shuffle of
   * the fact table into per-order sets (combiner-friendly), the pair
@@ -41,19 +40,10 @@ import org.apache.spark.sql.functions._
   * paid, on top of its extra fact-table shuffle.
   */
 object CoOrderGraph {
-  /** Cache machinery lives in [[ContractionCache]] (r20: the MinHash
-    * pair set shares it); these forwarders keep the bench/tool call
-    * sites stable. */
-  def protectedRddIds: java.util.Set[Int] =
-    ContractionCache.protectedRddIds
-
-  /** Drop every cached contraction (tests that restart contexts). */
-  def invalidate(): Unit = ContractionCache.invalidate()
-
   /** Full co-order part graph: parts are adjacent when some order
     * contains both; u < v, distinct. */
   def fullEdges(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "full") {
+    SessionCache.frame(s, s"graph_full|$dir") {
       pairEdges(Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")))
     }
@@ -62,7 +52,7 @@ object CoOrderGraph {
     * community family demos on (node population 1/8th of parts at
     * every SF — the documented demo contract of those ops). */
   def mod8Edges(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "mod8") {
+    SessionCache.frame(s, s"graph_mod8|$dir") {
       pairEdges(Tables.load(s, dir, "lineitem")
         .filter(col("l_partkey") % 8 === 0)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")))
@@ -73,7 +63,7 @@ object CoOrderGraph {
     * oracle) holds the node population at ~500 parts at every SF —
     * see the triangle-census modulus contract. */
   def demoEdges(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "demo") {
+    SessionCache.frame(s, s"graph_demo|$dir") {
       val m = Tables.load(s, dir, "part").agg(
         expr("4 * greatest(1L, (max(p_partkey) + 1L) DIV 2000)").as("m"))
       pairEdges(Tables.load(s, dir, "lineitem").crossJoin(broadcast(m))
@@ -90,7 +80,7 @@ object CoOrderGraph {
     * (`a.join(b, o=o && brand=brand && p<p)`) paid a second corpus
     * shuffle plus a shuffled join for the identical edge set. */
   def brandEdges(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "brand") {
+    SessionCache.frame(s, s"graph_brand|$dir") {
       pairEdgesBy(Tables.load(s, dir, "lineitem")
         .join(broadcast(Tables.load(s, dir, "part")
           .select(col("p_partkey"), col("p_brand"))),
@@ -123,8 +113,4 @@ object CoOrderGraph {
 
   private def pairEdges(items: DataFrame): DataFrame =
     pairEdgesBy(items, Seq("o"), Nil)
-
-  private def cached(s: SparkSession, dir: String, variant: String)
-      (build: => DataFrame): DataFrame =
-    ContractionCache.cached(s, dir, s"graph_$variant")(build)
 }

@@ -498,51 +498,11 @@ object TextSim {
       .select("id_a", "id_b", "sim")
   }
 
-  /** Session-scoped IVF centroid cache, keyed by (application, corpus
-    * plan, source-file stamp, requested cell count, training iterations):
-    * the centroids are a deterministic-per-session function of the
-    * corpus, so re-collecting and re-broadcasting them per invocation
-    * (the round-2 behavior) only re-ran the same tiny job. The value
-    * carries the corpus row count (for auto-sizing) and the broadcast
-    * handle. LRU-bounded: evicted entries `unpersist()` their broadcast
-    * so long sessions don't accumulate executor-pinned blocks —
-    * unpersist, NOT destroy, because a lazy DataFrame returned by
-    * annCosineIvf may still reference the evicted broadcast; unpersist
-    * drops the executor copies but re-broadcasts from the driver on next
-    * use, so late execution recomputes instead of throwing. The stamp
-    * covers the plan's input files (path, length, mtime), so regenerating
-    * the backing files in-session misses the cache instead of silently
-    * reusing stale centroids — same contract as the fixture stamp
-    * of SourceQueries.stampedFixture. */
-  private val ivfCacheMax = 8
-  private val ivfCache = new java.util.LinkedHashMap[
-      (String, Int, Int, Int, Int),
-      (Long, org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])](
-      16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, Int, Int, Int, Int),
-          (Long, org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])])
-        : Boolean =
-      size > ivfCacheMax &&
-        { e.getValue._2.unpersist(blocking = false); true }
-  }
-
   /** TRUE round-up to the next power of two: `highestOneBit(x-1)*2` is
     * the identity on exact powers — `highestOneBit(x)*2` doubled them
     * (4·√N = 256 must yield 256, not 512). */
   private[graft] def roundUpPow2(x: Int): Int =
     if (x <= 1) 1 else Integer.highestOneBit(x - 1) * 2
-
-  /** Identity stamp of a plan's backing files: (path, length, mtime) per
-    * input file, order-independent. Non-`file:` URIs degrade to the path
-    * alone (still catches added/removed files). */
-  private def sourceStamp(df: DataFrame): Int =
-    scala.util.hashing.MurmurHash3.arrayHash(
-      df.inputFiles.sorted.map { p =>
-        val f = try new java.io.File(new java.net.URI(p))
-        catch { case _: Exception => null }
-        if (f != null && f.exists) s"$p:${f.length}:${f.lastModified}" else p
-      })
 
   private def l2normalize(v: Array[Double]): Array[Double] = {
     val norm = math.sqrt(v.map(x => x * x).sum)
@@ -697,34 +657,29 @@ object TextSim {
 
   /** Centroids for an IVF index over `corpus`: deterministic corpus
     * sample, optionally refined by `trainIters` rounds of
-    * [[trainIvfCentroids]]; shipped as ONE torrent broadcast.
-    * `nCellsReq = 0` auto-sizes to the FAISS rule of thumb ≈ 4·√N,
-    * rounded up to a power of two and clamped to [16, 1024] ∩ [1, N] —
-    * sf0.1's 2000-vector bench corpus gets 256 cells. */
-  private def ivfIndex(corpus: DataFrame, nCellsReq: Int,
-                       trainIters: Int = 0): (Long,
-      org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]) = {
-    val sc = corpus.sparkSession.sparkContext
-    val key = (sc.applicationId,
-      corpus.queryExecution.analyzed.semanticHash(), sourceStamp(corpus),
-      nCellsReq, trainIters)
-    ivfCache.synchronized {
-      val hit = ivfCache.get(key)
-      if (hit != null) hit
-      else {
-        val n = corpus.count()
-        val auto = roundUpPow2((4 * math.sqrt(n.toDouble)).toInt)
-        val nCells = math.min(n,
-          if (nCellsReq > 0) nCellsReq.toLong
-          else math.min(1024, math.max(16, auto)).toLong).toInt
-        val init = sampleCentroids(corpus, nCells)
-        val cents =
-          if (trainIters > 0) trainIvfCentroids(corpus, init, trainIters)
-          else init
-        val built = (n, sc.broadcast(cents))
-        ivfCache.put(key, built)
-        built
-      }
+    * [[trainIvfCentroids]]; shipped as ONE torrent broadcast, built
+    * once per (corpus plan, input files, `nCellsReq`, `trainIters`) in
+    * the [[SessionCache]]. `nCellsReq = 0` auto-sizes to the FAISS rule
+    * of thumb ≈ 4·√N, rounded up to a power of two and clamped to
+    * [16, 1024] ∩ [1, N] — sf0.1's 2000-vector bench corpus gets 256
+    * cells. */
+  private[graft] def ivfIndex(corpus: DataFrame, nCellsReq: Int,
+      trainIters: Int = 0)
+      : org.apache.spark.broadcast.Broadcast[Array[Array[Double]]] = {
+    val spark = corpus.sparkSession
+    val name = s"ivf|${corpus.queryExecution.analyzed.semanticHash()}|" +
+      s"$nCellsReq|$trainIters"
+    SessionCache.value(spark, name, corpus) {
+      val n = corpus.count()
+      val auto = roundUpPow2((4 * math.sqrt(n.toDouble)).toInt)
+      val nCells = math.min(n,
+        if (nCellsReq > 0) nCellsReq.toLong
+        else math.min(1024, math.max(16, auto)).toLong).toInt
+      val init = sampleCentroids(corpus, nCells)
+      val cents =
+        if (trainIters > 0) trainIvfCentroids(corpus, init, trainIters)
+        else init
+      spark.sparkContext.broadcast(cents)
     }
   }
 
@@ -762,7 +717,7 @@ object TextSim {
       s"need nCells ($nCells), nProbe ($nProbe), shards ($shards), " +
         s"trainIters ($trainIters) >= 0")
     val fns = org.apache.spark.sql.graftfns.VectorFunctions
-    val (_, bc) = ivfIndex(corpus, nCells, trainIters)
+    val bc = ivfIndex(corpus, nCells, trainIters)
     val cells = bc.value.length
     // an empty corpus has no cells and no neighbours: return the empty
     // result directly instead of tripping an opaque nProbe<=nCells guard
@@ -854,7 +809,7 @@ object TextSim {
       s"need k ($k), shortlist ($shortlist) > 0; " +
         s"nCells ($nCells), nProbe ($nProbe) >= 0")
     val fns = org.apache.spark.sql.graftfns.VectorFunctions
-    val (_, bc) = ivfIndex(corpus, nCells)
+    val bc = ivfIndex(corpus, nCells)
     val cells = bc.value.length
     if (cells == 0)
       return corpus.select(col("vec_id").as("neighbor_id"),

@@ -2861,23 +2861,12 @@ object AggQueries {
       .orderBy(col("event_type").asc_nulls_first)
   }
 
-  /** q_agg_fdr_bh — Benjamini–Hochberg multiple-testing control over
-    * the per-type battery "does this event type's mean value differ
-    * from the rest" (Welch z per type off one contraction): running k
-    * marginal tests at α each inflates false discoveries k-fold — BH
-    * is the step-up that caps the EXPECTED false-discovery RATE at q,
-    * the correction every per-segment metric scan should apply before
-    * paging anyone (q_agg_ab_ztest tests ONE split; this disciplines
-    * k of them). The p-values are the Chernoff tail bound
-    * exp(−z²/2) ≥ 2(1−Φ(|z|)) — conservative by construction (a BH
-    * pass on bounds only under-rejects), engine-exact (one libm exp,
-    * 8-dp-rounded — the logloss rule), and pluggable: the OPERATOR is
-    * the step-up machinery (rank by p, threshold i·q/m, reject up to
-    * the largest qualifying rank). Exactness: decimal sums, one
-    * shared closed form per z; ranks sort the 8-dp p with the type
-    * name as pinned tiebreak; the step-up maximum broadcasts back —
-    * no unpartitioned window. */
-  private val aggFdrBh: Q = (s, dir) => {
+  /** The scored grid q_agg_fdr_bh and q_agg_holm share: per event
+    * type (n, s1, s2) against the rest of the corpus (tn, ts1, ts2, m
+    * types), the Welch z (4 dp), its 8-dp Chernoff p-bound
+    * exp(−z²/2) ∧ 1, and the p-bound rank (event type as pinned
+    * tiebreak). */
+  private def welchGrid(s: SparkSession, dir: String): DataFrame = {
     val g = Tables.load(s, dir, "events")
       .filter(col("value").isNotNull)
       .groupBy("event_type")
@@ -2895,7 +2884,7 @@ object AggQueries {
     val vrr = ((col("ts2") - col("s2")).cast("double") - rn * mr * mr) /
       (rn - 1)
     val z = (mt - mr) / sqrt(vt / nd + vrr / rn)
-    val scored = g.crossJoin(broadcast(tot))
+    g.crossJoin(broadcast(tot))
       .withColumn("z", round(z, 4))
       .withColumn("p_bound",
         round(least(exp(lit(-1.0) * col("z") * col("z") / 2.0),
@@ -2903,6 +2892,26 @@ object AggQueries {
       .withColumn("rnk", row_number().over(
         Window.partitionBy("m")
           .orderBy(col("p_bound"), col("event_type").asc_nulls_first)))
+  }
+
+  /** q_agg_fdr_bh — Benjamini–Hochberg multiple-testing control over
+    * the per-type battery "does this event type's mean value differ
+    * from the rest" (Welch z per type off one contraction): running k
+    * marginal tests at α each inflates false discoveries k-fold — BH
+    * is the step-up that caps the EXPECTED false-discovery RATE at q,
+    * the correction every per-segment metric scan should apply before
+    * paging anyone (q_agg_ab_ztest tests ONE split; this disciplines
+    * k of them). The p-values are the Chernoff tail bound
+    * exp(−z²/2) ≥ 2(1−Φ(|z|)) — conservative by construction (a BH
+    * pass on bounds only under-rejects), engine-exact (one libm exp,
+    * 8-dp-rounded — the logloss rule), and pluggable: the OPERATOR is
+    * the step-up machinery (rank by p, threshold i·q/m, reject up to
+    * the largest qualifying rank). Exactness: decimal sums, one
+    * shared closed form per z; ranks sort the 8-dp p with the type
+    * name as pinned tiebreak; the step-up maximum broadcasts back —
+    * no unpartitioned window. */
+  private val aggFdrBh: Q = (s, dir) => {
+    val scored = welchGrid(s, dir)
       .withColumn("bh_thr",
         round(col("rnk").cast("double") * 0.10 / col("m"), 8))
       .localCheckpoint()
@@ -3443,31 +3452,7 @@ object AggQueries {
     * integer logic; thresholds round to 8 dp. Scale: one corpus
     * contraction; everything after is the m-row grid. */
   private val aggHolm: Q = (s, dir) => {
-    val g = Tables.load(s, dir, "events")
-      .filter(col("value").isNotNull)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).as("s1"),
-        sum((col("value").cast("decimal(18,2)") *
-          col("value").cast("decimal(18,2)"))).as("s2"))
-    val tot = g.agg(sum("n").as("tn"), sum("s1").as("ts1"),
-      sum("s2").as("ts2"), count(lit(1)).as("m"))
-    val nd = col("n").cast("double")
-    val rn = (col("tn") - col("n")).cast("double")
-    val mt = col("s1").cast("double") / nd
-    val mr = (col("ts1") - col("s1")).cast("double") / rn
-    val vt = (col("s2").cast("double") - nd * mt * mt) / (nd - 1)
-    val vrr = ((col("ts2") - col("s2")).cast("double") - rn * mr * mr) /
-      (rn - 1)
-    val z = (mt - mr) / sqrt(vt / nd + vrr / rn)
-    val scored = g.crossJoin(broadcast(tot))
-      .withColumn("z", round(z, 4))
-      .withColumn("p_bound",
-        round(least(exp(lit(-1.0) * col("z") * col("z") / 2.0),
-          lit(1.0)), 8))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("m")
-          .orderBy(col("p_bound"), col("event_type").asc_nulls_first)))
+    val scored = welchGrid(s, dir)
       .withColumn("holm_thr",
         round(lit(0.10) / (col("m") - col("rnk") + 1), 8))
       .localCheckpoint()

@@ -40,11 +40,6 @@ object SourceQueries {
   private val liveSinkDirs =
     scala.collection.mutable.LinkedHashMap.empty[String, Long]
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(): Unit
-  }
-
   /** Basename shape of every [[freshSinkDir]] allocation: kind + 32-hex
     * stripped UUID. Deliberately does NOT match the stamp-keyed
     * persistent fixtures (`ndjson_*`, `etl_wh_*` — their content-stamp
@@ -80,52 +75,27 @@ object SourceQueries {
       liveSinkDirs(d) = now
       (mine.toSeq ++ expired ++ stale).distinct
     }
-    doomed.foreach(old => rmTree(new java.io.File(old)))
+    doomed.foreach(old => graft.etl.Sinks.rmTree(new java.io.File(old)))
     dirs(kind) = d
     d
   }
 
-  /** Content CRC of the engine's class files — the code source of
+  /** Fingerprint of the engine's class files — the code source of
     * [[graft.etl.Normalize]], a classes directory or a jar — computed
     * once per JVM and folded into every fixture stamp: a fixture or
     * warehouse written by other code (an edited `Normalize`, a changed
     * reader) is rebuilt, never read back. */
-  private[graft] lazy val codeStamp: String = {
-    val crc = new java.util.zip.CRC32
-    def walk(f: java.io.File, rel: String): Unit =
-      if (f.isDirectory) f.listFiles().sortBy(_.getName)
-        .foreach(c => walk(c, s"$rel/${c.getName}"))
-      else {
-        crc.update(rel.getBytes("UTF-8"))
-        crc.update(java.nio.file.Files.readAllBytes(f.toPath))
-      }
-    walk(new java.io.File(graft.etl.Normalize.getClass.getProtectionDomain
-      .getCodeSource.getLocation.toURI), "")
-    java.lang.Long.toHexString(crc.getValue)
-  }
-
-  /** Fingerprint of a fixture's inputs: CRC32 over `code` and the
-    * (relative path, length, mtime) of every file under `src`, sorted.
-    * A REGENERATED source (same path, new content) can thus never be
-    * read through a fixture that survived in target/tmp from an
-    * earlier JVM — that failure mode would look like an engine
-    * correctness bug (fixture rows vs fresh-parquet oracle). */
-  private def fixtureStamp(src: String, code: String): String = {
-    val crc = new java.util.zip.CRC32
-    crc.update(code.getBytes("UTF-8"))
-    def walk(f: java.io.File, rel: String): Seq[String] =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName).toSeq
-          .flatMap(c => walk(c, s"$rel/${c.getName}"))
-      else Seq(s"$rel:${f.length}:${f.lastModified}")
-    walk(new java.io.File(src), "").foreach(l =>
-      crc.update(l.getBytes("UTF-8")))
-    java.lang.Long.toHexString(crc.getValue)
-  }
+  private[graft] lazy val codeStamp: String =
+    graft.ops.SessionCache.fingerprint(Seq(new java.io.File(
+      graft.etl.Normalize.getClass.getProtectionDomain
+        .getCodeSource.getLocation.toURI)))
 
   /** Build-once fixture `scratch/<prefix>_<key>_<stamp>` derived from
-    * table `table` of SF dir `dir` (key = the dir, stamp =
-    * [[fixtureStamp]] of the table and `code`): a fixture is a
+    * table `table` of SF dir `dir` (key = the dir, stamp = the
+    * [[graft.ops.SessionCache.fingerprint]] of the table's files,
+    * salted with `code`): a REGENERATED source (same path, new
+    * content) is never read through a fixture that survived in
+    * target/tmp from an earlier JVM. A fixture is a
     * deterministic function of the (immutable) source table, so
     * re-writing it per query invocation would only pollute the timing
     * of the operator under test with sink throughput. `build(path)`
@@ -139,7 +109,8 @@ object SourceQueries {
       code: => String = codeStamp)(build: String => Unit): String =
     synchronized {
       val head = s"${prefix}_${dir.replaceAll("[^A-Za-z0-9.]", "_")}_"
-      val name = head + fixtureStamp(s"$dir/$table.parquet", code)
+      val name = head + graft.ops.SessionCache.fingerprint(
+        Seq(new java.io.File(s"$dir/$table.parquet")), code)
       val path = s"$scratch/$name"
       if (!new java.io.File(s"$path/$marker").exists()) {
         Option(new java.io.File(scratch).listFiles())
@@ -148,7 +119,7 @@ object SourceQueries {
           // stamp, swept the same way
           .filter(f => f.getName.startsWith(head) && f.getName != name &&
             f.getName.drop(head.length).matches("(v[0-9]+_)?[0-9a-f]+"))
-          .foreach(rmTree)
+          .foreach(graft.etl.Sinks.rmTree)
         build(path)
       }
       path

@@ -53,14 +53,14 @@ object TextQueries {
     * q_text_minhash and q_text_minhash_groups run the IDENTICAL
     * shingle → signature → banding pipeline (same corpus, same
     * parameters), so the corpus-sized LSH build is session-cached via
-    * [[graft.ops.ContractionCache]] — one build per (context, dir)
-    * instead of one per query, the CoOrderGraph discipline (r19
-    * verdict item 4). Both consumers read the checkpointed pair
-    * blocks; the per-query work that remains is each readout's own
-    * joins/aggregates. */
+    * [[graft.ops.SessionCache]] — one build per (context, dir,
+    * `documents` files) instead of one per query, the CoOrderGraph
+    * discipline (r19 verdict item 4). Both consumers read the
+    * checkpointed pair blocks; the per-query work that remains is each
+    * readout's own joins/aggregates. */
   private def plantedMinhashPairs(s: SparkSession, dir: String)
       : DataFrame =
-    graft.ops.ContractionCache.cached(s, dir, "text_minhash_pairs") {
+    graft.ops.SessionCache.frame(s, s"text_minhash_pairs|$dir") {
       TextSim.minhashCandidates(
         plantedCorpus(Tables.load(s, dir, "documents")),
         col("doc_id"), col("text"))
@@ -2462,6 +2462,36 @@ object TextQueries {
       .orderBy("split")
   }
 
+  /** The bigram-LM score table of q_text_lm_score and q_pipe_curate
+    * over a token pool (column `w`): per DISTINCT bigram `pair`, the
+    * add-½-smoothed ln((c_b + ½) / (c_u(first token) + ½·V)) as an
+    * 8-dp decimal `lp`, from vocabulary-sized unigram and bigram count
+    * tables. r19: lp is a function of the PAIR alone, so the
+    * ln/8-dp-round/split work happens once per distinct bigram — the
+    * occurrence stream picks the finished decimal up through one join
+    * (it used to evaluate round(log(...)) per occurrence: ~50× the
+    * arithmetic for identical values; decimal sums are
+    * order-independent, so slp is unchanged). LAZY checkpoint: the
+    * caller's [[TextSim.gateBroadcast]] count() is the materializing
+    * action (one job computes AND pins the table; the broadcast build
+    * then reads blocks) — an eager pin would spend a separate job
+    * first. */
+  private def bigramLogProbs(pool: DataFrame): DataFrame = {
+    val uni = pool.select(explode(col("w")).as("term"))
+      .groupBy("term").agg(count(lit(1)).as("c_u"))
+    val vocab = uni.agg(count(lit(1)).as("v"))
+    pool.select(explode(org.apache.spark.sql.graftfns.QuantFunctions
+        .token_bigrams(col("w"))).as("pair"))
+      .groupBy("pair").agg(count(lit(1)).as("c_b"))
+      .withColumn("ta", split(col("pair"), " ").getItem(0))
+      .join(uni.select(col("term").as("ta"), col("c_u")), "ta")
+      .crossJoin(broadcast(vocab))
+      .select(col("pair"), round(log((col("c_b") + lit(0.5)) /
+        (col("c_u") + lit(0.5) * col("v"))), 8).cast("decimal(20,8)")
+        .as("lp"))
+      .localCheckpoint(false)
+  }
+
   /** q_text_lm_score — CCNet-style bigram-LM quality scoring: train an
     * add-k-smoothed bigram model ON the corpus, score every document's
     * average token log-probability, and report the per-source score
@@ -2484,33 +2514,10 @@ object TextQueries {
       .select(col("doc_id"), col("source"),
         TextSim.tokens(col("text")).as("w"))
       .localCheckpoint()
-    val uni = toks.select(explode(col("w")).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c_u"))
-    val vocab = uni.agg(count(lit(1)).as("v"))
-    val big = toks.select(explode(org.apache.spark.sql.graftfns
-        .QuantFunctions.token_bigrams(col("w"))).as("pair"))
-      .groupBy("pair").agg(count(lit(1)).as("c_b"))
     val docBigrams = toks.select(col("doc_id"), col("source"),
       explode(org.apache.spark.sql.graftfns.QuantFunctions
         .token_bigrams(col("w"))).as("pair"))
-    // r19: lp is a function of the PAIR alone, so the ln/8-dp-round/
-    // split work happens once per DISTINCT bigram on the
-    // vocabulary-sized score table — the occurrence stream picks the
-    // finished decimal up through one broadcast hash join (it used to
-    // evaluate round(log(...)) per occurrence: ~50× the arithmetic
-    // for identical values; decimal sums are order-independent, so
-    // slp is unchanged)
-    // LAZY checkpoint: the gate's count() is the materializing action
-    // (one job computes AND pins the table; the broadcast build then
-    // reads blocks) — an eager pin would spend a separate job first
-    val scoreTab = big
-      .withColumn("ta", split(col("pair"), " ").getItem(0))
-      .join(uni.select(col("term").as("ta"), col("c_u")), "ta")
-      .crossJoin(broadcast(vocab))
-      .select(col("pair"), round(log((col("c_b") + lit(0.5)) /
-        (col("c_u") + lit(0.5) * col("v"))), 8).cast("decimal(20,8)")
-        .as("lp"))
-      .localCheckpoint(false)
+    val scoreTab = bigramLogProbs(toks)
     // build side chosen EXPLICITLY, never the occurrence stream: left
     // unhinted, the planner's generate-side estimate is smaller and it
     // broadcasts the STREAM (BuildLeft over the explode — backwards at
@@ -2584,24 +2591,7 @@ object TextQueries {
       .localCheckpoint()
     // LM gate: vocabulary-sized count tables over the quality pool
     val s1 = base.filter(col("qual_ok"))
-    val uni = s1.select(explode(col("w")).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c_u"))
-    val vocab = uni.agg(count(lit(1)).as("v"))
-    val big = s1.select(explode(token_bigrams(col("w"))).as("pair"))
-      .groupBy("pair").agg(count(lit(1)).as("c_b"))
-    // r19: lp folds once per DISTINCT bigram on the vocabulary-sized
-    // score table (lm_score's rewrite) — the occurrence stream joins
-    // the finished decimal, never re-evaluating round(log(...)) per
-    // occurrence; decimal sums unchanged
-    val lmScore = big
-      .withColumn("ta", split(col("pair"), " ").getItem(0))
-      .join(uni.select(col("term").as("ta"), col("c_u")), "ta")
-      .crossJoin(broadcast(vocab))
-      .select(col("pair"), round(log((col("c_b") + lit(0.5)) /
-        (col("c_u") + lit(0.5) * col("v"))), 8).cast("decimal(20,8)")
-        .as("lp"))
-      // lazy: the gate's count() materializes (see q_text_lm_score)
-      .localCheckpoint(false)
+    val lmScore = bigramLogProbs(s1)
     val docLp = s1
       .select(col("doc_id"), explode(token_bigrams(col("w"))).as("pair"))
       // build on the score table, never the occurrence stream (see

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** §2.S time-series diagnostics over the daily event stream.
@@ -1025,6 +1025,24 @@ object TimeSeriesQueries {
       .orderBy(col("event_type").asc_nulls_first)
   }
 
+  /** The α = 0.5 EMA truncated at 8 lags over window `w` (q_ts_des,
+    * q_ts_holt_winters, q_ts_croston): Σ 0.5ⁱ·c[t−i] over the non-NULL
+    * lags, divided by their weight sum. Powers of 0.5 are exact binary
+    * doubles and the terms sum in one literal order, so both engines
+    * agree bit for bit. try_divide: a row whose 8 lags are all NULL
+    * has weight sum 0 and gets NULL, not an ANSI divide error. */
+  private def ema(w: WindowSpec, c: Column): Column = {
+    val lags = (0 to 7).map(i => if (i == 0) c else lag(c, i).over(w))
+    val wts = (0 to 7).map(i => math.pow(0.5, i))
+    val num = lags.zip(wts).map { case (l, wt) =>
+      when(l.isNotNull, l * lit(wt)).otherwise(lit(0.0)) }
+      .reduce(_ + _)
+    val den = lags.zip(wts).map { case (l, wt) =>
+      when(l.isNotNull, lit(wt)).otherwise(lit(0.0)) }
+      .reduce(_ + _)
+    try_divide(num, den)
+  }
+
   /** q_ts_des — Brown's double exponential smoothing per event type
     * (α = 0.5, the q_win_ema truncation device at 8 lags): S′ = EMA(y),
     * S″ = EMA(S′), level = 2S′−S″, trend = (α/(1−α))(S′−S″) = S′−S″,
@@ -1039,20 +1057,9 @@ object TimeSeriesQueries {
     * literal order, twice. Readout = the LAST day per type. */
   private val tsDes: Q = (s, dir) => {
     val w = Window.partitionBy("event_type").orderBy("d")
-    def ema(c: Column): Column = {
-      val lags = (0 to 7).map(i => if (i == 0) c else lag(c, i).over(w))
-      val wts = (0 to 7).map(i => math.pow(0.5, i))
-      val num = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, l * lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      val den = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      num / den
-    }
     val s1 = dailySeries(s, dir)
-      .withColumn("s1", ema(col("y").cast("double")))
-    val s2 = s1.withColumn("s2", ema(col("s1")))
+      .withColumn("s1", ema(w, col("y").cast("double")))
+    val s2 = s1.withColumn("s2", ema(w, col("s1")))
       .withColumn("rn", row_number().over(
         Window.partitionBy("event_type").orderBy(col("d").desc)))
       .filter(col("rn") === 1)
@@ -1091,21 +1098,10 @@ object TimeSeriesQueries {
         round(col("sy").cast("double") / col("cy") -
           col("ty").cast("double") / col("tc"), 4).as("sdow"))
     val w = Window.partitionBy("event_type").orderBy("d")
-    def ema(c: Column): Column = {
-      val lags = (0 to 7).map(i => if (i == 0) c else lag(c, i).over(w))
-      val wts = (0 to 7).map(i => math.pow(0.5, i))
-      val num = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, l * lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      val den = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      num / den
-    }
     val adj = base.join(broadcast(seas), Seq("event_type", "dow"))
       .withColumn("yadj", col("y").cast("double") - col("sdow"))
-    val s1 = adj.withColumn("s1", ema(col("yadj")))
-    val s2 = s1.withColumn("s2", ema(col("s1")))
+    val s1 = adj.withColumn("s1", ema(w, col("yadj")))
+    val s2 = s1.withColumn("s2", ema(w, col("s1")))
       .withColumn("rn", row_number().over(
         Window.partitionBy("event_type").orderBy(col("d").desc)))
       .filter(col("rn") === 1)
@@ -1306,21 +1302,10 @@ object TimeSeriesQueries {
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg(count(lit(1)).as("z"))
     val w = Window.partitionBy("event_type").orderBy("d")
-    def ema(c: Column): Column = {
-      val lags = (0 to 7).map(i => if (i == 0) c else lag(c, i).over(w))
-      val wts = (0 to 7).map(i => math.pow(0.5, i))
-      val num = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, l * lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      val den = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      try_divide(num, den)
-    }
     val sm = demand
       .withColumn("p", datediff(col("d"), lag(col("d"), 1).over(w)))
-      .withColumn("zh", ema(col("z").cast("double")))
-      .withColumn("ph", ema(col("p").cast("double")))
+      .withColumn("zh", ema(w, col("z").cast("double")))
+      .withColumn("ph", ema(w, col("p").cast("double")))
       .withColumn("rn", row_number().over(
         Window.partitionBy("event_type").orderBy(col("d").desc)))
       .filter(col("rn") === 1)

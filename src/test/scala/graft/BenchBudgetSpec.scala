@@ -126,7 +126,7 @@ class BenchBudgetSpec extends AnyFunSuite {
     // text / vector pipeline
     "q_text_tokenize" -> 0.4, "q_text_dedup_exact" -> 0.4,
     // both minhash budgets assume an earlier query in the sweep already
-    // paid for the session-shared LSH banding build (ContractionCache);
+    // paid for the session-shared LSH banding build (SessionCache);
     // a focused run of one of them alone pays that build cold and can
     // read over its budget without any regression
     "q_text_minhash" -> 0.7,
