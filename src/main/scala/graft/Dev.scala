@@ -3,6 +3,8 @@ package graft
 import graft.ops.{ProductQuant, SessionCache, TextSim}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BinaryArithmetic, EvalMode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -108,11 +110,33 @@ object Dev {
     }
 
   /** Formatted physical plan of one query (static: AQE finalizes at
-    * runtime). `plan` prints them, writes per-query files (the
-    * per-round `plans/rNN/` evidence) or regenerates PLANS.md. */
-  private def planOf(spark: SparkSession, dir: String, name: String) =
-    SparkEntry.queries(name)(spark, dir).queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
+    * runtime), followed by its [[evalModes]]. `plan` prints them,
+    * writes per-query files (the per-round `plans/rNN/` evidence) or
+    * regenerates PLANS.md. */
+  private def planOf(spark: SparkSession, dir: String, name: String) = {
+    val qe = SparkEntry.queries(name)(spark, dir).queryExecution
+    qe.explainString(ExplainMode.fromString("formatted")) +
+      evalModes(spark, qe.optimizedPlan)
+  }
+
+  /** One line per distinct arithmetic expression of `plan` (subqueries
+    * included) whose eval mode is not the session's default, e.g.
+    * `TRY (a#1 / b#2)`: Spark prints a `try_divide` and a `/` alike,
+    * so without these lines a plan diff cannot show that a divide
+    * stopped (or started) raising on a zero divisor. Empty when every
+    * expression runs in the default mode. */
+  private def evalModes(spark: SparkSession, plan: LogicalPlan): String = {
+    val default = EvalMode.fromBoolean(
+      spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+    val odd = scala.collection.mutable.LinkedHashSet.empty[String]
+    plan.foreachWithSubqueries(_.expressions.foreach(_.foreach {
+      case a: BinaryArithmetic if a.evalMode != default =>
+        odd += s"${a.evalMode} $a"
+      case _ =>
+    }))
+    if (odd.isEmpty) ""
+    else odd.mkString(s"\nEval modes other than $default:\n", "\n", "\n")
+  }
 
   /** PLANS.md: [[planPicks]] at sf0.001, committed so plan regressions
     * are reviewable in diffs (the machine-checked subset lives in

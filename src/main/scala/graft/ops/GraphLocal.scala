@@ -142,20 +142,28 @@ object GraphLocal {
     (bridges.toSet, artic.toSet)
   }
 
-  /** Connected-component labels (min node id per component). */
-  def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = mutable.Map.empty[Long, Long]
+  /** Connected-component labels (min node id per component) of the
+    * nodes that touch an edge: an in-memory union-find with
+    * path-halving and union-by-min, so every root is its component's
+    * minimum and the labels do not depend on edge order. Takes any
+    * single-pass edge source — a task's partition or group iterator
+    * streams straight in (q_graph_components' per-brand groups,
+    * [[TextSim.dedupGroups]]' per-partition contraction). */
+  def components(edges: IterableOnce[(Long, Long)]): Map[Long, Long] = {
+    val parent = mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    edges.foreach { case (u, v) =>
-      if (!parent.contains(u)) parent(u) = u
-      if (!parent.contains(v)) parent(v) = v
+    edges.iterator.foreach { case (u, v) =>
+      parent.getOrElseUpdate(u, u)
+      parent.getOrElseUpdate(v, v)
       val ru = find(u); val rv = find(v)
       if (ru != rv) { if (ru < rv) parent(rv) = ru else parent(ru) = rv }
     }
+    // keys snapshotted: find() path-halves in place and must not race
+    // the map's iterator
     parent.keys.toArray.map(x => x -> find(x)).toMap
   }
 }

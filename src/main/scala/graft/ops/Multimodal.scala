@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal columns: images/audio/video as opaque `binary` payloads with
   * typed metadata, plus partition-batched decode/feature/frame operators —
@@ -22,17 +21,6 @@ import org.apache.spark.sql.types._
   * and partitioning are production-shaped.
   */
 object Multimodal {
-
-  /** Media table schema: payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType), // image | audio | video
-    StructField("payload", BinaryType),
-    StructField("source_uri", StringType),
-    StructField("width", IntegerType), //      image/video, nullable
-    StructField("height", IntegerType),
-    StructField("sample_rate", IntegerType), // audio, nullable
-    StructField("duration_ms", LongType))) //  audio/video, nullable
 
   case class MediaRow(media_id: Long, media_type: String,
                       payload: Array[Byte], source_uri: String,

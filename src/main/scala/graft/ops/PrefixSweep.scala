@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed order-sweep primitives: global `row_number`, running
-  * sums, and (exclusive) running maxima over a TOTAL order — without
-  * ever moving the data to a single partition.
+/** Distributed order-sweep primitives: running sums, (exclusive)
+  * running maxima and bounded lookahead frames over a TOTAL order —
+  * without ever moving the data to a single partition. Global
+  * `row_number` is not here: [[Relational.globalRowNumber]] is the one
+  * global row numbering.
   *
   * The problem this kills: `Window.orderBy(...)` with no partition
   * spec plans a single-partition sort (`WindowExec: No Partition
@@ -20,15 +22,16 @@ import org.apache.spark.sql.functions._
   *  1. `repartitionByRange` on the order key — partition i holds a
   *     contiguous key range, all ranges ordered (equal keys land in
   *     one partition, so a tie-broken total order is preserved).
-  *     The layout is `localCheckpoint`ed: `spark_partition_id()` must
-  *     agree between the offsets job and the readout job, and
-  *     RangePartitioner RE-SAMPLES (job-dependent seed) on every
-  *     execution — without the pin, the two jobs could disagree on
-  *     partition boundaries and the offsets would be garbage.
-  *  2. One aggregate computes per-partition counts/sums/maxima — P
-  *     rows, bounded by the cluster fan-out, never by the data —
-  *     collected once to the driver (metadata-sized, the same class
-  *     as lookaheadFrame's partition histogram).
+  *     The layout is `localCheckpoint`ed ([[pinnedRanges]]):
+  *     `spark_partition_id()` must agree between the offsets job and
+  *     the readout job, and RangePartitioner RE-SAMPLES (job-dependent
+  *     seed) on every execution — without the pin, the two jobs could
+  *     disagree on partition boundaries and the offsets would be
+  *     garbage.
+  *  2. One aggregate computes per-partition sums/maxima — P rows,
+  *     bounded by the cluster fan-out, never by the data — collected
+  *     once to the driver (metadata-sized, the same class as
+  *     lookaheadFrame's partition histogram).
   *  3. Exclusive per-partition offsets come from a triangular
   *     self-join over those P LOCAL rows (pid' < pid) — O(P²) pairs
   *     of metadata evaluated over LocalTableScans, no window, no
@@ -38,14 +41,32 @@ import org.apache.spark.sql.functions._
   *     broadcast offset back: global value = local prefix + offset.
   *
   * Results are bit-identical to the single-partition window for any
-  * associative running aggregate (integer/decimal sums, max, rank)
-  * when `orderCols` is a total order — which every caller here
-  * guarantees with an explicit tiebreak column. */
+  * associative running aggregate (integer/decimal sums, max) when
+  * `orderCols` is a total order — which every caller here guarantees
+  * with an explicit tiebreak column. */
 object PrefixSweep {
+
+  /** `parts` if positive, else the session's
+    * `spark.sql.shuffle.partitions`. */
+  private def partsOr(df: DataFrame, parts: Int): Int =
+    if (parts > 0) parts
+    else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+
+  /** `df` range-partitioned into `parts` partitions on `orderCols`,
+    * tagged with its `__pid` and pinned by a LAZY `localCheckpoint`
+    * (r20): the caller's first action both computes the layout and
+    * pins its blocks — an EAGER checkpoint would spend a whole extra
+    * materialization job on the same work. The pin itself is
+    * load-bearing (see the header: RangePartitioner re-samples per
+    * execution); laziness only fuses it into the caller's first pass. */
+  private def pinnedRanges(df: DataFrame, orderCols: Seq[Column],
+                           parts: Int): DataFrame =
+    df.repartitionByRange(parts, orderCols: _*)
+      .withColumn("__pid", spark_partition_id())
+      .localCheckpoint(false)
 
   /** Adds to `df`, ordered globally by `orderCols` (must be a TOTAL
     * order — tie-broken), any of:
-    *  - `rankCol`: global 1-based `row_number` (LongType);
     *  - `runSums`: inclusive running sums of each (expr, outName);
     *  - `runMaxExcl`: EXCLUSIVE running max of each (expr, outName) —
     *    the `rowsBetween(unboundedPreceding, -1)` frame: null on the
@@ -53,33 +74,24 @@ object PrefixSweep {
     *
     * `parts` defaults to `spark.sql.shuffle.partitions`. */
   def sweep(df: DataFrame, orderCols: Seq[Column],
-            rankCol: Option[String] = None,
             runSums: Seq[(Column, String)] = Nil,
             runMaxExcl: Seq[(Column, String)] = Nil,
             parts: Int = 0): DataFrame = {
     require(orderCols.nonEmpty, "sweep needs a total order")
+    require(runSums.nonEmpty || runMaxExcl.nonEmpty,
+      "sweep needs a running sum or max")
     val spark = df.sparkSession
-    val p =
-      if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // LAZY checkpoint (r20): the per-partition totals are collected
-    // right below, and that first action both computes the layout and
-    // pins its blocks — an EAGER checkpoint would spend a whole extra
-    // materialization job on the same work. The pin itself is still
-    // load-bearing (see the header: RangePartitioner re-samples per
-    // execution); laziness only fuses the pin into the offsets pass.
-    val parted = df.repartitionByRange(p, orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
+    // the per-partition totals collected right below are the pin's
+    // materializing action
+    val parted = pinnedRanges(df, orderCols, partsOr(df, parts))
 
     // per-partition totals: P rows of metadata
     val aggs =
-      count(lit(1)).as("__cnt") +:
-        (runSums.zipWithIndex.map { case ((c, _), i) =>
-          sum(c).as(s"__s$i")
-        } ++ runMaxExcl.zipWithIndex.map { case ((c, _), i) =>
-          max(c).as(s"__m$i")
-        })
+      runSums.zipWithIndex.map { case ((c, _), i) =>
+        sum(c).as(s"__s$i")
+      } ++ runMaxExcl.zipWithIndex.map { case ((c, _), i) =>
+        max(c).as(s"__m$i")
+      }
     // totals COLLECTED to the driver (the lookaheadFrame histogram
     // precedent: P rows, bounded by the cluster fan-out, never by the
     // data) and re-planted as a LOCAL relation (r20). The triangular
@@ -98,13 +110,11 @@ object PrefixSweep {
     // exclusive offsets per pid (strictly-earlier partitions only)
     val b = perPid.select(
       col("__pid").as("__bpid") +:
-        col("__cnt").as("__bcnt") +:
         (runSums.indices.map(i => col(s"__s$i").as(s"__bs$i")) ++
           runMaxExcl.indices.map(i => col(s"__m$i").as(s"__bm$i"))): _*)
     val offAggs =
-      coalesce(sum(col("__bcnt")), lit(0L)).as("__rankOff") +:
-        (runSums.indices.map(i => sum(col(s"__bs$i")).as(s"__so$i")) ++
-          runMaxExcl.indices.map(i => max(col(s"__bm$i")).as(s"__mo$i")))
+      runSums.indices.map(i => sum(col(s"__bs$i")).as(s"__so$i")) ++
+        runMaxExcl.indices.map(i => max(col(s"__bm$i")).as(s"__mo$i"))
     val off = perPid.select("__pid")
       .join(broadcast(b), col("__bpid") < col("__pid"), "left")
       .groupBy(col("__pid"))
@@ -115,10 +125,6 @@ object PrefixSweep {
     val cumWin = win.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val exclWin = win.rowsBetween(Window.unboundedPreceding, -1)
     var out = parted.join(broadcast(off), Seq("__pid"))
-    rankCol.foreach { rc =>
-      out = out.withColumn(rc,
-        row_number().over(win).cast("long") + col("__rankOff"))
-    }
     runSums.zipWithIndex.foreach { case ((c, name), i) =>
       // SQL sum skips nulls and is null only over an all-null (or
       // empty) prefix — mirror that GLOBALLY: null only when both the
@@ -143,7 +149,7 @@ object PrefixSweep {
         col(s"__mo$i")))
     }
     out.drop(
-      "__pid" +: "__rankOff" +:
+      "__pid" +:
         (runSums.indices.map(i => s"__so$i") ++
           runMaxExcl.indices.map(i => s"__mo$i")): _*)
   }
@@ -176,24 +182,17 @@ object PrefixSweep {
       exprs: org.apache.spark.sql.expressions.WindowSpec =>
         Seq[(String, Column)]): DataFrame = {
     require(orderCols.nonEmpty && w > 0)
-    val spark = df.sparkSession
     // no sizing count: the per-partition histogram below VERIFIES the
     // ≥ w invariant whatever p is, and collapses to one partition on
     // violation — paying a whole corpus-count job just to pre-size p
     // would duplicate that guarantee
-    val p =
-      if (parts > 0) parts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val oc = orderCols.map(col)
     def run(nParts: Int): DataFrame = {
-      // lazy pin of the sampled range boundaries (see sweep): the
-      // histogram collect below is the materializing action. With
-      // nParts == 1 there is no collect and the pin first fires at
+      // the histogram collect below is the pin's materializing action.
+      // With nParts == 1 there is no collect and the pin first fires at
       // readout; that is safe because repartitionByRange(1) samples no
       // boundaries, so every evaluation puts all rows in partition 0
-      val parted = df.repartitionByRange(nParts, oc: _*)
-        .withColumn("__pid", spark_partition_id())
-        .localCheckpoint(false)
+      val parted = pinnedRanges(df, oc, nParts)
       if (nParts > 1) {
         val sizes = parted.groupBy(col("__pid")).count()
           .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -222,7 +221,7 @@ object PrefixSweep {
       }
       withExprs.filter(col("__own")).drop("__pid", "__dst", "__own")
     }
-    run(p)
+    run(partsOr(df, parts))
   }
 
   /** Standard SQL `ntile(k)` from a global rank and the total row

@@ -28,7 +28,9 @@ object Relational {
   }
 
   /** Global `row_number` over a total order WITHOUT a single-partition
-    * window — the scale-safe surrogate-id assigner.
+    * window — the scale-safe surrogate-id assigner, and the engine's
+    * only global row numbering (surrogate ids, pagination, and every
+    * global rank that feeds an ntile or a top-k cut).
     *
     * `Window.orderBy(...)` with no partitionBy funnels the whole dataset
     * through one task; at 100 TB one executor core sorts the world. This

@@ -159,9 +159,22 @@ object Streaming {
     * with a clear require, not an unresolved l_ts deep in analysis);
     * the window string is validated up front for the same reason —
     * `expr` would otherwise surface a malformed interval as an opaque
-    * parser error at plan time. */
+    * parser error at plan time.
+    *
+    * `joinType` "left_outer" is q_stream_left: every left event emits,
+    * matched rows as they arrive, the unmatched ones with a null right
+    * side once the watermark proves no in-window partner can still
+    * come — the "views that never converted" readout computed
+    * INCREMENTALLY (the batch shape is q_join_left + q_join_range;
+    * q_stream_join is the inner half). The outer semantics only exist
+    * at a live state store: an unmatched left row is held in state
+    * until watermark > l_ts + window, and THEN emitted with nulls — no
+    * batch shadow can express "proven unmatched so far", which is why
+    * that row is U-tier. The interval condition bounds state eviction
+    * on both sides for either join type. */
   def intervalJoin(left: DataFrame, right: DataFrame, key: String,
-                   window: String, tsCol: String = "ts"): DataFrame = {
+                   window: String, tsCol: String = "ts",
+                   joinType: String = "inner"): DataFrame = {
     require(window.trim.toLowerCase(java.util.Locale.ROOT)
         .matches("""\d+\s+(second|minute|hour|day)s?"""),
       s"window must look like '30 minutes' (got '$window')")
@@ -176,37 +189,8 @@ object Streaming {
     l.join(r,
       col(s"l_$key") === col(s"r_$key") &&
         col(s"r_$tsCol") > col(s"l_$tsCol") &&
-        col(s"r_$tsCol") <= col(s"l_$tsCol") + expr(s"INTERVAL $window"))
-  }
-
-  /** q_stream_left — watermarked stream-stream LEFT OUTER interval
-    * join: every left event emits, matched rows as they arrive, the
-    * unmatched ones with a null right side once the watermark proves no
-    * in-window partner can still come — the "views that never
-    * converted" readout computed INCREMENTALLY (the batch shape is
-    * q_join_left + q_join_range; q_stream_join is the inner half).
-    * The outer semantics only exist at a live state store: an
-    * unmatched left row is held in state until
-    * watermark > l_ts + window, and THEN emitted with nulls — no batch
-    * shadow can express "proven unmatched so far", which is why this
-    * row is U-tier. Both sides carry the same interval condition as
-    * [[intervalJoin]], so state eviction is bounded on both sides (the
-    * condition + watermark give Spark the retention bound). */
-  def intervalJoinOuter(left: DataFrame, right: DataFrame, key: String,
-                        window: String,
-                        tsCol: String = "ts"): DataFrame = {
-    require(window.trim.toLowerCase(java.util.Locale.ROOT)
-        .matches("""\d+\s+(second|minute|hour|day)s?"""),
-      s"window must look like '30 minutes' (got '$window')")
-    val l = left.select(
-      left.columns.map(c => col(c).as(s"l_$c")).toIndexedSeq: _*)
-    val r = right.select(
-      right.columns.map(c => col(c).as(s"r_$c")).toIndexedSeq: _*)
-    l.join(r,
-      col(s"l_$key") === col(s"r_$key") &&
-        col(s"r_$tsCol") > col(s"l_$tsCol") &&
         col(s"r_$tsCol") <= col(s"l_$tsCol") + expr(s"INTERVAL $window"),
-      "left_outer")
+      joinType)
   }
 
   /** Per-user accumulator. All fields are order-independent aggregates —
@@ -258,12 +242,18 @@ object Streaming {
     * forward-looking arbitrary-state surface. Kept alongside the
     * `flatMapGroupsWithState` form to cover both APIs. */
   class UserActivityProcessor
+      extends ActivityProcessor("activity", TTLConfig.NONE)
+
+  /** The one body of [[UserActivityProcessor]] and
+    * [[UserActivityTtlProcessor]]: they differ only in the name and
+    * expiry of their value state. */
+  sealed abstract class ActivityProcessor(stateName: String, ttl: TTLConfig)
       extends StatefulProcessor[Long, (Long, String, Double), UserActivity] {
     @transient private var state: ValueState[UserActivity] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[UserActivity]("activity",
-        Encoders.product[UserActivity], TTLConfig.NONE)
+      state = getHandle.getValueState[UserActivity](stateName,
+        Encoders.product[UserActivity], ttl)
 
     override def handleInputRows(user: Long,
                                  rows: Iterator[(Long, String, Double)],
@@ -300,23 +290,7 @@ object Streaming {
     * is an implicit infinite-TTL state that DOES grow forever; this is
     * that pattern made bounded). */
   class UserActivityTtlProcessor(ttl: java.time.Duration)
-      extends StatefulProcessor[Long, (Long, String, Double), UserActivity] {
-    @transient private var state: ValueState[UserActivity] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[UserActivity]("activity_ttl",
-        Encoders.product[UserActivity], TTLConfig(ttl))
-
-    override def handleInputRows(user: Long,
-                                 rows: Iterator[(Long, String, Double)],
-                                 timerValues: TimerValues)
-        : Iterator[UserActivity] = {
-      val next = accumulate(user,
-        Option(state.get()).getOrElse(UserActivity(user, 0L, 0L, 0L)), rows)
-      state.update(next)
-      Iterator.single(next)
-    }
-  }
+      extends ActivityProcessor("activity_ttl", TTLConfig(ttl))
 
   /** [[userActivityTws]] with per-key state TTL. TTL requires
     * `TimeMode.ProcessingTime` (expiry is wall-clock-anchored at the

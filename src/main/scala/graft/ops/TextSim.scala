@@ -866,7 +866,8 @@ object TextSim {
     *
     * Partition-local contraction (the "CC in MapReduce" family): each
     * round hash-partitions the edge list by source and runs an in-memory
-    * union-find per partition (`mapPartitions` — the genuinely
+    * union-find ([[GraphLocal.components]]) per partition
+    * (`mapPartitions` — the genuinely
     * imperative per-partition step), emitting every seen node labeled
     * with its LOCAL component minimum. A node whose edges landed in
     * several partitions comes back with several labels — exactly the
@@ -927,24 +928,7 @@ object TextSim {
       // (u, v) pair spreads hub edges uniformly, so per-task state
       // actually tracks edgesPerTask.
       val local = edges.repartition(p, col("u"), col("v"))
-        .mapPartitions { it =>
-          val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent(r) != r) r = parent(r)
-            var c = x // path compression
-            while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
-          it.foreach { case (a, b) =>
-            parent.getOrElseUpdate(a, a)
-            parent.getOrElseUpdate(b, b)
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-          }
-          // snapshot keys before find() compresses paths mid-iteration
-          parent.keys.toArray.iterator.map(n => (n, find(n)))
-        }
+        .mapPartitions(it => GraphLocal.components(it).iterator)
         .toDF("node", "root")
       val agg = local.groupBy("node")
         .agg(min("root").as("mroot"), collect_set("root").as("roots"))

@@ -14,6 +14,69 @@ import org.apache.spark.sql.functions._
 object AggQueries {
   type Q = (SparkSession, String) => DataFrame
 
+  /** The experiment family's per-user conversion flag, as an aggregate
+    * over the user's events: 1 if any event is a HIGH-VALUE purchase
+    * (value > 90), else 0. With ~700 events/user at demo scale, "any
+    * purchase" converts everyone and p_pool→1 degenerates a pooled SE
+    * to 0 — the rare-event definition keeps both arms strictly inside
+    * (0,1). */
+  private[graft] def highValueConv: Column =
+    max(when(col("event_type") === "purchase" &&
+      col("value") > 90, 1).otherwise(0))
+
+  /** `ev` (with a date column `d`) plus `mid`, the pre/post split day
+    * of its date span: floor((last − first)/2) days after the first
+    * day, so `d < mid` is the pre half (q_agg_ttest_paired,
+    * q_agg_wilcoxon, q_evt_cuped, q_pipe_abtest). floor() explicitly:
+    * Spark's cast-to-int truncates but DuckDB's ROUNDS — floor of the
+    * double is identical on both. */
+  private[graft] def withMidSpan(ev: DataFrame): DataFrame = {
+    val span = ev.agg(min("d").as("d0"), max("d").as("d1"))
+      .select(date_add(col("d0"),
+        floor(datediff(col("d1"), col("d0")) / 2).cast("int")).as("mid"))
+    ev.crossJoin(broadcast(span))
+  }
+
+  /** Per-user mean event value in each half of the span
+    * ([[withMidSpan]]): (user_id, ma, mb) for the users active in
+    * both halves — the paired samples of q_agg_ttest_paired and
+    * q_agg_wilcoxon. Each mean is one division of an exact decimal
+    * sum. */
+  private def halfMeans(s: SparkSession, dir: String): DataFrame = {
+    val phased = withMidSpan(Tables.load(s, dir, "events")
+        .filter(col("user_id").isNotNull && col("value").isNotNull)
+        .withColumn("d", to_date(col("ts"))))
+      .withColumn("phase", when(col("d") < col("mid"), "a")
+        .otherwise("b"))
+      .groupBy("user_id", "phase")
+      .agg(sum(col("value").cast("decimal(18,2)")).as("sv"),
+        count(lit(1)).as("c"))
+      .withColumn("m", col("sv").cast("double") / col("c"))
+    val a = phased.filter(col("phase") === "a")
+      .select(col("user_id"), col("m").as("ma"))
+    val b = phased.filter(col("phase") === "b")
+      .select(col("user_id"), col("m").as("mb"))
+    a.join(b, "user_id")
+  }
+
+  /** Per-arm users and converters of a user_id-parity split, and each
+    * arm's rate: one row of (n_a, c_a, n_b, c_b, p_a, p_b), arm a =
+    * even ids. The per-user flag ([[highValueConv]]) collapses
+    * map-side, so four integers leave the corpus (q_agg_ab_ztest,
+    * q_agg_tost). */
+  private def armRates(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "events")
+      .groupBy("user_id")
+      .agg(highValueConv.as("conv"))
+      .withColumn("arm", col("user_id") % 2)
+      .agg(
+        count(when(col("arm") === 0, 1)).as("n_a"),
+        sum(when(col("arm") === 0, col("conv"))).as("c_a"),
+        count(when(col("arm") === 1, 1)).as("n_b"),
+        sum(when(col("arm") === 1, col("conv"))).as("c_b"))
+      .withColumn("p_a", col("c_a").cast("double") / col("n_a"))
+      .withColumn("p_b", col("c_b").cast("double") / col("n_b"))
+
   /** q_agg_count — global count over a join (ref count round-trip
     * `database/app.py:66-72,195-201`; here it is the *same* plan as the
     * page query, not a second execution — SURVEY.md §3.1). */
@@ -107,19 +170,15 @@ object AggQueries {
       // Dataset.rollup on a post-join frame trips Spark 4.1's
       // ambiguous-self-join detector (Expand duplicates the grouping
       // attributes); GROUP BY ROLLUP builds the identical logical plan
-      // without the false positive. The view name is unique per invocation:
-      // a session-global fixed name would let concurrent runs clobber each
-      // other between createOrReplaceTempView and sql().
+      // without the false positive. The view is registered per call
+      // ([[SqlQueries.sqlOver]]).
       .transform { j =>
-        val view = s"rollup_in_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        j.createOrReplaceTempView(view)
-        try j.sparkSession.sql(
-          s"""SELECT r_name, n_name, count(*) AS n_cust,
+        SqlQueries.sqlOver(s, "rollup_in" -> j)(
+          """SELECT r_name, n_name, count(*) AS n_cust,
                     CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 4)
                          AS DOUBLE) AS sum_bal
-             FROM $view GROUP BY ROLLUP (r_name, n_name)
+             FROM {rollup_in} GROUP BY ROLLUP (r_name, n_name)
              ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""")
-        finally j.sparkSession.catalog.dropTempView(view)
       }
 
   /** q_agg_cube — all grouping sets (same family as rollup). */
@@ -546,8 +605,7 @@ object AggQueries {
     val zsum = 1.96 + 0.8416
     val users = Tables.load(s, dir, "events")
       .groupBy("user_id")
-      .agg(max(when(col("event_type") === "purchase" &&
-        col("value") > 90, 1).otherwise(0)).as("conv"))
+      .agg(highValueConv.as("conv"))
     users.agg(count(lit(1)).as("n_users"), sum("conv").as("n_conv"))
       .withColumn("p_base",
         col("n_conv").cast("double") / col("n_users"))
@@ -584,8 +642,7 @@ object AggQueries {
       .agg(count(lit(1)).as("n_ev"),
         sum(when(col("event_type") === "purchase", 1).otherwise(0))
           .as("n_purch"),
-        max(when(col("event_type") === "purchase" &&
-          col("value") > 90, 1).otherwise(0)).as("y"))
+        highValueConv.as("y"))
     val scored = users
       .withColumn("p6", round(col("n_purch").cast("double") /
         col("n_ev"), 6).cast("decimal(10,6)"))
@@ -622,10 +679,10 @@ object AggQueries {
     * percentile pre-filter (rank error ≤ 1e-4·n at accuracy 10⁴, so
     * ≥ 1.49%·n ≥ k+1 rows survive for any n ≥ 205) contracts to the
     * tail first, and the tail ranks via the DISTRIBUTED
-    * [[graft.ops.PrefixSweep]] (the tail grows linearly with the
-    * corpus, so even it never single-partitions). A declarative guard
-    * (OR survivors <
-    * k+1) keeps tiny fixtures exact without a driver round-trip; the
+    * [[graft.ops.Relational.globalRowNumber]] (the tail grows linearly
+    * with the corpus, so even it never single-partitions). A
+    * declarative guard (OR survivors < k+1) keeps tiny fixtures exact
+    * without a driver round-trip; the
     * cut value's run-to-run wobble cannot change the answer because
     * the top k+1 rows are a strict subset of any valid survivor
     * set. */
@@ -640,16 +697,15 @@ object AggQueries {
     val surv = meta
       .filter(col("o_totalprice").cast("double") >= col("cut"))
       .agg(count(lit(1)).as("n_surv"))
-    // distributed rank over the surviving tail (PrefixSweep): the
+    // distributed rank over the surviving tail (globalRowNumber): the
     // ~1.5% pre-filter bounds the sort INPUT, but that tail still
     // grows linearly with the corpus — range-partitioned ranking keeps
     // it multi-partition at any scale
-    val ranked = graft.ops.PrefixSweep.sweep(
+    val ranked = graft.ops.Relational.globalRowNumber(
         meta.crossJoin(broadcast(surv))
           .filter(col("o_totalprice").cast("double") >= col("cut") ||
             col("n_surv") < col("k") + 1),
-        Seq(col("o_totalprice").desc, col("o_orderkey")),
-        rankCol = Some("rn"))
+        Seq(col("o_totalprice").desc, col("o_orderkey")))
       .filter(col("rn") <= col("k") + 1)
     val xmin = ranked.filter(col("rn") === col("k") + 1)
       .select(col("o_totalprice").as("x_min"))
@@ -1101,17 +1157,16 @@ object AggQueries {
     val rev = Tables.load(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(expr("sum(CAST(o_totalprice AS DECIMAL(18,2)))").as("rev"))
-    // decile membership from a DISTRIBUTED global rank (PrefixSweep)
-    // + the closed-form ntile bucket formula — the entity-grain sort
-    // never single-partitions; tie-broken total order (rev, custkey)
-    // keeps boundaries engine-identical
-    val nTot = rev.agg(count(lit(1)).as("n_cust"))
-    val deciles = graft.ops.PrefixSweep
-      .sweep(rev, Seq(col("rev"), col("o_custkey")),
-        rankCol = Some("rnk"))
-      .crossJoin(broadcast(nTot))
+    // decile membership from a DISTRIBUTED global rank
+    // (globalRowNumber, which also counts the customers) + the
+    // closed-form ntile bucket formula — the entity-grain sort never
+    // single-partitions; tie-broken total order (rev, custkey) keeps
+    // boundaries engine-identical
+    val (ranked, nCust) = graft.ops.Relational.globalRowNumberWithCount(
+      rev, Seq(col("rev"), col("o_custkey")), "rnk")
+    val deciles = ranked
       .withColumn("decile", graft.ops.PrefixSweep
-        .ntileOf(col("rnk"), col("n_cust"), 10).cast("int"))
+        .ntileOf(col("rnk"), lit(nCust), 10).cast("int"))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_customers"), expr("sum(rev)").as("drev"))
     val total = deciles.agg(expr("sum(drev)").as("trev"))
@@ -1173,24 +1228,10 @@ object AggQueries {
     * expression shared literally with the oracle; the significance
     * flag compares the ROUNDED z against 1.96 (boundary discipline). */
   private val aggAbZtest: Q = (s, dir) => {
-    val users = Tables.load(s, dir, "events")
-      .groupBy("user_id")
-      // conversion = a HIGH-VALUE purchase (value > 90): with ~700
-      // events/user at demo scale, "any purchase" converts everyone
-      // and p_pool→1 degenerates the pooled SE to 0 — the rare-event
-      // definition keeps both arms strictly inside (0,1), and
-      // try_divide guards the degenerate case anyway (NULL z → flag 0
-      // via the CASE, identically in DuckDB).
-      .agg(max(when(col("event_type") === "purchase" &&
-        col("value") > 90, 1).otherwise(0)).as("conv"))
-      .withColumn("arm", col("user_id") % 2)
-    users.agg(
-      count(when(col("arm") === 0, 1)).as("n_a"),
-      sum(when(col("arm") === 0, col("conv"))).as("c_a"),
-      count(when(col("arm") === 1, 1)).as("n_b"),
-      sum(when(col("arm") === 1, col("conv"))).as("c_b"))
-      .withColumn("p_a", col("c_a").cast("double") / col("n_a"))
-      .withColumn("p_b", col("c_b").cast("double") / col("n_b"))
+    // conversion = a HIGH-VALUE purchase ([[highValueConv]]); try_divide
+    // guards the degenerate pooled SE anyway (NULL z → flag 0 via the
+    // CASE, identically in DuckDB)
+    armRates(s, dir)
       .withColumn("p_pool",
         (col("c_a") + col("c_b")).cast("double") /
           (col("n_a") + col("n_b")))
@@ -1671,8 +1712,7 @@ object AggQueries {
   private val aggSprt: Q = (s, dir) => {
     val daily = Tables.load(s, dir, "events")
       .groupBy(to_date(col("ts")).as("d"), col("user_id"))
-      .agg(max(when(col("event_type") === "purchase" &&
-        col("value") > 90, 1).otherwise(0)).as("conv"))
+      .agg(highValueConv.as("conv"))
       .groupBy("d")
       .agg(count(lit(1)).as("n_users"), sum("conv").as("n_conv"))
     def dec8(x: Double): Column =
@@ -1711,18 +1751,7 @@ object AggQueries {
     * closed-form doubles with the margin in DOUBLE arithmetic (the
     * mde literal rule); the verdict compares ROUNDED z's. */
   private val aggTost: Q = (s, dir) => {
-    val users = Tables.load(s, dir, "events")
-      .groupBy("user_id")
-      .agg(max(when(col("event_type") === "purchase" &&
-        col("value") > 90, 1).otherwise(0)).as("conv"))
-      .withColumn("arm", col("user_id") % 2)
-    users.agg(
-      count(when(col("arm") === 0, 1)).as("n_a"),
-      sum(when(col("arm") === 0, col("conv"))).as("c_a"),
-      count(when(col("arm") === 1, 1)).as("n_b"),
-      sum(when(col("arm") === 1, col("conv"))).as("c_b"))
-      .withColumn("p_a", col("c_a").cast("double") / col("n_a"))
-      .withColumn("p_b", col("c_b").cast("double") / col("n_b"))
+    armRates(s, dir)
       .withColumn("se", sqrt(
         col("p_a") * (lit(1.0) - col("p_a")) / col("n_a") +
           col("p_b") * (lit(1.0) - col("p_b")) / col("n_b")))
@@ -1737,6 +1766,38 @@ object AggQueries {
         col("z_low"), col("z_high"),
         when(least(col("z_low"), col("z_high")) > 1.645, 1)
           .otherwise(0).as("equivalent"))
+  }
+
+  /** Lineitem quantity per ship month as exact decimal moments: one
+    * row per month `grp` with (n_g, s1 = Σx, s2 = Σx²) — the group
+    * input of q_agg_anova and q_agg_welch_anova. */
+  private def monthlyQuantity(s: SparkSession, dir: String): DataFrame = {
+    val q = "CAST(l_quantity AS DECIMAL(9,0))"
+    Tables.load(s, dir, "lineitem")
+      .groupBy(month(col("l_shipdate")).as("grp"))
+      .agg(count(lit(1)).as("n_g"),
+        expr(s"sum($q)").as("s1"),
+        expr(s"sum($q * $q)").as("s2"))
+  }
+
+  /** One-way ANOVA terms over per-group moments `g` (n_g, s1, s2):
+    * each group row gains the group count k, total n, grand mean m,
+    * and its between (bt) and within (wt) mean-square terms, each ONE
+    * closed-form double rounded to an 8-dp decimal so the caller's
+    * cross-group sum is partition-order-free (q_agg_anova,
+    * q_agg_levene). */
+  private def anovaTerms(g: DataFrame): DataFrame = {
+    val tot = g.agg(count(lit(1)).as("k"), sum("n_g").as("n"),
+      sum("s1").as("s"))
+    g.crossJoin(broadcast(tot))
+      .withColumn("m_g", col("s1").cast("double") / col("n_g"))
+      .withColumn("m", col("s").cast("double") / col("n"))
+      .withColumn("bt", round(col("n_g") * (col("m_g") - col("m")) *
+        (col("m_g") - col("m")) / (col("k") - lit(1)), 8)
+        .cast("decimal(20,8)"))
+      .withColumn("wt", round((col("s2").cast("double") -
+        col("n_g") * col("m_g") * col("m_g")) /
+        (col("n") - col("k")), 8).cast("decimal(20,8)"))
   }
 
   /** q_agg_anova — one-way ANOVA of lineitem quantity across the
@@ -1755,24 +1816,8 @@ object AggQueries {
     * compares the ROUNDED F. Shape: one corpus-sized two-phase
     * aggregate; everything after it is cell arithmetic. */
   private val aggAnova: Q = (s, dir) => {
-    val q = "CAST(l_quantity AS DECIMAL(9,0))"
-    val g = Tables.load(s, dir, "lineitem")
-      .groupBy(month(col("l_shipdate")).as("grp"))
-      .agg(count(lit(1)).as("n_g"),
-        expr(s"sum($q)").as("s1"),
-        expr(s"sum($q * $q)").as("s2"))
-    val tot = g.agg(count(lit(1)).as("k"), sum("n_g").as("n"),
-      sum("s1").as("s"))
-    val terms = g.crossJoin(broadcast(tot))
-      .withColumn("m_g", col("s1").cast("double") / col("n_g"))
-      .withColumn("m", col("s").cast("double") / col("n"))
-      .withColumn("bt", round(col("n_g") * (col("m_g") - col("m")) *
-        (col("m_g") - col("m")) / (col("k") - lit(1)), 8)
-        .cast("decimal(20,8)"))
-      .withColumn("wt", round((col("s2").cast("double") -
-        col("n_g") * col("m_g") * col("m_g")) /
-        (col("n") - col("k")), 8).cast("decimal(20,8)"))
-    terms.groupBy(col("k"), col("n"), round(col("m"), 4).as("grand_mean"))
+    anovaTerms(monthlyQuantity(s, dir))
+      .groupBy(col("k"), col("n"), round(col("m"), 4).as("grand_mean"))
       .agg(sum("bt").as("msb_d"), sum("wt").as("msw_d"))
       .select(col("k"), col("n").cast("long").as("n"), col("grand_mean"),
         round(col("msb_d").cast("double"), 4).as("msb"),
@@ -1912,6 +1957,21 @@ object AggQueries {
       .orderBy(col("event_type").asc_nulls_first)
   }
 
+  /** Per return flag, the row count n and the first four power sums
+    * s1..s4 of the decimal quantity expression `q`, each an exact
+    * decimal sum cast to double once (q_agg_jarque_bera,
+    * q_agg_bimodality; `q`'s width keeps the quartic inside precision
+    * 38 on both engines). */
+  private def flagPowerSums(s: SparkSession, dir: String,
+                            q: String): DataFrame =
+    Tables.load(s, dir, "lineitem")
+      .groupBy(col("l_returnflag").as("flag"))
+      .agg(count(lit(1)).as("n"),
+        expr(s"CAST(sum($q) AS DOUBLE)").as("s1"),
+        expr(s"CAST(sum($q * $q) AS DOUBLE)").as("s2"),
+        expr(s"CAST(sum($q * $q * $q) AS DOUBLE)").as("s3"),
+        expr(s"CAST(sum($q * $q * $q * $q) AS DOUBLE)").as("s4"))
+
   /** q_agg_jarque_bera — normality test per return flag on the
     * (integral) quantity column: skewness, excess kurtosis, and
     * JB = n/6·(S² + K²/4) with the χ²(2) α=0.05 call (5.99) — the
@@ -1925,14 +1985,7 @@ object AggQueries {
     * every central-moment readout is one shared closed-form double;
     * the flag compares the ROUNDED JB. One two-phase aggregate. */
   private val aggJarqueBera: Q = (s, dir) => {
-    val q = "CAST(l_quantity AS DECIMAL(9,0))"
-    Tables.load(s, dir, "lineitem")
-      .groupBy(col("l_returnflag").as("flag"))
-      .agg(count(lit(1)).as("n"),
-        expr(s"CAST(sum($q) AS DOUBLE)").as("s1"),
-        expr(s"CAST(sum($q * $q) AS DOUBLE)").as("s2"),
-        expr(s"CAST(sum($q * $q * $q) AS DOUBLE)").as("s3"),
-        expr(s"CAST(sum($q * $q * $q * $q) AS DOUBLE)").as("s4"))
+    flagPowerSums(s, dir, "CAST(l_quantity AS DECIMAL(9,0))")
       .withColumn("m", col("s1") / col("n"))
       .withColumn("m2", col("s2") / col("n") - col("m") * col("m"))
       .withColumn("m3", col("s3") / col("n") -
@@ -2370,18 +2423,7 @@ object AggQueries {
           col("cnt").cast("decimal(19,0)")).as("s1"),
         sum((col("z") * col("z")).cast("decimal(18,2)") *
           col("cnt").cast("decimal(19,0)")).as("s2"))
-    val tot = g.agg(count(lit(1)).as("k"), sum("n_g").as("n"),
-      sum("s1").as("s"))
-    val terms = g.crossJoin(broadcast(tot))
-      .withColumn("m_g", col("s1").cast("double") / col("n_g"))
-      .withColumn("m", col("s").cast("double") / col("n"))
-      .withColumn("bt", round(col("n_g") * (col("m_g") - col("m")) *
-        (col("m_g") - col("m")) / (col("k") - lit(1)), 8)
-        .cast("decimal(20,8)"))
-      .withColumn("wt", round((col("s2").cast("double") -
-        col("n_g") * col("m_g") * col("m_g")) /
-        (col("n") - col("k")), 8).cast("decimal(20,8)"))
-    terms.groupBy(col("k"), col("n"))
+    anovaTerms(g).groupBy(col("k"), col("n"))
       .agg(sum("bt").as("msb_d"), sum("wt").as("msw_d"))
       .select(col("k"), col("n").cast("long").as("n"),
         round(col("msb_d").cast("double"), 4).as("msb"),
@@ -2797,14 +2839,7 @@ object AggQueries {
   private val aggBimodality: Q = (s, dir) => {
     // (8,2) so the quartic product stays inside precision 38 on BOTH
     // engines: (8,2)^4 = (35,8) Spark / (32,8) DuckDB — exact either way
-    val q = "CAST(l_quantity AS DECIMAL(8,2))"
-    val g = Tables.load(s, dir, "lineitem")
-      .groupBy(col("l_returnflag").as("flag"))
-      .agg(count(lit(1)).as("n"),
-        expr(s"CAST(sum($q) AS DOUBLE)").as("s1"),
-        expr(s"CAST(sum($q * $q) AS DOUBLE)").as("s2"),
-        expr(s"CAST(sum($q * $q * $q) AS DOUBLE)").as("s3"),
-        expr(s"CAST(sum($q * $q * $q * $q) AS DOUBLE)").as("s4"))
+    val g = flagPowerSums(s, dir, "CAST(l_quantity AS DECIMAL(8,2))")
     val m = col("s1") / col("n")
     val m2 = col("s2") / col("n") - m * m
     val m3 = col("s3") / col("n") - lit(3) * m * (col("s2") / col("n")) +
@@ -2991,12 +3026,7 @@ object AggQueries {
     * doubles. Scale: one corpus aggregate; everything after is the
     * 12-row grid. */
   private val aggWelchAnova: Q = (s, dir) => {
-    val q = "CAST(l_quantity AS DECIMAL(9,0))"
-    val g = Tables.load(s, dir, "lineitem")
-      .groupBy(month(col("l_shipdate")).as("grp"))
-      .agg(count(lit(1)).as("n_g"),
-        expr(s"sum($q)").as("s1"),
-        expr(s"sum($q * $q)").as("s2"))
+    val g = monthlyQuantity(s, dir)
       .withColumn("mean_g", col("s1").cast("double") / col("n_g"))
       .withColumn("var_g", (col("s2").cast("double") -
         col("n_g") * col("mean_g") * col("mean_g")) /
@@ -3051,26 +3081,7 @@ object AggQueries {
     * shared closed form. Scale: one per-(user, phase) contraction;
     * everything after is user-count-sized. */
   private val aggTtestPaired: Q = (s, dir) => {
-    val ev = Tables.load(s, dir, "events")
-      .filter(col("user_id").isNotNull && col("value").isNotNull)
-      .withColumn("d", to_date(col("ts")))
-    val span = ev.agg(min("d").as("d0"), max("d").as("d1"))
-      // floor() explicitly: Spark's cast-to-int truncates but DuckDB's
-      // ROUNDS — floor of the double is identical on both
-      .select(date_add(col("d0"),
-        floor(datediff(col("d1"), col("d0")) / 2).cast("int")).as("mid"))
-    val phased = ev.crossJoin(broadcast(span))
-      .withColumn("phase", when(col("d") < col("mid"), "a")
-        .otherwise("b"))
-      .groupBy("user_id", "phase")
-      .agg(sum(col("value").cast("decimal(18,2)")).as("sv"),
-        count(lit(1)).as("c"))
-      .withColumn("m", col("sv").cast("double") / col("c"))
-    val a = phased.filter(col("phase") === "a")
-      .select(col("user_id"), col("m").as("ma"))
-    val b = phased.filter(col("phase") === "b")
-      .select(col("user_id"), col("m").as("mb"))
-    val diffs = a.join(b, "user_id")
+    val diffs = halfMeans(s, dir)
       .select(round(col("ma") - col("mb"), 8).cast("decimal(18,8)")
         .as("dd"))
     diffs.agg(count(lit(1)).as("n"), sum("dd").as("sd"),
@@ -3263,24 +3274,7 @@ object AggQueries {
     * distinct-|d| grid → the grid rank runs as a DISTRIBUTED
     * PrefixSweep (value-grain, never a single-partition window). */
   private val aggWilcoxon: Q = (s, dir) => {
-    val ev = Tables.load(s, dir, "events")
-      .filter(col("user_id").isNotNull && col("value").isNotNull)
-      .withColumn("d", to_date(col("ts")))
-    val span = ev.agg(min("d").as("d0"), max("d").as("d1"))
-      .select(date_add(col("d0"),
-        floor(datediff(col("d1"), col("d0")) / 2).cast("int")).as("mid"))
-    val phased = ev.crossJoin(broadcast(span))
-      .withColumn("phase", when(col("d") < col("mid"), "a")
-        .otherwise("b"))
-      .groupBy("user_id", "phase")
-      .agg(sum(col("value").cast("decimal(18,2)")).as("sv"),
-        count(lit(1)).as("c"))
-      .withColumn("m", col("sv").cast("double") / col("c"))
-    val a = phased.filter(col("phase") === "a")
-      .select(col("user_id"), col("m").as("ma"))
-    val b = phased.filter(col("phase") === "b")
-      .select(col("user_id"), col("m").as("mb"))
-    val diffs = a.join(b, "user_id")
+    val diffs = halfMeans(s, dir)
       .select(round(col("mb") - col("ma"), 8).cast("decimal(18,8)")
         .as("dd"))
       .filter(col("dd") =!= 0)
@@ -3550,8 +3544,7 @@ object AggQueries {
     val users = Tables.load(s, dir, "events")
       .filter(col("user_id").isNotNull)
       .groupBy("user_id")
-      .agg(max(when(col("event_type") === "purchase" &&
-        col("value") > 90, 1).otherwise(0)).as("conv"))
+      .agg(highValueConv.as("conv"))
       .withColumn("arm", col("user_id") % 2)
     val one = users.groupBy("arm")
       .agg(count(lit(1)).as("n"), sum("conv").as("c"))

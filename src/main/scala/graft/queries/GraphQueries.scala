@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -40,6 +40,31 @@ object GraphQueries {
   private val graphPagerank: Q = (s, dir) =>
     pagerankFromEvents(s, Tables.load(s, dir, "events"))
 
+  /** The event-type transition graph that q_graph_pagerank and
+    * q_graph_hits iterate on the driver: the k²-row grid of
+    * (from_type, to_type, n) over each user's consecutive events, and
+    * the node set. Corpus work is one window + two-phase aggregate.
+    * Both come back SORTED: collect order is partition-layout-
+    * dependent, and the driver-local float folds must see one
+    * canonical order (§7.5). The node set is its own (tiny) distinct,
+    * exactly the oracle's `nodes` CTE: a type can appear with no
+    * transitions at all. */
+  private def transitionGraph(s: SparkSession, events: DataFrame)
+      : (Array[(String, String, Long)], Array[String]) = {
+    import s.implicits._
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    val grid = events
+      .withColumn("to_type", lead("event_type", 1).over(w))
+      .filter(col("to_type").isNotNull)
+      .groupBy(col("event_type").as("from_type"), col("to_type"))
+      .agg(count(lit(1)).as("n"))
+      .as[(String, String, Long)].collect()
+      .sortBy(t => (t._1, t._2))
+    val nodes = events.select(col("event_type").as("node"))
+      .distinct().as[String].collect().sorted
+    (grid, nodes)
+  }
+
   /** Core of q_graph_pagerank, split from the registration so
     * LayoutInvarianceSpec can drive it over pathological partition
     * layouts (same contract as [[hitsFromEvents]]). r19: the 5
@@ -54,17 +79,7 @@ object GraphQueries {
   private[graft] def pagerankFromEvents(s: SparkSession,
                                         events: DataFrame): DataFrame = {
     import s.implicits._
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    // corpus-sized phase: one scan, two-phase aggregate → k² edge rows
-    val grid = events
-      .withColumn("to_type", lead("event_type", 1).over(w))
-      .filter(col("to_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
-      .as[(String, String, Long)].collect()
-      .sortBy(t => (t._1, t._2))
-    val nodes = events.select(col("event_type").as("node"))
-      .distinct().as[String].collect().sorted
+    val (grid, nodes) = transitionGraph(s, events)
     // p(from→to) = n / Σ_to n — integer-exact totals, one double
     // division per edge (identical to the former window-sum form)
     val outTot = grid.groupBy(_._1)
@@ -223,6 +238,22 @@ object GraphQueries {
         col("max_c").cast("double").as("max_cc"), col("n_closed"))
   }
 
+  /** The link-prediction trio's wedge input (q_graph_common_neighbors,
+    * q_graph_adamic_adar, q_graph_jaccard) on the %8 co-order graph:
+    * its checkpointed degree table `deg` (p, dg) and the undirected
+    * incidence (w, x, dg), w being the shared-neighbor pivot with
+    * degree dg, kept where `pivots` holds (the dg ≤ 64 hub cap). */
+  private def pivotIncidence(s: SparkSession, dir: String,
+                             pivots: Column): (DataFrame, DataFrame) = {
+    val e0 = graft.ops.CoOrderGraph.mod8Edges(s, dir)
+    val deg = graft.ops.CoOrderGraph.degrees(e0, "dg")
+      .localCheckpoint()
+    (deg, e0.select(col("u").as("w"), col("v").as("x"))
+      .unionAll(e0.select(col("v").as("w"), col("u").as("x")))
+      .join(broadcast(deg.select(col("p").as("w"), col("dg"))), "w")
+      .filter(pivots))
+  }
+
   /** q_graph_common_neighbors — link-prediction scores on the co-order
     * part sub-graph (`p_partkey % 8 = 0`; the q_graph_triangles graph
     * halved again, because pair-level output is Σ deg(w)²/2 wedges —
@@ -244,19 +275,11 @@ object GraphQueries {
     * triangle census discipline (`localCheckpoint`, broadcast degree
     * dim). */
   private val graphCommonNeighbors: Q = (s, dir) => {
-    val e0 = graft.ops.CoOrderGraph.mod8Edges(s, dir)
-    val deg = graft.ops.CoOrderGraph.degrees(e0, "dg")
-      .localCheckpoint()
-    // undirected incidence, pivot-capped: w is the shared neighbor.
+    val (deg, inc0) = pivotIncidence(s, dir, col("dg") <= 64)
     // Checkpointed — BOTH sides of the wedge self-join read it, and
     // without materialization each side replays the union + broadcast
     // join over the edge list.
-    val inc = e0.select(col("u").as("w"), col("v").as("x"))
-      .unionAll(e0.select(col("v").as("w"), col("u").as("x")))
-      .join(broadcast(deg.select(col("p").as("w"), col("dg"))), "w")
-      .filter(col("dg") <= 64)
-      .select("w", "x")
-      .localCheckpoint()
+    val inc = inc0.select("w", "x").localCheckpoint()
     val i1 = inc.as("i1"); val i2 = inc.as("i2")
     val pairs = i1.join(i2, col("i1.w") === col("i2.w")
         && col("i1.x") < col("i2.x"))
@@ -344,22 +367,8 @@ object GraphQueries {
     val comps = e0.as[(String, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (_, rows) =>
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-          r
-        }
-        rows.foreach { case (_, u, v) =>
-          if (!parent.contains(u)) parent(u) = u
-          if (!parent.contains(v)) parent(v) = v
-          val ru = find(u); val rv = find(v)
-          if (ru != rv) { if (ru < rv) parent(rv) = ru else parent(ru) = rv }
-        }
-        // union-by-min keeps roots minimal, so find(x) IS the canonical
-        // min-key component label (keys snapshotted: find() path-halves
-        // in place and must not race the map's iterator)
-        parent.keys.toArray.iterator.map(x => (x, find(x)))
+        graft.ops.GraphLocal.components(
+          rows.map { case (_, u, v) => (u, v) }).iterator
       }
       .toDF("node", "component")
     Tables.load(s, dir, "part").select(col("p_partkey"))
@@ -460,13 +469,9 @@ object GraphQueries {
     * (one edge can't make a wedge), and the filter pins it, so
     * ln(dg) ≥ ln 2 and the division is ANSI-safe. */
   private val graphAdamicAdar: Q = (s, dir) => {
-    val e0 = graft.ops.CoOrderGraph.mod8Edges(s, dir)
-    val deg = graft.ops.CoOrderGraph.degrees(e0, "dg")
-      .localCheckpoint()
-    val inc = e0.select(col("u").as("w"), col("v").as("x"))
-      .unionAll(e0.select(col("v").as("w"), col("u").as("x")))
-      .join(broadcast(deg.select(col("p").as("w"), col("dg"))), "w")
-      .filter(col("dg") >= 2 && col("dg") <= 64)
+    val (_, inc0) =
+      pivotIncidence(s, dir, col("dg") >= 2 && col("dg") <= 64)
+    val inc = inc0
       .select(col("w"), col("x"),
         round(lit(1.0) / log(col("dg").cast("double")), 8)
           .cast("decimal(20,8)").as("aa_term"))
@@ -494,15 +499,9 @@ object GraphQueries {
     * with full degrees riding two broadcast dim joins. Integers to
     * one division per surviving pair. */
   private val graphJaccard: Q = (s, dir) => {
-    val e0 = graft.ops.CoOrderGraph.mod8Edges(s, dir)
-    val deg = graft.ops.CoOrderGraph.degrees(e0, "dg")
-      .localCheckpoint()
-    val inc = e0.select(col("u").as("w"), col("v").as("x"))
-      .unionAll(e0.select(col("v").as("w"), col("u").as("x")))
-      .join(broadcast(deg.select(col("p").as("w"), col("dg"))), "w")
-      .filter(col("dg") >= 2 && col("dg") <= 64)
-      .select(col("w"), col("x"))
-      .localCheckpoint()
+    val (deg, inc0) =
+      pivotIncidence(s, dir, col("dg") >= 2 && col("dg") <= 64)
+    val inc = inc0.select(col("w"), col("x")).localCheckpoint()
     val i1 = inc.as("i1"); val i2 = inc.as("i2")
     i1.join(i2, col("i1.w") === col("i2.w") && col("i1.x") < col("i2.x"))
       .groupBy(col("i1.x").as("u"), col("i2.x").as("v"))
@@ -699,21 +698,8 @@ object GraphQueries {
   private[graft] def hitsFromEvents(s: SparkSession,
                                     events: DataFrame): DataFrame = {
     import s.implicits._
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val grid = events
-      .withColumn("to_type", lead("event_type", 1).over(w))
-      .filter(col("to_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"), col("to_type"))
-      .agg(count(lit(1)).cast("double").as("wgt"))
-      .as[(String, String, Double)].collect()
-      // collect order is partition-layout-dependent; the driver-local
-      // float folds below must see one canonical order (§7.5) — sort
-      // the k²-row grid before any summation touches it
-      .sortBy(t => (t._1, t._2))
-    // a type can appear with no transitions at all — the node set is
-    // its own (tiny) distinct, exactly the oracle's `nodes` CTE
-    val nodes = events.select(col("event_type").as("node"))
-      .distinct().as[String].collect().sorted
+    val (counts, nodes) = transitionGraph(s, events)
+    val grid = counts.map { case (f, t, n) => (f, t, n.toDouble) }
     var hub = nodes.map(n => n -> 1.0 / nodes.length).toMap
     var auth = Map.empty[String, Double]
     for (_ <- 1 to 3) {
@@ -743,6 +729,25 @@ object GraphQueries {
       .orderBy("event_type")
   }
 
+  /** Three synchronous label-propagation rounds over the directed
+    * neighbor list `nbr` (w, x): every node starts as its own label
+    * and adopts its neighbors' most frequent label, ties to the MIN
+    * label; returns (node, lab). q_graph_lpa and q_pipe_graph_health
+    * (PipeShowcaseSpec pins the two bit-equal). */
+  private def lpaLabels(nbr: DataFrame): DataFrame = {
+    val init = nbr.select(col("w").as("node")).distinct()
+      .withColumn("lab", col("node"))
+    val wTop = Window.partitionBy("w")
+      .orderBy(col("c").desc, col("lab").asc)
+    (1 to 3).foldLeft(init) { (lab, _) =>
+      nbr.join(lab.select(col("node").as("x"), col("lab")), "x")
+        .groupBy("w", "lab").agg(count(lit(1)).as("c"))
+        .withColumn("rn", row_number().over(wTop))
+        .filter(col("rn") === 1)
+        .select(col("w").as("node"), col("lab"))
+    }
+  }
+
   /** q_graph_lpa — deterministic synchronous label propagation (3
     * rounds) on the %8 co-order part graph: every node starts as its
     * own label; each round it adopts its neighbors' MOST FREQUENT
@@ -767,18 +772,7 @@ object GraphQueries {
     val nbr = e0.select(col("u").as("w"), col("v").as("x"))
       .unionAll(e0.select(col("v").as("w"), col("u").as("x")))
       .localCheckpoint()
-    val init = nbr.select(col("w").as("node")).distinct()
-      .withColumn("lab", col("node"))
-    val wTop = Window.partitionBy("w")
-      .orderBy(col("c").desc, col("lab").asc)
-    val labels = (1 to 3).foldLeft(init) { (lab, _) =>
-      nbr.join(lab.select(col("node").as("x"), col("lab")), "x")
-        .groupBy("w", "lab").agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(wTop))
-        .filter(col("rn") === 1)
-        .select(col("w").as("node"), col("lab"))
-    }
-    labels.groupBy("lab").agg(count(lit(1)).as("sz"))
+    lpaLabels(nbr).groupBy("lab").agg(count(lit(1)).as("sz"))
       .orderBy(col("sz").desc, col("lab").asc)
       .limit(10)
       .select(col("lab").cast("long").as("community"),
@@ -830,18 +824,7 @@ object GraphQueries {
           .cast("double")) *
           sqrt((col("n") * col("syy") - col("sy") * col("sy"))
             .cast("double"))), 4).as("assort"))
-    val init = nbr.select(col("w").as("node")).distinct()
-      .withColumn("lab", col("node"))
-    val wTop = Window.partitionBy("w")
-      .orderBy(col("c").desc, col("lab").asc)
-    val labels = (1 to 3).foldLeft(init) { (lab, _) =>
-      nbr.join(lab.select(col("node").as("x"), col("lab")), "x")
-        .groupBy("w", "lab").agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(wTop))
-        .filter(col("rn") === 1)
-        .select(col("w").as("node"), col("lab"))
-    }
-    val comm = labels.groupBy("lab").agg(count(lit(1)).as("sz"))
+    val comm = lpaLabels(nbr).groupBy("lab").agg(count(lit(1)).as("sz"))
       .agg(count(lit(1)).as("ncomm"), max("sz").as("topsz"))
     val one = sizes.crossJoin(broadcast(assort))
       .crossJoin(broadcast(comm))

@@ -412,6 +412,25 @@ object PipelineQueries {
       .orderBy("class")
   }
 
+  /** Per user, the symbols of its first 50 events under the total
+    * (ts, event_id) order, joined by `sep` into column `name`; `symbol`
+    * maps each event_type to its symbol (q_evt_paths, q_evt_match).
+    * The row_number pre-cap plans as the WindowGroupLimit kernel, so a
+    * hot user's tail is dropped before the collect. */
+  private def userSequences(s: SparkSession, dir: String, name: String,
+                            sep: String)(symbol: Column => Column)
+      : DataFrame =
+    Tables.load(s, dir, "events")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("user_id").orderBy("ts", "event_id")))
+      .filter(col("rn") <= 50)
+      .groupBy("user_id")
+      .agg(array_join(
+        transform(
+          array_sort(collect_list(struct(col("ts"), col("event_id"),
+            col("event_type")))),
+          x => symbol(x.getField("event_type"))), sep).as(name))
+
   /** q_evt_paths — clickstream path analysis: each user's event-type
     * sequence (time order, capped at the first 50 events) becomes a
     * path string, then paths are counted and the top 20 kept — the
@@ -426,16 +445,7 @@ object PipelineQueries {
     * both engines build the identical string; the path aggregate
     * shuffles ≤50 rows per user, the count one row per distinct path. */
   private val evtPaths: Q = (s, dir) =>
-    Tables.load(s, dir, "events")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")))
-      .filter(col("rn") <= 50)
-      .groupBy("user_id")
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(col("ts"), col("event_id"),
-            col("event_type")))),
-          x => x.getField("event_type")), ">").as("path"))
+    userSequences(s, dir, "path", ">")(t => t)
       .groupBy("path")
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("path"))
@@ -460,16 +470,7 @@ object PipelineQueries {
     * group-by; at 100 TB the regex scan is embarrassingly parallel over
     * ≤50-char strings. */
   private val evtMatch: Q = (s, dir) =>
-    Tables.load(s, dir, "events")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")))
-      .filter(col("rn") <= 50)
-      .groupBy("user_id")
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(col("ts"), col("event_id"),
-            col("event_type")))),
-          x => substring(x.getField("event_type"), 1, 1)), "").as("seq"))
+    userSequences(s, dir, "seq", "")(t => substring(t, 1, 1))
       .select(
         length(col("seq")).cast("long").as("len"),
         regexp_count(col("seq"), lit("v[^p]*p")).cast("long")
@@ -1152,8 +1153,8 @@ object PipelineQueries {
     * = 3 numbers); scores are exact quartiles over (metric, user_id) —
     * total order, so quartile boundaries are deterministic on both
     * engines. Each quartile comes from a DISTRIBUTED global rank
-    * ([[graft.ops.PrefixSweep]]: range-partition + per-partition
-    * row_number + broadcast offsets) fed into the closed-form ntile
+    * ([[graft.ops.Relational.globalRowNumber]]: range-partition +
+    * per-partition counts + local indices) fed into the closed-form ntile
     * bucket formula — no single-partition sort at any user count;
     * beyond exactness requirements, approx-quantile cut points
     * broadcast back (the q_evt_anomaly shape) trade boundary ties for
@@ -1172,19 +1173,17 @@ object PipelineQueries {
     // three DISTRIBUTED global ranks + the closed-form ntile bucket
     // formula — the entity-grain sorts never single-partition; each
     // order is total via the user_id tiebreak. r19: the three
-    // per-metric sweeps fold into ONE PrefixSweep over the 3n-row
-    // metric union — each metric's descending order is encoded as an
-    // ascending exact decimal (negated micros / count / cents, all
-    // lossless in decimal(38,6)), blocks are contiguous in
+    // per-metric ranks fold into ONE global row numbering over the
+    // 3n-row metric union — each metric's descending order is encoded
+    // as an ascending exact decimal (negated micros / count / cents,
+    // all lossless in decimal(38,6)), blocks are contiguous in
     // (metric_id, enc, user_id) order and each holds exactly n rows,
-    // so per-metric rank = global rank − (metric_id − 1)·n. One range
-    // shuffle + one offsets pass instead of three chained sweeps
-    // (~2/3 of this query's r19 quiet cost was the sweep-chain job
-    // floor); ranks — and therefore ntile buckets — are unchanged.
+    // so per-metric rank = global rank − (metric_id − 1)·n, and n is
+    // a third of the numbering's row count. One range shuffle + one
+    // offsets pass instead of three chained ones; ranks — and
+    // therefore ntile buckets — are unchanged.
     import graft.ops.PrefixSweep
-    val uc = u.localCheckpoint()
-    val nTot = uc.agg(count(lit(1)).as("n_u"))
-    val tall = uc.select(col("user_id"), col("monetary_d"), explode(array(
+    val tall = u.select(col("user_id"), col("monetary_d"), explode(array(
         struct(lit(1).as("m"),
           (-unix_micros(col("last_ts"))).cast("decimal(38,6)").as("enc")),
         struct(lit(2).as("m"),
@@ -1194,21 +1193,21 @@ object PipelineQueries {
         .as("e"))
       .select(col("user_id"), col("monetary_d"),
         col("e.m").as("m"), col("e.enc").as("enc"))
-    val swept = PrefixSweep.sweep(tall,
-      Seq(col("m"), col("enc"), col("user_id")), Some("grk"))
-    val ranked = swept.crossJoin(broadcast(nTot))
-      .withColumn("rk", col("grk") - (col("m") - 1).cast("long") * col("n_u"))
+    val (swept, n3) = graft.ops.Relational.globalRowNumberWithCount(tall,
+      Seq(col("m"), col("enc"), col("user_id")), "grk")
+    val nU = lit(n3 / 3)
+    val ranked = swept
+      .withColumn("rk", col("grk") - (col("m") - 1).cast("long") * nU)
       .groupBy("user_id")
       .agg(max(when(col("m") === 1, col("rk"))).as("rrnk"),
         max(when(col("m") === 2, col("rk"))).as("frnk"),
         max(when(col("m") === 3, col("rk"))).as("mrnk"),
-        max(col("monetary_d")).as("monetary_d"),
-        max(col("n_u")).as("n_u"))
+        max(col("monetary_d")).as("monetary_d"))
     ranked
       .select(col("user_id"),
-        PrefixSweep.ntileOf(col("rrnk"), col("n_u"), 4).as("r_score"),
-        PrefixSweep.ntileOf(col("frnk"), col("n_u"), 4).as("f_score"),
-        PrefixSweep.ntileOf(col("mrnk"), col("n_u"), 4).as("m_score"),
+        PrefixSweep.ntileOf(col("rrnk"), nU, 4).as("r_score"),
+        PrefixSweep.ntileOf(col("frnk"), nU, 4).as("f_score"),
+        PrefixSweep.ntileOf(col("mrnk"), nU, 4).as("m_score"),
         col("monetary_d").cast("double").as("monetary"))
       .withColumn("segment",
         concat(col("r_score").cast("string"), col("f_score").cast("string"),
@@ -1801,7 +1800,7 @@ object PipelineQueries {
     * TOTAL order (n_events, user_id), identical both engines; all
     * rates are integer ratios via shared closed forms, uplift rounds
     * once. Shape: one per-user map-side collapse, then a DISTRIBUTED
-    * global rank over the user grid (PrefixSweep — the user table is
+    * global rank over the user grid (globalRowNumber — the user table is
     * entity-grain and grows with users, so the old unpartitioned
     * ntile window was the scale bottleneck) + the closed-form ntile
     * bucket formula, a 5-row grid readout. */
@@ -1810,17 +1809,14 @@ object PipelineQueries {
     val u = Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_ev"),
-        max(when(col("event_type") === "purchase" &&
-          col("value") > 90, 1).otherwise(0)).as("y"))
+        AggQueries.highValueConv.as("y"))
       .withColumn("arm", col("user_id") % 2)
-    val ranked = PrefixSweep.sweep(u,
-      Seq(col("n_ev"), col("user_id")), Some("rnk"))
-    // count from the sweep output: it re-reads the sweep's internal
-    // localCheckpoint, not the events corpus (one corpus pass total)
-    val nTot = ranked.agg(count(lit(1)).as("n_u"))
-    val users = ranked.crossJoin(broadcast(nTot))
+    // the numbering's offsets job also counts the users
+    val (ranked, nU) = graft.ops.Relational.globalRowNumberWithCount(u,
+      Seq(col("n_ev"), col("user_id")), "rnk")
+    val users = ranked
       .withColumn("quintile",
-        PrefixSweep.ntileOf(col("rnk"), col("n_u"), 5).cast("int"))
+        PrefixSweep.ntileOf(col("rnk"), lit(nU), 5).cast("int"))
     users.groupBy("quintile")
       .agg(
         count(when(col("arm") === 1, 1)).as("n_t"),
@@ -2405,6 +2401,62 @@ object PipelineQueries {
       .orderBy("wk")
   }
 
+  /** Non-anonymous events (user_id, d, event_type, value) with the
+    * span's pre/post split day `mid` ([[AggQueries.withMidSpan]]) —
+    * the input of the CUPED experiment readouts (q_evt_cuped,
+    * q_pipe_abtest). */
+  private def prePostEvents(s: SparkSession, dir: String): DataFrame =
+    AggQueries.withMidSpan(Tables.load(s, dir, "events")
+      .filter(col("user_id").isNotNull)
+      .select(col("user_id"), to_date(col("ts")).as("d"),
+        col("event_type"), col("value")))
+
+  /** The per-user CUPED pair over [[prePostEvents]]: `pre` = events
+    * before the split (the covariate), `post` = purchase value from
+    * the split on (the outcome, exact decimal, 0 for none). */
+  private val prePost: Seq[Column] = Seq(
+    count(when(col("d") < col("mid"), 1)).as("pre"),
+    coalesce(sum(when(col("d") >= col("mid") &&
+        col("event_type") === "purchase",
+        col("value").cast("decimal(18,2)"))),
+      lit(java.math.BigDecimal.ZERO).cast("decimal(18,2)"))
+      .as("post"))
+
+  /** CUPED's pooled terms over a per-user (pre, post) table, one row:
+    * mp = mean(pre), theta = cov(pre, post)/var(pre) and rho2 =
+    * cov²/(var(pre)·var(post)), all from decimal power sums through
+    * shared closed forms. try_divide: a constant covariate or outcome
+    * gives NULL theta/rho2, not an ANSI divide error. */
+  private def cupedPooled(users: DataFrame): DataFrame =
+    users.agg(count(lit(1)).as("nn"),
+        expr("CAST(sum(pre) AS DOUBLE)").as("tsp"),
+        expr("CAST(sum(post) AS DOUBLE)").as("tso"),
+        expr("CAST(sum(CAST(pre AS DECIMAL(18,0)) * pre) AS DOUBLE)")
+          .as("spp"),
+        // post narrows to (14,2) before squaring (r16 advisor note):
+        // the square is (29,4), leaving its sum 9 integer digits of
+        // headroom inside precision 38 — the raw (18,2) square summed
+        // at (38,4) could overflow to NULL at large SF. Exact while
+        // one user's purchase sum < 10^12 (per-event value ≤ 600).
+        expr("CAST(sum(CAST(post AS DECIMAL(14,2)) * " +
+          "CAST(post AS DECIMAL(14,2))) AS DOUBLE)").as("soo"),
+        expr("CAST(sum(CAST(pre AS DECIMAL(19,0)) * post) AS DOUBLE)")
+          .as("spo"))
+      .withColumn("mp", col("tsp") / col("nn"))
+      .withColumn("vpre",
+        (col("spp") - col("tsp") * col("tsp") / col("nn")) /
+          (col("nn") - 1))
+      .withColumn("vpost",
+        (col("soo") - col("tso") * col("tso") / col("nn")) /
+          (col("nn") - 1))
+      .withColumn("cv2",
+        (col("spo") - col("tsp") * col("tso") / col("nn")) /
+          (col("nn") - 1))
+      .withColumn("theta", try_divide(col("cv2"), col("vpre")))
+      .withColumn("rho2", try_divide(col("cv2") * col("cv2"),
+        col("vpre") * col("vpost")))
+      .select("mp", "theta", "rho2")
+
   /** q_evt_cuped — CUPED variance reduction for the parity experiment:
     * pre-period activity (event count before the span midpoint — the
     * q_agg_ttest_paired half-split device) is the covariate; the
@@ -2421,51 +2473,16 @@ object PipelineQueries {
     * through shared closed forms. Shape: one per-user contraction,
     * 2-row arm grid + 1-row pooled broadcast. */
   private val evtCuped: Q = (s, dir) => {
-    val ev = Tables.load(s, dir, "events")
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id"), to_date(col("ts")).as("d"),
-        col("event_type"), col("value"))
-    val span = ev.agg(min("d").as("d0"), max("d").as("d1"))
-      .select(date_add(col("d0"),
-        floor(datediff(col("d1"), col("d0")) / 2).cast("int")).as("mid"))
-    val users = ev.crossJoin(broadcast(span))
+    val users = prePostEvents(s, dir)
       .groupBy("user_id")
-      .agg(count(when(col("d") < col("mid"), 1)).as("pre"),
-        coalesce(sum(when(col("d") >= col("mid") &&
-            col("event_type") === "purchase",
-            col("value").cast("decimal(18,2)"))),
-          lit(java.math.BigDecimal.ZERO).cast("decimal(18,2)"))
-          .as("post"))
+      .agg(prePost.head, prePost.tail: _*)
       .withColumn("arm", col("user_id") % 2)
-    val pooled = users.agg(count(lit(1)).as("n"),
-        expr("CAST(sum(pre) AS DOUBLE)").as("sp"),
-        expr("CAST(sum(post) AS DOUBLE)").as("so"),
-        expr("CAST(sum(CAST(pre AS DECIMAL(18,0)) * pre) AS DOUBLE)")
-          .as("spp"),
-        // post narrows to (14,2) before squaring (r16 advisor note):
-        // the square is (29,4), leaving its sum 9 integer digits of
-        // headroom inside precision 38 — the raw (18,2) square summed
-        // at (38,4) could overflow to NULL at large SF. Exact while
-        // one user's purchase sum < 10^12 (per-event value ≤ 600).
-        expr("CAST(sum(CAST(post AS DECIMAL(14,2)) * " +
-          "CAST(post AS DECIMAL(14,2))) AS DOUBLE)").as("soo"),
-        expr("CAST(sum(CAST(pre AS DECIMAL(19,0)) * post) AS DOUBLE)")
-          .as("spo"))
-      .withColumn("mp", col("sp") / col("n"))
-      .withColumn("vpre", (col("spp") - col("sp") * col("sp") / col("n"))
-        / (col("n") - 1))
-      .withColumn("vpost", (col("soo") - col("so") * col("so") / col("n"))
-        / (col("n") - 1))
-      .withColumn("cov", (col("spo") - col("sp") * col("so") / col("n"))
-        / (col("n") - 1))
-      .withColumn("theta", col("cov") / col("vpre"))
-      .withColumn("rho2",
-        col("cov") * col("cov") / (col("vpre") * col("vpost")))
+    val pooled = cupedPooled(users)
     users.groupBy("arm")
       .agg(count(lit(1)).as("n_arm"),
         expr("CAST(sum(pre) AS DOUBLE)").as("sp_a"),
         expr("CAST(sum(post) AS DOUBLE)").as("so_a"))
-      .crossJoin(broadcast(pooled.select("mp", "theta", "rho2")))
+      .crossJoin(broadcast(pooled))
       .select(col("arm").cast("long").as("arm"),
         col("n_arm").cast("long").as("n_users"),
         round(col("so_a") / col("n_arm"), 4).as("mean_post"),
@@ -2672,26 +2689,11 @@ object PipelineQueries {
     * scan + one localCheckpointed user table; everything downstream
     * is 2-row arm grids. */
   private val pipeAbtest: Q = (s, dir) => {
-    val ev = Tables.load(s, dir, "events")
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id"), to_date(col("ts")).as("d"),
-        col("event_type"), col("value"))
-    val span = ev.agg(min("d").as("d0"), max("d").as("d1"))
-      .select(date_add(col("d0"),
-        floor(datediff(col("d1"), col("d0")) / 2).cast("int")).as("mid"))
-    val users = ev.crossJoin(broadcast(span))
+    val users = prePostEvents(s, dir)
       .groupBy("user_id")
-      .agg(
-        max(when(col("event_type") === "purchase" &&
-          col("value") > 90, 1).otherwise(0)).as("conv"),
-        count(when(col("d") < col("mid"), 1)).as("pre"),
-        coalesce(sum(when(col("d") >= col("mid") &&
-            col("event_type") === "purchase",
-            col("value").cast("decimal(18,2)"))),
-          lit(java.math.BigDecimal.ZERO).cast("decimal(18,2)"))
-          .as("post"),
+      .agg(AggQueries.highValueConv.as("conv"), prePost ++ Seq(
         count(when(col("event_type") === "error", 1)).as("ne"),
-        countDistinct(col("d")).as("nd"))
+        countDistinct(col("d")).as("nd")): _*)
       .withColumn("arm", col("user_id") % 2)
       .localCheckpoint()
     val arms = users.groupBy("arm")
@@ -2712,35 +2714,7 @@ object PipelineQueries {
       sum(when(col("arm") === 0, col("er"))).as("erc"),
       sum(when(col("arm") === 1, col("pd"))).as("pdt"),
       sum(when(col("arm") === 0, col("pd"))).as("pdc"))
-    val pooled = users.agg(count(lit(1)).as("nn"),
-        expr("CAST(sum(pre) AS DOUBLE)").as("tsp"),
-        expr("CAST(sum(post) AS DOUBLE)").as("tso"),
-        expr("CAST(sum(CAST(pre AS DECIMAL(18,0)) * pre) AS DOUBLE)")
-          .as("spp"),
-        // post narrows to (14,2) before squaring (r16 advisor note):
-        // the square is (29,4), leaving its sum 9 integer digits of
-        // headroom inside precision 38 — the raw (18,2) square summed
-        // at (38,4) could overflow to NULL at large SF. Exact while
-        // one user's purchase sum < 10^12 (per-event value ≤ 600).
-        expr("CAST(sum(CAST(post AS DECIMAL(14,2)) * " +
-          "CAST(post AS DECIMAL(14,2))) AS DOUBLE)").as("soo"),
-        expr("CAST(sum(CAST(pre AS DECIMAL(19,0)) * post) AS DOUBLE)")
-          .as("spo"))
-      .withColumn("mp", col("tsp") / col("nn"))
-      .withColumn("vpre",
-        (col("spp") - col("tsp") * col("tsp") / col("nn")) /
-          (col("nn") - 1))
-      .withColumn("vpost",
-        (col("soo") - col("tso") * col("tso") / col("nn")) /
-          (col("nn") - 1))
-      .withColumn("cv2",
-        (col("spo") - col("tsp") * col("tso") / col("nn")) /
-          (col("nn") - 1))
-      .withColumn("theta", try_divide(col("cv2"), col("vpre")))
-      .withColumn("rho2", try_divide(col("cv2") * col("cv2"),
-        col("vpre") * col("vpost")))
-    val base = a.crossJoin(broadcast(pooled
-      .select("mp", "theta", "rho2")))
+    val base = a.crossJoin(broadcast(cupedPooled(users)))
     val ntD = col("nt").cast("double"); val ncD = col("nc").cast("double")
     val pt = col("ct").cast("double") / ntD
     val pc = col("cc").cast("double") / ncD

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Schemas, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** §2.A scans / sources / sinks. The sink operators are registered as
@@ -531,17 +531,26 @@ object SourceQueries {
     * parts, or zstd/bzip2 if re-compression is allowed. */
   private val srcCsvGzip: Q = (s, dir) => {
     val path = csvGzipFixture(s, dir)
-    s.read.schema("event_id LONG, user_id LONG, event_type STRING, " +
-        "value DOUBLE")
-      .option("header", "true").csv(path)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("n_users"),
-        min("event_id").as("min_id"), max("event_id").as("max_id"),
-        expr("CAST(round(sum(CAST(value AS DECIMAL(18,2))), 4) AS DOUBLE)")
-          .as("sum_value"))
-      .orderBy(col("event_type").asc_nulls_first)
+    eventTypeCensus(
+      s.read.schema(eventSchema).option("header", "true").csv(path),
+      min("event_id").as("min_id"), max("event_id").as("max_id"))
   }
+
+  /** The typed events columns the CSV and XML fixtures carry. */
+  private val eventSchema =
+    "event_id LONG, user_id LONG, event_type STRING, value DOUBLE"
+
+  /** The per-event_type readout the events-format scans share (q_src_csv,
+    * q_src_csv_gzip, q_src_xml): rows n, distinct users n_users, any
+    * `extra` aggregates, then the exact decimal value sum, ordered by
+    * type. */
+  private def eventTypeCensus(df: DataFrame, extra: Column*): DataFrame =
+    df.groupBy("event_type")
+      .agg(count(lit(1)).as("n"),
+        (countDistinct(col("user_id")).as("n_users") +: extra :+
+          expr("CAST(round(sum(CAST(value AS DECIMAL(18,2))), 4) AS DOUBLE)")
+            .as("sum_value")): _*)
+      .orderBy(col("event_type").asc_nulls_first)
 
   /** Multiline-CSV fixture: documents with a deterministic newline
     * injection (every " a " becomes "\na " — length-preserving), so
@@ -584,15 +593,8 @@ object SourceQueries {
 
   private val srcCsv: Q = (s, dir) => {
     val path = csvFixture(s, dir)
-    s.read.schema("event_id LONG, user_id LONG, event_type STRING, " +
-        "value DOUBLE")
-      .option("header", "true").csv(path)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("n_users"),
-        expr("CAST(round(sum(CAST(value AS DECIMAL(18,2))), 4) AS DOUBLE)")
-          .as("sum_value"))
-      .orderBy(col("event_type").asc_nulls_first)
+    eventTypeCensus(
+      s.read.schema(eventSchema).option("header", "true").csv(path))
   }
 
   /** q_src_xml — XML scan through Spark 4's native xml source
@@ -604,15 +606,8 @@ object SourceQueries {
     * readout as the CSV/NDJSON twins, so the oracle is shared. */
   private val srcXml: Q = (s, dir) => {
     val path = xmlFixture(s, dir)
-    s.read.schema("event_id LONG, user_id LONG, event_type STRING, " +
-        "value DOUBLE")
-      .option("rowTag", "event").format("xml").load(path)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("n_users"),
-        expr("CAST(round(sum(CAST(value AS DECIMAL(18,2))), 4) AS DOUBLE)")
-          .as("sum_value"))
-      .orderBy(col("event_type").asc_nulls_first)
+    eventTypeCensus(s.read.schema(eventSchema)
+      .option("rowTag", "event").format("xml").load(path))
   }
 
   /** q_src_orc — ORC columnar scan ([[orcFixture]]): the second
@@ -715,13 +710,17 @@ object SourceQueries {
         ']')""").as("value"))
       .repartition(1)
       .write.mode("overwrite").text(out)
-    s.read.option("multiLine", "true").json(out)
-      .groupBy("n_regionkey")
+    nationsByRegion(s.read.option("multiLine", "true").json(out))
+  }
+
+  /** The per-region rollup the nation round-trips must reproduce from
+    * their read-back (q_src_json_multiline, q_src_fixed_width). */
+  private def nationsByRegion(nations: DataFrame): DataFrame =
+    nations.groupBy("n_regionkey")
       .agg(count(lit(1)).as("n_nations"),
         min("n_name").as("first_name"),
         max("n_nationkey").as("max_key"))
       .orderBy("n_regionkey")
-  }
 
   /** q_src_csv_dialect — non-default CSV dialect round-trip:
     * semicolon delimiter, quoted fields, explicit header, and a
@@ -775,18 +774,13 @@ object SourceQueries {
         rpad(col("n_name"), 20, " "),
         rpad(col("n_regionkey").cast("string"), 4, " ")).as("value"))
       .write.mode("overwrite").text(out)
-    s.read.text(out)
+    nationsByRegion(s.read.text(out)
       .select(
         trim(substring(col("value"), 1, 6)).cast("long")
           .as("n_nationkey"),
         trim(substring(col("value"), 7, 20)).as("n_name"),
         trim(substring(col("value"), 27, 4)).cast("long")
-          .as("n_regionkey"))
-      .groupBy("n_regionkey")
-      .agg(count(lit(1)).as("n_nations"),
-        min("n_name").as("first_name"),
-        max("n_nationkey").as("max_key"))
-      .orderBy("n_regionkey")
+          .as("n_regionkey")))
   }
 
   val all: Map[String, Q] = Map(

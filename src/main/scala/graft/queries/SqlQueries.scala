@@ -19,6 +19,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SqlQueries {
   type Q = (SparkSession, String) => DataFrame
 
+  /** `spark.sql(text)` over `views`: each (key, frame) is registered as
+    * a temp view under a name unique to this call, which replaces
+    * `{key}` in `text`, and every view is dropped again once the query
+    * is analyzed (the returned plan holds the frames themselves). So a
+    * call leaves the session's views as it found them, and two
+    * concurrent calls over different dirs can never resolve each
+    * other's inputs, as a fixed session-global name would let them. */
+  private[graft] def sqlOver(s: SparkSession, views: (String, DataFrame)*)(
+      text: String): DataFrame = {
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
+    val names = views.map { case (key, _) => key -> s"${key}_$tag" }
+    try {
+      views.zip(names).foreach { case ((_, df), (_, name)) =>
+        df.createOrReplaceTempView(name)
+      }
+      s.sql(names.foldLeft(text) { case (t, (key, name)) =>
+        t.replace(s"{$key}", name)
+      })
+    } finally names.foreach { case (_, name) => s.catalog.dropTempView(name) }
+  }
+
   /** q_sql_report — a full analyst-shaped report through `spark.sql`:
     * CTE + 3-table join + decimal-exact revenue + per-segment window
     * rank, the shape an ORM-emitted dashboard query takes (ref: the
@@ -27,8 +48,8 @@ object SqlQueries {
     * across orders — before the one cast to double (§7.5.2: a double
     * sum is partition-order-dependent; the exact fold means the
     * window's ORDER BY revenue is over exact values and rank ties are
-    * engine-identical). Temp views are
-    * session-scoped and re-registered per call — no global state.
+    * engine-identical). Its inputs reach the SQL as temp views
+    * registered and dropped per call ([[sqlOver]]) — no global state.
     * Scale: lineitem is CONTRACTED to one decimal revenue row per
     * orderkey BEFORE any join — the widest table shrinks ~4× at the
     * scan, the orderkey join carries order-sized rows, and `n_orders`
@@ -40,9 +61,6 @@ object SqlQueries {
     * joins that AQE can re-plan, a two-phase aggregate on (segment,
     * yr, qtr), and a k-row window. */
   private val sqlReport: Q = (s, dir) => {
-    Tables.load(s, dir, "lineitem").createOrReplaceTempView("sqlr_lineitem")
-    Tables.load(s, dir, "orders").createOrReplaceTempView("sqlr_orders")
-    Tables.load(s, dir, "customer").createOrReplaceTempView("sqlr_customer")
     // r20 exact-integer restatement of the per-lineitem revenue term
     // (§7.5.21, the q_math_arith device). Equivalence: price and
     // discount are exact 2-dp money values, so with p = price·100 and
@@ -56,13 +74,15 @@ object SqlQueries {
     // cast are bit-identical. What moved: 6×-the-order-count rows of
     // Decimal128 casts/multiplies in the widest scan became ~5 long
     // ops per row; the group-grain decimal work is untouched.
-    s.sql(
+    sqlOver(s, "lineitem" -> Tables.load(s, dir, "lineitem"),
+        "orders" -> Tables.load(s, dir, "orders"),
+        "customer" -> Tables.load(s, dir, "customer"))(
       """WITH lrev AS (
            SELECT l_orderkey,
                   sum(CAST(l_extendedprice * 100 + 0.5 AS BIGINT)
                       * (100 - CAST(l_discount * 100 + 0.5 AS BIGINT)))
                     AS orev4
-           FROM sqlr_lineitem
+           FROM {lineitem}
            GROUP BY l_orderkey),
          rev AS (
            SELECT c.c_mktsegment AS segment,
@@ -72,8 +92,8 @@ object SqlQueries {
                              2) AS DOUBLE) AS revenue,
                   CAST(count(*) AS BIGINT) AS n_orders
            FROM lrev l
-           JOIN sqlr_orders o ON l.l_orderkey = o.o_orderkey
-           JOIN sqlr_customer c ON o.o_custkey = c.c_custkey
+           JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+           JOIN {customer} c ON o.o_custkey = c.c_custkey
            GROUP BY 1, 2, 3)
          SELECT segment, yr, qtr, revenue, n_orders,
                 CAST(rank() OVER (PARTITION BY segment
@@ -99,11 +119,10 @@ object SqlQueries {
     * shrinks as chains terminate, and the union of levels never
     * materializes on the driver. */
   private val sqlRecursive: Q = (s, dir) => {
-    Tables.load(s, dir, "customer").createOrReplaceTempView("sqlrec_customer")
-    s.sql(
+    sqlOver(s, "customer" -> Tables.load(s, dir, "customer"))(
       """WITH RECURSIVE chain (node, cur, depth) AS (
            SELECT c_custkey AS node, c_custkey AS cur, 0 AS depth
-           FROM sqlrec_customer
+           FROM {customer}
            UNION ALL
            SELECT node, cur DIV 2, depth + 1 FROM chain WHERE cur > 1)
          SELECT CAST(depth AS BIGINT) AS chain_len,
@@ -126,13 +145,12 @@ object SqlQueries {
     * DuckDB evaluates the identical ANSI lateral; `o_orderkey` breaks
     * price ties deterministically (§7.5). */
   private val sqlLateral: Q = (s, dir) => {
-    Tables.load(s, dir, "customer").createOrReplaceTempView("sqll_customer")
-    Tables.load(s, dir, "orders").createOrReplaceTempView("sqll_orders")
-    s.sql(
+    sqlOver(s, "customer" -> Tables.load(s, dir, "customer"),
+        "orders" -> Tables.load(s, dir, "orders"))(
       """SELECT c.c_custkey AS cust_id, c.c_mktsegment AS segment,
                 t.o_orderkey, t.o_totalprice
-         FROM sqll_customer c, LATERAL (
-           SELECT o_orderkey, o_totalprice FROM sqll_orders o
+         FROM {customer} c, LATERAL (
+           SELECT o_orderkey, o_totalprice FROM {orders} o
            WHERE o.o_custkey = c.c_custkey
            ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
          ORDER BY cust_id, t.o_orderkey""")
@@ -147,15 +165,14 @@ object SqlQueries {
     * so AQE can reuse the orders exchange; no correlated re-execution
     * survives optimization. */
   private val sqlExists: Q = (s, dir) => {
-    Tables.load(s, dir, "customer").createOrReplaceTempView("sqle_customer")
-    Tables.load(s, dir, "orders").createOrReplaceTempView("sqle_orders")
-    s.sql(
+    sqlOver(s, "customer" -> Tables.load(s, dir, "customer"),
+        "orders" -> Tables.load(s, dir, "orders"))(
       """SELECT c_custkey AS cust_id, c_mktsegment AS segment
-         FROM sqle_customer c
-         WHERE EXISTS (SELECT 1 FROM sqle_orders o
+         FROM {customer} c
+         WHERE EXISTS (SELECT 1 FROM {orders} o
                        WHERE o.o_custkey = c.c_custkey
                        AND o.o_orderstatus = 'O')
-           AND NOT EXISTS (SELECT 1 FROM sqle_orders o
+           AND NOT EXISTS (SELECT 1 FROM {orders} o
                            WHERE o.o_custkey = c.c_custkey
                            AND o.o_orderstatus = 'F')
          ORDER BY cust_id""")
@@ -171,16 +188,15 @@ object SqlQueries {
     * one value type); the decimal-exact sum rounds before the cast
     * (§7.5.2). */
   private val sqlUnpivot: Q = (s, dir) => {
-    Tables.load(s, dir, "customer").createOrReplaceTempView("sqlu_customer")
-    Tables.load(s, dir, "nation").createOrReplaceTempView("sqlu_nation")
-    s.sql(
+    sqlOver(s, "customer" -> Tables.load(s, dir, "customer"),
+        "nation" -> Tables.load(s, dir, "nation"))(
       """WITH w AS (
            SELECT n_name,
                   CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2)
                     AS DOUBLE) AS sum_bal,
                   CAST(count(*) AS DOUBLE) AS n_cust,
                   CAST(max(c_acctbal) AS DOUBLE) AS max_bal
-           FROM sqlu_customer JOIN sqlu_nation ON c_nationkey = n_nationkey
+           FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
            GROUP BY n_name)
          SELECT n_name, metric, val
          FROM w UNPIVOT (val FOR metric IN (sum_bal, n_cust, max_bal))

@@ -72,20 +72,28 @@ object StreamingQueries {
     * twin in StreamingSpec). Output is the (view, click) pair list with
     * the attribution latency in seconds — a total order on
     * (l_event_id, r_event_id). */
-  private val streamJoin: Q = (s, dir) => {
+  private val streamJoin: Q = (s, dir) => viewClicks(s, dir, "inner")
+
+  /** Views joined to same-user clicks within 30 minutes
+    * ([[Streaming.intervalJoin]] with `joinType`), as (view_id,
+    * click_id, user_id, delay_sec) ordered by (view_id, click_id),
+    * nulls first: q_stream_join (inner) and q_stream_left
+    * (left_outer). */
+  private def viewClicks(s: SparkSession, dir: String,
+                         joinType: String): DataFrame = {
     val ev = Tables.load(s, dir, "events")
       .select("event_id", "user_id", "event_type", "ts")
     Streaming.intervalJoin(
         ev.filter(col("event_type") === "view"),
         ev.filter(col("event_type") === "click"),
-        "user_id", "30 minutes")
+        "user_id", "30 minutes", joinType = joinType)
       .select(col("l_event_id").as("view_id"),
         col("r_event_id").as("click_id"),
         col("l_user_id").as("user_id"),
         // `div` (integral): Column./ would promote to double
         expr("(unix_micros(r_ts) - unix_micros(l_ts)) div 1000000")
           .as("delay_sec"))
-      .orderBy("view_id", "click_id")
+      .orderBy(col("view_id"), col("click_id").asc_nulls_first)
   }
 
   /** q_stream_enrich — stream-static enrichment join
@@ -109,7 +117,7 @@ object StreamingQueries {
   }
 
   /** q_stream_left — stream-stream LEFT OUTER interval join
-    * ([[Streaming.intervalJoinOuter]]), batch shadow: over the complete
+    * ([[Streaming.intervalJoin]], left_outer), batch shadow: over the complete
     * corpus the watermark has (conceptually) passed every event, so
     * every "proven unmatched" view has been emitted with nulls and the
     * batch left-outer result IS the stream's converged output — the
@@ -117,20 +125,8 @@ object StreamingQueries {
     * incremental half (matched rows emit early, unmatched only after
     * the watermark passes l_ts + window) stays pinned in
     * StreamingSpec's MemoryStream test. */
-  private val streamLeft: Q = (s, dir) => {
-    val ev = Tables.load(s, dir, "events")
-      .select("event_id", "user_id", "event_type", "ts")
-    Streaming.intervalJoinOuter(
-        ev.filter(col("event_type") === "view"),
-        ev.filter(col("event_type") === "click"),
-        "user_id", "30 minutes")
-      .select(col("l_event_id").as("view_id"),
-        col("r_event_id").as("click_id"),
-        col("l_user_id").as("user_id"),
-        expr("(unix_micros(r_ts) - unix_micros(l_ts)) div 1000000")
-          .as("delay_sec"))
-      .orderBy(col("view_id"), col("click_id").asc_nulls_first)
-  }
+  private val streamLeft: Q = (s, dir) =>
+    viewClicks(s, dir, "left_outer")
 
   /** q_stream_cdc — changelog application ([[Streaming.cdcApplyStream]]),
     * batch shadow at the final-state level: the processor folds ops in

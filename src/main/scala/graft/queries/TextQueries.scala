@@ -777,6 +777,25 @@ object TextQueries {
         min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
       .orderBy("split")
 
+  /** Decimal-exact mean embedding per group of `keys` (named columns
+    * of `emb`; none: one global centroid), as (keys…, cvec): each
+    * dimension is one exact decimal sum divided once by its count, so
+    * the centroid is summation-order-free on both engines, and the
+    * array is assembled distributed (sort_array over (pos, c) structs
+    * — no driver collect). q_vec_ood, q_vec_drift (global) and
+    * q_vec_silhouette (per label). */
+  private def centroids(emb: DataFrame, keys: Column*): DataFrame = {
+    val names = keys.map(k => emb.select(k).columns.head)
+    emb.select(keys :+ posexplode(col("embedding")).as(Seq("pos", "x")): _*)
+      .groupBy((names :+ "pos").map(col): _*)
+      .agg((expr("CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)") /
+        count(lit(1))).as("c"))
+      .groupBy(names.map(col): _*)
+      .agg(
+        expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
+          .as("cvec"))
+  }
+
   /** q_vec_ood — out-of-distribution scoring: squared distance of
     * every embedding to the GLOBAL corpus centroid, top-20 — the
     * "far-from-manifold" filter a training-data pipeline runs to
@@ -794,15 +813,7 @@ object TextQueries {
     * one pass. */
   private val vecOod: Q = (s, dir) => {
     val emb = Tables.load(s, dir, "embeddings")
-    val cent = emb
-      .select(posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy("pos")
-      .agg((expr("CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)") /
-        count(lit(1))).as("c"))
-    val carr = cent.agg(
-      expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
-        .as("cvec"))
-    emb.crossJoin(broadcast(carr))
+    emb.crossJoin(broadcast(centroids(emb)))
       .withColumn("e", col("embedding").cast("array<double>"))
       .withColumn("ood", round(
         TextSim.dot(col("e"), col("e")) -
@@ -831,16 +842,8 @@ object TextQueries {
     * dots per row — no per-dimension float groupBy, no pair join. */
   private val vecSilhouette: Q = (s, dir) => {
     val emb = Tables.load(s, dir, "embeddings")
-    val cent = emb
-      .select(col("label").as("clab"),
-        posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy("clab", "pos")
-      .agg((expr("CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)") /
-        count(lit(1))).as("c"))
-    val carr = cent.groupBy("clab").agg(
-      expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
-        .as("cvec"))
-    val per = emb.crossJoin(broadcast(carr))
+    val per = emb.crossJoin(broadcast(
+        centroids(emb, col("label").as("clab"))))
       .withColumn("e", col("embedding").cast("array<double>"))
       .withColumn("d2",
         TextSim.dot(col("e"), col("e")) -
@@ -874,15 +877,7 @@ object TextQueries {
     * corpus pass after a k·dim broadcast. */
   private val vecDrift: Q = (s, dir) => {
     val emb = Tables.load(s, dir, "embeddings")
-    val cent = emb
-      .select(posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy("pos")
-      .agg((expr("CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE)") /
-        count(lit(1))).as("c"))
-    val carr = cent.agg(
-      expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
-        .as("cvec"))
-    emb.crossJoin(broadcast(carr))
+    emb.crossJoin(broadcast(centroids(emb)))
       .withColumn("e", col("embedding").cast("array<double>"))
       .withColumn("nrm", round(TextSim.l2Norm(col("e")), 6)
         .cast("decimal(20,6)"))
@@ -1385,22 +1380,22 @@ object TextQueries {
     * snapshots means new vocabulary arriving). q_text_zipf shows the
     * top-50 ranks; THIS integrates the curve at the decision points.
     * The vocabulary is corpus-grain (Heaps' law — it GROWS), so the
-    * rank over (freq DESC, term) runs as a DISTRIBUTED PrefixSweep,
-    * never a single-partition window; coverage = conditional integer
-    * sums / total, three shared divisions. */
+    * rank over (freq DESC, term) runs as a DISTRIBUTED global row
+    * numbering (which also counts the vocabulary), never a
+    * single-partition window; coverage = conditional integer sums /
+    * total, three shared divisions. */
   private val textVocabCoverage: Q = (s, dir) => {
     val counts = Tables.load(s, dir, "documents")
       .select(explode(split(lower(col("text")), " ")).as("term"))
       .filter(length(col("term")) > 0)
       .groupBy("term").agg(count(lit(1)).as("freq"))
-    val ranked = graft.ops.PrefixSweep.sweep(counts,
-      Seq(col("freq").desc, col("term")), Some("rnk"))
-    ranked.agg(count(lit(1)).as("vocab"),
-        sum("freq").as("tokens"),
+    val (ranked, vocab) = Relational.globalRowNumberWithCount(
+      counts, Seq(col("freq").desc, col("term")), "rnk")
+    ranked.agg(sum("freq").as("tokens"),
         sum(when(col("rnk") <= 10, col("freq"))).as("c10"),
         sum(when(col("rnk") <= 100, col("freq"))).as("c100"),
         sum(when(col("rnk") <= 1000, col("freq"))).as("c1000"))
-      .select(col("vocab").cast("long").as("vocab"),
+      .select(lit(vocab).as("vocab"),
         col("tokens").cast("long").as("tokens"),
         round(col("c10").cast("double") / col("tokens"), 4)
           .as("cov_top10"),
@@ -2898,6 +2893,47 @@ object TextQueries {
       .orderBy(col("source").asc_nulls_first)
   }
 
+  /** q_vec_mmd's K = 32 pseudo-random ±1 projections of the 64 dims:
+    * bit 16 of a multiplicative hash of (k, d), the same on every
+    * engine and run. */
+  private val mmdK = 32
+  private val mmdWeights: Seq[Seq[Long]] = (0 until mmdK).map { k =>
+    (0 until 64).map { d =>
+      val i = k.toLong * 64 + d
+      if (((i * 2654435761L) % 4294967296L) / 65536 % 2 == 0) 1L
+      else -1L
+    }
+  }
+
+  /** The 3-dp floor quantization of `embedding`, as longs. */
+  private def quantized: Column =
+    transform(col("embedding").cast("array<double>"),
+      x => floor(x * 1000).cast("long"))
+
+  /** The K integer signs sign(wₖ·qv) of the quantized vector `qv`
+    * (q_vec_mmd, q_pipe_embed_qa). */
+  private def mmdSigns: Column = array(mmdWeights.map { wk =>
+    val dot = aggregate(
+      zip_with(col("qv"), typedLit(wk), (x, w) => x * w),
+      lit(0L), (acc, x) => acc + x)
+    when(dot > 0, 1).when(dot < 0, -1).otherwise(0)
+  }: _*)
+
+  /** Per group of `g` (over rows of grp, sgn), each side's sign sum
+    * and count (s1/n1 where grp, s0/n0 where not) and the squared gap
+    * of the two mean signs rounded to an 8-dp decimal `term` — the
+    * per-feature MMD² term; an empty side gives NULL via try_divide. */
+  private def mmdTerms(g: org.apache.spark.sql.RelationalGroupedDataset)
+      : DataFrame = {
+    val gap = try_divide(col("s1").cast("double"), col("n1")) -
+      try_divide(col("s0").cast("double"), col("n0"))
+    g.agg(sum(when(col("grp"), col("sgn"))).as("s1"),
+        count(when(col("grp"), 1)).as("n1"),
+        sum(when(!col("grp"), col("sgn"))).as("s0"),
+        count(when(!col("grp"), 1)).as("n0"))
+      .withColumn("term", round(gap * gap, 8).cast("decimal(20,8)"))
+  }
+
   /** q_vec_mmd — kernel two-sample (MMD²) drift test between
     * embedding slices via SIGN random features: K=32 Rademacher
     * projections (±1 weights off a shared Knuth multiplicative hash,
@@ -2921,24 +2957,10 @@ object TextQueries {
     * expectation ((1/n_A+1/n_B)·Var(sign) ≤ (1/n_A+1/n_B)) — the
     * parity null sits ~10× under it, the label split ~2× over. */
   private val vecMmd: Q = (s, dir) => {
-    val nk = 32
-    val weights: Seq[Seq[Long]] = (0 until nk).map { k =>
-      (0 until 64).map { d =>
-        val i = k.toLong * 64 + d
-        if (((i * 2654435761L) % 4294967296L) / 65536 % 2 == 0) 1L
-        else -1L
-      }
-    }
+    val nk = mmdK
     val base = Tables.load(s, dir, "embeddings")
-      .withColumn("qv",
-        transform(col("embedding").cast("array<double>"),
-          x => floor(x * 1000).cast("long")))
-      .withColumn("sg", array(weights.map { wk =>
-        val dot = aggregate(
-          zip_with(col("qv"), typedLit(wk), (x, w) => x * w),
-          lit(0L), (acc, x) => acc + x)
-        when(dot > 0, 1).when(dot < 0, -1).otherwise(0)
-      }: _*))
+      .withColumn("qv", quantized)
+      .withColumn("sg", mmdSigns)
       .select(col("vec_id"), col("label"), col("sg"))
       // consumed by BOTH splits below — materialize the 32-sign rows
       // once instead of re-running the HOF tree per branch
@@ -2947,18 +2969,10 @@ object TextQueries {
         (col("vec_id") % 2 === 0).as("grp"), col("sg"))
       .unionAll(base.select(lit("label").as("split"),
         (col("label") < 5).as("grp"), col("sg")))
-    val g = splits
+    val terms = mmdTerms(splits
       .select(col("split"), col("grp"),
         posexplode(col("sg")).as(Seq("k", "sgn")))
-      .groupBy("split", "k")
-      .agg(sum(when(col("grp"), col("sgn"))).as("s1"),
-        count(when(col("grp"), 1)).as("n1"),
-        sum(when(!col("grp"), col("sgn"))).as("s0"),
-        count(when(!col("grp"), 1)).as("n0"))
-    val gap = try_divide(col("s1").cast("double"), col("n1")) -
-      try_divide(col("s0").cast("double"), col("n0"))
-    val terms = g.withColumn("term",
-      round(gap * gap, 8).cast("decimal(20,8)"))
+      .groupBy("split", "k"))
     terms.groupBy("split")
       .agg(max("n1").as("na"), max("n0").as("nb"),
         sum("term").as("st"))
@@ -3044,27 +3058,13 @@ object TextQueries {
     * sign grid 64 (split, k) rows, the dup census a quantized-key
     * two-phase count. */
   private val pipeEmbedQa: Q = (s, dir) => {
-    val nk = 32
-    val weights: Seq[Seq[Long]] = (0 until nk).map { k =>
-      (0 until 64).map { d =>
-        val i = k.toLong * 64 + d
-        if (((i * 2654435761L) % 4294967296L) / 65536 % 2 == 0) 1L
-        else -1L
-      }
-    }
+    val nk = mmdK
     val base = Tables.load(s, dir, "embeddings")
-      .withColumn("qv",
-        transform(col("embedding").cast("array<double>"),
-          x => floor(x * 1000).cast("long")))
+      .withColumn("qv", quantized)
       .withColumn("isZero",
         when(aggregate(col("qv"), lit(0L),
           (acc, x) => acc + abs(x)) === 0, 1).otherwise(0))
-      .withColumn("sg", array(weights.map { wk =>
-        val dot = aggregate(
-          zip_with(col("qv"), typedLit(wk), (x, w) => x * w),
-          lit(0L), (acc, x) => acc + x)
-        when(dot > 0, 1).when(dot < 0, -1).otherwise(0)
-      }: _*))
+      .withColumn("sg", mmdSigns)
       .select(col("vec_id"), col("label"), col("qv"), col("isZero"),
         col("sg"))
       .localCheckpoint()
@@ -3077,17 +3077,10 @@ object TextQueries {
       .agg(max(abs(round(col("sq").cast("double") /
         (col("c") * 1000), 4))).as("bias"))
     def mmdLeg(grpCol: org.apache.spark.sql.Column) = {
-      val g = base
-        .select(grpCol.as("grp"),
-          posexplode(col("sg")).as(Seq("k", "sgn")))
-        .groupBy("k")
-        .agg(sum(when(col("grp"), col("sgn"))).as("s1"),
-          count(when(col("grp"), 1)).as("n1"),
-          sum(when(!col("grp"), col("sgn"))).as("s0"),
-          count(when(!col("grp"), 1)).as("n0"))
-      val gap = try_divide(col("s1").cast("double"), col("n1")) -
-        try_divide(col("s0").cast("double"), col("n0"))
-      g.withColumn("term", round(gap * gap, 8).cast("decimal(20,8)"))
+      mmdTerms(base
+          .select(grpCol.as("grp"),
+            posexplode(col("sg")).as(Seq("k", "sgn")))
+          .groupBy("k"))
         .agg(max("n1").as("na"), max("n0").as("nb"),
           round(sum("term").cast("double") / nk, 6).as("mmd2"))
         .withColumn("thr", lit(2.0) *
@@ -3146,27 +3139,25 @@ object TextQueries {
     * census with realized rates (systematic sampling preserves
     * source mix to within one doc per stratum — the audit proves
     * it). Exactness: ranks, k, and the keep rule are pure integers.
-    * Scale: the global rank runs as a DISTRIBUTED PrefixSweep
-    * (doc_id is a total order — never a single-partition window);
-    * the census is a two-phase aggregate. */
+    * Scale: the global rank runs as a DISTRIBUTED global row
+    * numbering, which also counts the docs (doc_id is a total order —
+    * never a single-partition window); the census is a two-phase
+    * aggregate. */
   private val sampSystematic: Q = (s, dir) => {
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"))
-    val ranked = graft.ops.PrefixSweep.sweep(docs,
-      Seq(col("doc_id")), rankCol = Some("rnk"))
-    val tot = ranked.agg(count(lit(1)).as("n"))
-      .withColumn("k", greatest(lit(1L),
-        floor(col("n") / lit(100.0)).cast("long")))
-    ranked.crossJoin(broadcast(tot))
-      .withColumn("keep", (col("rnk") - 1) % col("k") === 0)
+    val (ranked, n) = Relational.globalRowNumberWithCount(docs,
+      Seq(col("doc_id")), "rnk")
+    val k = math.max(1L, n / 100)
+    ranked
+      .withColumn("keep", (col("rnk") - 1) % k === 0)
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        count(when(col("keep"), 1)).as("n_sampled"),
-        max("k").as("k"))
+        count(when(col("keep"), 1)).as("n_sampled"))
       .select(col("source"),
         col("n_docs").cast("long").as("n_docs"),
         col("n_sampled").cast("long").as("n_sampled"),
-        col("k").cast("long").as("k"),
+        lit(k).as("k"),
         round(col("n_sampled").cast("double") / col("n_docs"), 4)
           .as("realized_rate"))
       .orderBy(col("source").asc_nulls_first)

@@ -110,6 +110,41 @@ object TimeSeriesQueries {
       .orderBy(col("event_type").asc_nulls_first, col("d"))
   }
 
+  /** The lag-pair ACF terms of the daily event-count series per type,
+    * for lags k ∈ 1..maxLag (q_ts_autocorr, q_ts_ljung_box): one row
+    * per (event_type, k) with the pair count m, the series length n,
+    * and r_k's numerator `num` and denominator `den`, so r_k =
+    * num/den. Every SUM is over INTEGERS — Σy_t·y_{t+k} (s1),
+    * Σ(y_t+y_{t+k}) (s2), Σy² (ss) — and num = CAST(s1) − μ·s2 + m·μ·μ,
+    * den = CAST(ss) − n·μ·μ are closed-form doubles shared literally
+    * with the oracle. Pairs join on the calendar day d+k, so gap days
+    * pair with nothing. The series is localCheckpoint'd so its three
+    * readers (stats, both join sides) do not re-scan the corpus. */
+  private def lagPairs(s: SparkSession, dir: String,
+                       maxLag: Int): DataFrame = {
+    val daily = dailySeries(s, dir).localCheckpoint()
+    val stats = daily.groupBy("event_type")
+      .agg(sum("y").as("tot"), count(lit(1)).as("n"),
+        sum(col("y") * col("y")).as("ss"))
+    val lags = daily
+      .withColumn("k", explode(sequence(lit(1), lit(maxLag))))
+    val rhs = daily.select(col("event_type").as("et2"),
+      col("d").as("d2"), col("y").as("y2"))
+    lags.join(rhs,
+        col("event_type") === col("et2") &&
+          col("d2") === date_add(col("d"), col("k")))
+      .groupBy("event_type", "k")
+      .agg(sum(col("y") * col("y2")).as("s1"),
+        sum(col("y") + col("y2")).as("s2"),
+        count(lit(1)).as("m"))
+      .join(broadcast(stats), "event_type")
+      .withColumn("mu", col("tot").cast("double") / col("n"))
+      .withColumn("num", col("s1").cast("double") -
+        col("mu") * col("s2") + col("m") * col("mu") * col("mu"))
+      .withColumn("den", col("ss").cast("double") -
+        col("n") * col("mu") * col("mu"))
+  }
+
   /** q_ts_autocorr — ACF at lags 1..7 of the daily event-count series
     * per type: r_k = Σ_{t≤n−k}(y_t−μ)(y_{t+k}−μ) / Σ(y_t−μ)² — the
     * "is there a weekly cycle" diagnostic that justifies
@@ -124,27 +159,7 @@ object TimeSeriesQueries {
     * k ∈ 1..7); the series is localCheckpoint'd so its three readers
     * (stats, both join sides) do not re-scan the corpus. */
   private val tsAutocorr: Q = (s, dir) => {
-    val daily = dailySeries(s, dir).localCheckpoint()
-    val stats = daily.groupBy("event_type")
-      .agg(sum("y").as("tot"), count(lit(1)).as("n"),
-        sum(col("y") * col("y")).as("ss"))
-    val lags = daily
-      .withColumn("k", explode(sequence(lit(1), lit(7))))
-    val rhs = daily.select(col("event_type").as("et2"),
-      col("d").as("d2"), col("y").as("y2"))
-    val pairs = lags.join(rhs,
-      col("event_type") === col("et2") &&
-        col("d2") === date_add(col("d"), col("k")))
-    pairs.groupBy("event_type", "k")
-      .agg(sum(col("y") * col("y2")).as("s1"),
-        sum(col("y") + col("y2")).as("s2"),
-        count(lit(1)).as("m"))
-      .join(broadcast(stats), "event_type")
-      .withColumn("mu", col("tot").cast("double") / col("n"))
-      .withColumn("num", col("s1").cast("double") -
-        col("mu") * col("s2") + col("m") * col("mu") * col("mu"))
-      .withColumn("den", col("ss").cast("double") -
-        col("n") * col("mu") * col("mu"))
+    lagPairs(s, dir, 7)
       .select(col("event_type"), col("k"), col("m"),
         round(try_divide(col("num"), col("den")), 4).as("acf"))
       .orderBy(col("event_type").asc_nulls_first, col("k"))
@@ -634,6 +649,34 @@ object TimeSeriesQueries {
       .orderBy(col("event_type").asc_nulls_first)
   }
 
+  /** The first 10 Fourier harmonics of each type's mean-centered
+    * daily series (q_ts_periodogram, q_ts_spectral_entropy): one row
+    * per (event_type, k, n) with the cosine and sine sums sc, ss over
+    * the series' n observed days. Each term ydev·cos/sin(2πkt/n)
+    * rounds the trig value and then the product to 8 dp and sums as
+    * a decimal, so the folds are engine-identical. */
+  private def harmonicSums(s: SparkSession, dir: String): DataFrame = {
+    val base = dailySeries(s, dir)
+    val w = Window.partitionBy("event_type").orderBy("d")
+    val ts = base
+      .withColumn("t", row_number().over(w) - lit(1))
+      .withColumn("n", count(lit(1))
+        .over(Window.partitionBy("event_type")))
+      .withColumn("ybar", sum("y")
+        .over(Window.partitionBy("event_type")).cast("double") / col("n"))
+      .withColumn("ydev", col("y") - col("ybar"))
+    val grid = ts
+      .withColumn("k", explode(sequence(lit(1), lit(10))))
+      .withColumn("theta",
+        lit(2.0) * lit(math.Pi) * col("k") * col("t") / col("n"))
+      .withColumn("tc", round(col("ydev") * round(cos(col("theta")), 8), 8)
+        .cast("decimal(24,8)"))
+      .withColumn("tsn", round(col("ydev") * round(sin(col("theta")), 8), 8)
+        .cast("decimal(24,8)"))
+    grid.groupBy(col("event_type"), col("k"), col("n"))
+      .agg(sum("tc").as("sc"), sum("tsn").as("ss"))
+  }
+
   /** q_ts_periodogram — discrete-Fourier periodogram of the daily
     * event-count series per type at harmonics k = 1..10:
     * I(k) = (Σŷ·cos θ)² + (Σŷ·sin θ)²) / n with θ = 2πkt/n and
@@ -652,25 +695,7 @@ object TimeSeriesQueries {
     * before the fold (logloss rule), and the peak flag ranks the
     * ROUNDED power so both engines agree on ties. */
   private val tsPeriodogram: Q = (s, dir) => {
-    val base = dailySeries(s, dir)
-    val w = Window.partitionBy("event_type").orderBy("d")
-    val ts = base
-      .withColumn("t", row_number().over(w) - lit(1))
-      .withColumn("n", count(lit(1))
-        .over(Window.partitionBy("event_type")))
-      .withColumn("ybar", sum("y")
-        .over(Window.partitionBy("event_type")).cast("double") / col("n"))
-      .withColumn("ydev", col("y") - col("ybar"))
-    val grid = ts
-      .withColumn("k", explode(sequence(lit(1), lit(10))))
-      .withColumn("theta",
-        lit(2.0) * lit(math.Pi) * col("k") * col("t") / col("n"))
-      .withColumn("tc", round(col("ydev") * round(cos(col("theta")), 8), 8)
-        .cast("decimal(24,8)"))
-      .withColumn("tsn", round(col("ydev") * round(sin(col("theta")), 8), 8)
-        .cast("decimal(24,8)"))
-    val pw = grid.groupBy(col("event_type"), col("k"), col("n"))
-      .agg(sum("tc").as("sc"), sum("tsn").as("ss"))
+    val pw = harmonicSums(s, dir)
       .select(col("event_type"), col("k"), col("n"),
         round(col("n").cast("double") / col("k"), 2).as("period_days"),
         round((col("sc").cast("double") * col("sc").cast("double") +
@@ -771,25 +796,7 @@ object TimeSeriesQueries {
     * contribute 0 by the entropy convention (CASE-pinned on both
     * engines). Dominant k picks by the (power desc, k) total order. */
   private val tsSpectralEntropy: Q = (s, dir) => {
-    val base = dailySeries(s, dir)
-    val w = Window.partitionBy("event_type").orderBy("d")
-    val ts = base
-      .withColumn("t", row_number().over(w) - lit(1))
-      .withColumn("n", count(lit(1))
-        .over(Window.partitionBy("event_type")))
-      .withColumn("ybar", sum("y")
-        .over(Window.partitionBy("event_type")).cast("double") / col("n"))
-      .withColumn("ydev", col("y") - col("ybar"))
-    val grid = ts
-      .withColumn("k", explode(sequence(lit(1), lit(10))))
-      .withColumn("theta",
-        lit(2.0) * lit(math.Pi) * col("k") * col("t") / col("n"))
-      .withColumn("tc", round(col("ydev") * round(cos(col("theta")), 8), 8)
-        .cast("decimal(24,8)"))
-      .withColumn("tsn", round(col("ydev") * round(sin(col("theta")), 8), 8)
-        .cast("decimal(24,8)"))
-    val pw = grid.groupBy(col("event_type"), col("k"), col("n"))
-      .agg(sum("tc").as("sc"), sum("tsn").as("ss"))
+    val pw = harmonicSums(s, dir)
       .select(col("event_type"), col("k"), col("n"),
         round((col("sc").cast("double") * col("sc").cast("double") +
           col("ss").cast("double") * col("ss").cast("double")) /
@@ -832,26 +839,7 @@ object TimeSeriesQueries {
     * to an 8-dp decimal before the 10-row fold (logloss rule), and
     * the χ² scale n(n+2) multiplies once at readout. */
   private val tsLjungBox: Q = (s, dir) => {
-    val daily = dailySeries(s, dir).localCheckpoint()
-    val stats = daily.groupBy("event_type")
-      .agg(sum("y").as("tot"), count(lit(1)).as("n"),
-        sum(col("y") * col("y")).as("ss"))
-    val lags = daily.withColumn("k", explode(sequence(lit(1), lit(10))))
-    val rhs = daily.select(col("event_type").as("et2"),
-      col("d").as("d2"), col("y").as("y2"))
-    val terms = lags.join(rhs,
-        col("event_type") === col("et2") &&
-          col("d2") === date_add(col("d"), col("k")))
-      .groupBy("event_type", "k")
-      .agg(sum(col("y") * col("y2")).as("s1"),
-        sum(col("y") + col("y2")).as("s2"),
-        count(lit(1)).as("m"))
-      .join(broadcast(stats), "event_type")
-      .withColumn("mu", col("tot").cast("double") / col("n"))
-      .withColumn("num", col("s1").cast("double") -
-        col("mu") * col("s2") + col("m") * col("mu") * col("mu"))
-      .withColumn("den", col("ss").cast("double") -
-        col("n") * col("mu") * col("mu"))
+    val terms = lagPairs(s, dir, 10)
       .withColumn("rho", try_divide(col("num"), col("den")))
       .withColumn("lb_term",
         round(col("rho") * col("rho") / (col("n") - col("k")), 8)
@@ -1025,15 +1013,18 @@ object TimeSeriesQueries {
       .orderBy(col("event_type").asc_nulls_first)
   }
 
-  /** The α = 0.5 EMA truncated at 8 lags over window `w` (q_ts_des,
-    * q_ts_holt_winters, q_ts_croston): Σ 0.5ⁱ·c[t−i] over the non-NULL
-    * lags, divided by their weight sum. Powers of 0.5 are exact binary
-    * doubles and the terms sum in one literal order, so both engines
+  /** The α-EMA truncated at 8 lags over window `w` (q_win_ema,
+    * q_win_ema_cross, q_ts_des, q_ts_holt_winters, q_ts_croston,
+    * q_ts_ewma_var): Σ (1−α)ⁱ·c[t−i] over the non-NULL lags, divided
+    * by their weight sum, so partition heads average over their real
+    * history. The callers' decays (0.5, 0.75) have exact binary
+    * powers and the terms sum in one literal order, so both engines
     * agree bit for bit. try_divide: a row whose 8 lags are all NULL
     * has weight sum 0 and gets NULL, not an ANSI divide error. */
-  private def ema(w: WindowSpec, c: Column): Column = {
+  private[graft] def ema(w: WindowSpec, c: Column,
+                         alpha: Double = 0.5): Column = {
     val lags = (0 to 7).map(i => if (i == 0) c else lag(c, i).over(w))
-    val wts = (0 to 7).map(i => math.pow(0.5, i))
+    val wts = (0 to 7).map(i => math.pow(1.0 - alpha, i))
     val num = lags.zip(wts).map { case (l, wt) =>
       when(l.isNotNull, l * lit(wt)).otherwise(lit(0.0)) }
       .reduce(_ + _)
@@ -1165,22 +1156,12 @@ object TimeSeriesQueries {
     * only. */
   private val tsEwmaVar: Q = (s, dir) => {
     val w = Window.partitionBy("event_type").orderBy("d")
-    def wsum(c: Column): (Column, Column) = {
-      val lags = (0 to 7).map(i => if (i == 0) c else lag(c, i).over(w))
-      val wts = (0 to 7).map(i => math.pow(0.5, i))
-      val num = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, l * lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      val den = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      (num, den)
-    }
-    val (n1, d1) = wsum(col("y").cast("double"))
-    val (n2, _) = wsum(col("y").cast("double") * col("y").cast("double"))
+    // y and y² are NULL on the same lags, so both EMAs divide by the
+    // same weight sum
+    val y = col("y").cast("double")
     val scored = dailySeries(s, dir)
-      .withColumn("m", n1 / d1)
-      .withColumn("m2", n2 / d1)
+      .withColumn("m", ema(w, y))
+      .withColumn("m2", ema(w, y * y))
       .withColumn("rn", row_number().over(
         Window.partitionBy("event_type").orderBy(col("d").desc)))
       .filter(col("rn") === 1)
@@ -1244,8 +1225,19 @@ object TimeSeriesQueries {
     * — decimal(38) sums, ONE try_divide (σ̂²=0 ⇔ constant series →
     * NULL on both engines). Scale: one corpus contraction to the
     * (type, day) grid; per-type windows are grid-sized. */
-  private val tsKpss: Q = (s, dir) => {
-    val daily = dailySeries(s, dir)
+  private val tsKpss: Q = (s, dir) =>
+    kpssSums(dailySeries(s, dir))
+      .select(col("event_type"),
+        col("n").cast("long").as("n_days"),
+        kpssEta.as("eta"),
+        when(kpssEta > 0.463, 0).otherwise(1).as("level_stationary"))
+      .orderBy(col("event_type").asc_nulls_first)
+
+  /** The KPSS sums per type of the daily series `daily` (event_type,
+    * d, y), as (event_type, n, num, g0..g4): num = Σ(S·n)² and G_j =
+    * Σ eₙ·lag_j(eₙ), the demeaned value carried ×n so that every sum
+    * is an integer (q_ts_kpss, q_pipe_ts_profile). */
+  private def kpssSums(daily: DataFrame): DataFrame = {
     val tot = daily.groupBy("event_type")
       .agg(sum("y").as("sy"), count(lit(1)).as("nn"))
     // e_t × n as a narrow decimal: |en| ≤ y·n, decimal(16) holds it
@@ -1258,7 +1250,7 @@ object TimeSeriesQueries {
       sum("en").over(w).cast("decimal(18,0)"))
     val lagged = (1 to 4).foldLeft(sn)((df, j) =>
       df.withColumn(s"l$j", lag(col("en"), j).over(w)))
-    val g = lagged.groupBy("event_type")
+    lagged.groupBy("event_type")
       .agg(max("nn").as("n"),
         sum(col("snn") * col("snn")).as("num"),
         sum(col("en") * col("en")).as("g0"),
@@ -1266,18 +1258,19 @@ object TimeSeriesQueries {
         sum(col("en") * col("l2")).as("g2"),
         sum(col("en") * col("l3")).as("g3"),
         sum(col("en") * col("l4")).as("g4"))
+  }
+
+  /** KPSS η over [[kpssSums]], rounded to 4 dp: the Bartlett weights
+    * (1−j/5) clear denominators through a ×5, so
+    * η = 5·num / (n·(5G₀+8G₁+6G₂+4G₃+2G₄)); one try_divide makes a
+    * constant series NULL. */
+  private def kpssEta: Column = {
     val d = lit(5) * col("g0") + lit(8) * coalesce(col("g1"), lit(0)) +
       lit(6) * coalesce(col("g2"), lit(0)) +
       lit(4) * coalesce(col("g3"), lit(0)) +
       lit(2) * coalesce(col("g4"), lit(0))
-    g.select(col("event_type"),
-        col("n").cast("long").as("n_days"),
-        round(try_divide((lit(5) * col("num")).cast("double"),
-          (col("n") * d).cast("double")), 4).as("eta"),
-        when(round(try_divide((lit(5) * col("num")).cast("double"),
-          (col("n") * d).cast("double")), 4) > 0.463, 0)
-          .otherwise(1).as("level_stationary"))
-      .orderBy(col("event_type").asc_nulls_first)
+    round(try_divide((lit(5) * col("num")).cast("double"),
+      (col("n") * d).cast("double")), 4)
   }
 
   /** q_ts_croston — Croston's method for INTERMITTENT demand per
@@ -1344,13 +1337,7 @@ object TimeSeriesQueries {
       .withColumn("rn", row_number().over(
         Window.partitionBy("event_type").orderBy("d")))
       .withColumn("seg", ((col("rn") - 1) / lit(5)).cast("long"))
-    val stats = daily.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("y").as("sy"),
-        sum(col("y") * col("y")).as("sy2"))
-      .withColumn("m", col("sy").cast("double") / col("n"))
-      .withColumn("sd", sqrt(try_divide(
-        col("sy2").cast("double") - col("n") * col("m") * col("m"),
-        (col("n") - 1).cast("double"))))
+    val stats = meanSd(daily)
     val paa = daily.groupBy("event_type", "seg")
       .agg(sum("y").as("ssum"), count(lit(1)).as("sc"))
       .join(broadcast(stats), "event_type")
@@ -1371,6 +1358,39 @@ object TimeSeriesQueries {
       .orderBy(col("event_type").asc_nulls_first)
   }
 
+  /** Per type of `daily` (event_type, d, y): n, the exact sums sy and
+    * sy2, the mean m and the sample sd (NULL for one day), both shared
+    * closed-form doubles (q_ts_sax, q_ts_hysteresis). */
+  private def meanSd(daily: DataFrame): DataFrame =
+    daily.groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum("y").as("sy"),
+        sum(col("y") * col("y")).as("sy2"))
+      .withColumn("m", col("sy").cast("double") / col("n"))
+      .withColumn("sd", sqrt(try_divide(
+        col("sy2").cast("double") - col("n") * col("m") * col("m"),
+        (col("n") - 1).cast("double"))))
+
+  /** The hysteresis alert episodes of `daily` (event_type, d, y) under
+    * per-type thresholds `stats` (event_type, m, sd): a day RAISES when
+    * y > m + sd and CLEARS when y < m, the state is the last crossing
+    * (not alerting before the first), and each maximal run of
+    * alerting days is one row (event_type, grp, len) — the islands
+    * rn-difference device (q_ts_hysteresis, q_pipe_ts_profile). */
+  private def alertRuns(daily: DataFrame, stats: DataFrame): DataFrame = {
+    val w = Window.partitionBy("event_type").orderBy("d")
+    daily.join(broadcast(stats), "event_type")
+      .withColumn("crossing",
+        when(col("y") > col("m") + col("sd"), 1)
+          .when(col("y") < col("m"), 0))
+      .withColumn("alert", coalesce(
+        last(col("crossing"), ignoreNulls = true)
+          .over(w.rowsBetween(Window.unboundedPreceding, 0)), lit(0)))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("alert") === 1)
+      .withColumn("grp", col("rn") - row_number().over(w))
+      .groupBy("event_type", "grp").agg(count(lit(1)).as("len"))
+  }
+
   /** q_ts_hysteresis — two-threshold alert state machine per type:
     * RAISE when the daily count exceeds μ+σ, CLEAR only when it falls
     * back below μ — the debounce every production alert needs (a
@@ -1386,28 +1406,9 @@ object TimeSeriesQueries {
     * integer. Scale: one corpus contraction to the grid; all windows
     * partition per type. */
   private val tsHysteresis: Q = (s, dir) => {
-    val stats = dailySeries(s, dir).groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("y").as("sy"),
-        sum(col("y") * col("y")).as("sy2"))
-      .withColumn("m", col("sy").cast("double") / col("n"))
-      .withColumn("sd", sqrt(try_divide(
-        col("sy2").cast("double") - col("n") * col("m") * col("m"),
-        (col("n") - 1).cast("double"))))
+    val stats = meanSd(dailySeries(s, dir))
       .select(col("event_type"), col("m"), col("sd"))
-    val w = Window.partitionBy("event_type").orderBy("d")
-    val st = dailySeries(s, dir)
-      .join(broadcast(stats), "event_type")
-      .withColumn("crossing",
-        when(col("y") > col("m") + col("sd"), 1)
-          .when(col("y") < col("m"), 0))
-      .withColumn("alert", coalesce(
-        last(col("crossing"), ignoreNulls = true)
-          .over(w.rowsBetween(Window.unboundedPreceding, 0)), lit(0)))
-      .withColumn("rn", row_number().over(w))
-    val runs = st.filter(col("alert") === 1)
-      .withColumn("grp", col("rn") - row_number().over(w))
-      .groupBy("event_type", "grp").agg(count(lit(1)).as("len"))
-    val eps = runs.groupBy("event_type")
+    val eps = alertRuns(dailySeries(s, dir), stats).groupBy("event_type")
       .agg(count(lit(1)).as("n_episodes"),
         sum("len").as("n_alert_days"), max("len").as("longest_run"))
     dailySeries(s, dir).groupBy("event_type")
@@ -1547,35 +1548,9 @@ object TimeSeriesQueries {
           (col("sy").cast("decimal(22,0)") * col("sy")).cast("double")
             / col("n")), 4)
         .as("dow_r2"))
-    // KPSS verbatim (q_ts_kpss's ×n-carried integer device)
-    val tot = daily.groupBy("event_type")
-      .agg(sum("y").as("ksy"), count(lit(1)).as("knn"))
-    val e = daily.join(broadcast(tot), "event_type")
-      .withColumn("en",
-        (col("y") * col("knn") - col("ksy")).cast("decimal(16,0)"))
-    val w = Window.partitionBy("event_type").orderBy("d")
-    val sn = e.withColumn("snn",
-      sum("en").over(w).cast("decimal(18,0)"))
-    val lagged = (1 to 4).foldLeft(sn)((df, j) =>
-      df.withColumn(s"l$j", lag(col("en"), j).over(w)))
-    val kg = lagged.groupBy("event_type")
-      .agg(max("knn").as("kn"),
-        sum(col("snn") * col("snn")).as("num"),
-        sum(col("en") * col("en")).as("g0"),
-        sum(col("en") * col("l1")).as("g1"),
-        sum(col("en") * col("l2")).as("g2"),
-        sum(col("en") * col("l3")).as("g3"),
-        sum(col("en") * col("l4")).as("g4"))
-    val dk = lit(5) * col("g0") + lit(8) * coalesce(col("g1"), lit(0)) +
-      lit(6) * coalesce(col("g2"), lit(0)) +
-      lit(4) * coalesce(col("g3"), lit(0)) +
-      lit(2) * coalesce(col("g4"), lit(0))
-    val kpss = kg.select(col("event_type"),
-      round(try_divide((lit(5) * col("num")).cast("double"),
-        (col("kn") * dk).cast("double")), 4).as("kpss_eta"),
-      when(round(try_divide((lit(5) * col("num")).cast("double"),
-        (col("kn") * dk).cast("double")), 4) > 0.463, 0)
-        .otherwise(1).as("level_stationary"))
+    val kpss = kpssSums(daily).select(col("event_type"),
+      kpssEta.as("kpss_eta"),
+      when(kpssEta > 0.463, 0).otherwise(1).as("level_stationary"))
     // hysteresis verbatim → episode count
     val hstats = base.select(col("event_type"),
       (col("sy").cast("double") / col("n")).as("m"),
@@ -1584,17 +1559,7 @@ object TimeSeriesQueries {
           (col("sy").cast("double") / col("n")) *
           (col("sy").cast("double") / col("n")),
         (col("n") - 1).cast("double"))).as("sd"))
-    val st = daily.join(broadcast(hstats), "event_type")
-      .withColumn("crossing",
-        when(col("y") > col("m") + col("sd"), 1)
-          .when(col("y") < col("m"), 0))
-      .withColumn("alert", coalesce(
-        last(col("crossing"), ignoreNulls = true)
-          .over(w.rowsBetween(Window.unboundedPreceding, 0)), lit(0)))
-      .withColumn("rn", row_number().over(w))
-    val eps = st.filter(col("alert") === 1)
-      .withColumn("grp", col("rn") - row_number().over(w))
-      .groupBy("event_type", "grp").agg(count(lit(1)).as("len"))
+    val eps = alertRuns(daily, hstats)
       .groupBy("event_type").agg(count(lit(1)).as("n_episodes"))
     base.select(col("event_type"),
         col("n").cast("long").as("n_days"),

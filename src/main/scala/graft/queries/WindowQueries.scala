@@ -280,19 +280,10 @@ object WindowQueries {
   private val winEma: Q = (s, dir) => {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts_us"), col("event_id"))
-    val lags = (0 to 7).map(i =>
-      if (i == 0) col("value") else lag(col("value"), i).over(w))
-    val wts = (0 to 7).map(i => math.pow(0.5, i))
-    val num = lags.zip(wts).map { case (l, wt) =>
-      when(l.isNotNull, l * lit(wt)).otherwise(lit(0.0)) }
-      .reduce(_ + _)
-    val den = lags.zip(wts).map { case (l, wt) =>
-      when(l.isNotNull, lit(wt)).otherwise(lit(0.0)) }
-      .reduce(_ + _)
     Tables.load(s, dir, "events")
       .filter(col("value").isNotNull)
       .withColumn("ts_us", unix_micros(col("ts")))
-      .withColumn("ema", round(num / den, 4))
+      .withColumn("ema", round(TimeSeriesQueries.ema(w, col("value")), 4))
       .select("event_id", "user_id", "value", "ema")
       .orderBy("event_id")
   }
@@ -515,19 +506,8 @@ object WindowQueries {
     * grid; two O(1)-state windows per type. */
   private val winEmaCross: Q = (s, dir) => {
     val w = Window.partitionBy("event_type").orderBy("d")
-    def ema(alpha: Double): org.apache.spark.sql.Column = {
-      val lags = (0 to 7).map(i =>
-        if (i == 0) col("y").cast("double")
-        else lag(col("y").cast("double"), i).over(w))
-      val wts = (0 to 7).map(i => math.pow(1.0 - alpha, i))
-      val num = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, l * lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      val den = lags.zip(wts).map { case (l, wt) =>
-        when(l.isNotNull, lit(wt)).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      num / den
-    }
+    def ema(alpha: Double): org.apache.spark.sql.Column =
+      TimeSeriesQueries.ema(w, col("y").cast("double"), alpha)
     val st = Tables.load(s, dir, "events")
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg(count(lit(1)).as("y"))

@@ -31,6 +31,17 @@ class DevSpec extends SparkSpecBase {
       shape(text))
   }
 
+  test("plan: lists the arithmetic that runs outside the session's mode") {
+    // try_divide prints as `/` in the plan itself; the trailing lines
+    // carry the TRY mode, and a plan without such arithmetic has none
+    val des = stdout("plan", sf0001, "q_ts_des")
+    val i = des.indexWhere(_.startsWith("Eval modes other than ANSI"))
+    assert(i >= 0 && des.drop(i + 1).exists(_.matches("""TRY \(.* / .*\)""")),
+      des.mkString("\n"))
+    assert(!stdout("plan", sf0001, "q_filter_eq").exists(
+      _.startsWith("Eval modes")))
+  }
+
   test("jobs: one line per job of a warm run, then the total") {
     val lines = stdout("jobs", sf0001, "q_filter_eq")
     val Total = """JOBTOTAL (\d+) ms over (\d+) jobs""".r

@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.PrefixSweep
+import graft.ops.{PrefixSweep, Relational}
 
-/** PrefixSweep (distributed global rank / running sum / exclusive
-  * running max) must be BIT-IDENTICAL to the single-partition
-  * `Window.orderBy` it replaces, for any partition count — including
-  * degenerate ones (1 partition; more partitions than rows). */
+/** PrefixSweep (distributed running sum / exclusive running max) must
+  * be BIT-IDENTICAL to the single-partition `Window.orderBy` it
+  * replaces, for any partition count — including degenerate ones (1
+  * partition; more partitions than rows). The global rank beside them
+  * comes from [[Relational.globalRowNumber]], the one global row
+  * numbering, over the swept output. */
 class PrefixSweepSpec extends SparkSpecBase {
 
   import spark.implicits._
@@ -35,10 +37,10 @@ class PrefixSweepSpec extends SparkSpecBase {
 
   for (parts <- Seq(1, 5, 32, 2000)) {
     test(s"sweep matches the single-partition window at parts=$parts") {
-      val got = PrefixSweep.sweep(df, Seq(col("k")),
-          rankCol = Some("rnk"),
+      val swept = PrefixSweep.sweep(df, Seq(col("k")),
           runSums = Seq((col("w"), "cum")),
           runMaxExcl = Seq((col("m"), "rmax")), parts = parts)
+      val got = Relational.globalRowNumber(swept, Seq(col("k")), "rnk")
         .select("k", "rnk", "cum", "rmax")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           if (r.isNullAt(3)) null else r.getLong(3))).toSet
@@ -51,11 +53,16 @@ class PrefixSweepSpec extends SparkSpecBase {
     val ref = df.withColumn("rnk", row_number().over(win).cast("long"))
       .select("k", "rnk").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = PrefixSweep.sweep(df, Seq(col("k").desc),
-        rankCol = Some("rnk"))
+    val got = Relational.globalRowNumber(df, Seq(col("k").desc), "rnk")
       .select("k", "rnk").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == ref)
+    // the sweep's own descending order: a running count is the rank
+    val swept = PrefixSweep.sweep(df, Seq(col("k").desc),
+        runSums = Seq((lit(1L), "cnt")))
+      .select("k", "cnt").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(swept == ref)
   }
 
   test("ntileOf matches Spark's ntile for every k and N") {

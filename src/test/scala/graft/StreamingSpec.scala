@@ -89,10 +89,10 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sq = spark.sqlContext
     val views = MemoryStream[Ev]
     val clicks = MemoryStream[Ev]
-    val joined = Streaming.intervalJoinOuter(
+    val joined = Streaming.intervalJoin(
       views.toDF().withWatermark("ts", "10 minutes"),
       clicks.toDF().withWatermark("ts", "10 minutes"),
-      "user_id", "30 minutes")
+      "user_id", "30 minutes", joinType = "left_outer")
     val q = joined.select("l_event_id", "r_event_id").writeStream
       .outputMode("append").format("memory").queryName("ssleft_test").start()
     try {

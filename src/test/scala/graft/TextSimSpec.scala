@@ -736,12 +736,11 @@ class TextSimSpec extends SparkSpecBase {
     assert(full == exact, "nProbe=nCells must equal exact kNN")
   }
 
-  test("a returned IVF plan survives cache eviction under concurrent builds") {
-    // annCosineIvf returns a LAZY plan holding the index broadcast; LRU
-    // eviction must unpersist (re-broadcast from driver on next use),
-    // never destroy() — destroy would make executing a previously
-    // returned plan after >ivfCacheMax interleaved builds throw
-    // SparkException(destroyed broadcast) instead of recomputing
+  test("a returned IVF plan keeps executing during concurrent IVF builds") {
+    // annCosineIvf returns a LAZY plan holding the index broadcast,
+    // which SessionCache shares across calls; later builds must never
+    // destroy() a broadcast an earlier plan still holds — executing
+    // that plan would throw SparkException(destroyed broadcast)
     val emb = Tables.load(spark, sf0001, "embeddings")
     val probes = emb.filter(col("vec_id") < 3)
     val first = TextSim.annCosineIvf(probes, emb, 3, nCells = 16)
@@ -751,8 +750,8 @@ class TextSimSpec extends SparkSpecBase {
       catch { case t: Throwable => raced = t }
     })
     executor.start()
-    // 10 distinct (corpus, nCells) keys > ivfCacheMax(8): evicts `first`'s
-    // broadcast while the executor thread is still running its plan
+    // 10 more IVF indexes, each under its own (corpus, nCells) key,
+    // built while the executor thread is still running `first`'s plan
     (0 until 10).foreach { i =>
       TextSim.annCosineIvf(probes, emb, 3, nCells = 17 + i).count(): Unit
     }

@@ -186,6 +186,20 @@ class UtilityOpsSpec extends SparkSpecBase {
     assert(sqlSide.toSeq == dfSide.toSeq)
   }
 
+  test("SQL-surface queries leave the session's temp views unchanged") {
+    // each builder registers its inputs under per-call names and drops
+    // them after analysis: no fixed view a concurrent run over another
+    // dir could resolve, and nothing left behind
+    def views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    val names = Seq("q_sql_report", "q_sql_recursive", "q_sql_lateral",
+      "q_sql_exists", "q_sql_unpivot", "q_agg_rollup")
+    val counts = names.map(n => SparkEntry.queries(n)(spark, sf0001).count())
+    assert(counts.forall(_ > 0), s"row counts $counts")
+    assert(views == before)
+  }
+
   test("sha256 prefix expressions equal the spelled-out conv chain") {
     // Sha256PrefixBits / Sha256Prefix52Seq replace
     // conv(substring(sha2(key, 256), 1, nHex), 16, 10) in hot paths
