@@ -111,8 +111,8 @@ object Dev {
 
   /** Formatted physical plan of one query (static: AQE finalizes at
     * runtime), followed by its [[evalModes]]. `plan` prints them,
-    * writes per-query files (the per-round `plans/rNN/` evidence) or
-    * regenerates PLANS.md. */
+    * writes per-query files for `tools/plan_diff.py` or regenerates
+    * PLANS.md. */
   private def planOf(spark: SparkSession, dir: String, name: String) = {
     val qe = SparkEntry.queries(name)(spark, dir).queryExecution
     qe.explainString(ExplainMode.fromString("formatted")) +

@@ -30,18 +30,21 @@ object Sinks {
   def appendNdjson(df: DataFrame, path: String): Unit =
     df.write.mode("append").json(path)
 
-  /** Bucketed warehouse table (catalog-managed): co-locates rows by join
-    * key so repeated large⋈large joins on `bucketCols` skip the shuffle
-    * entirely — both sides arrive pre-partitioned (verified plan-level in
-    * BucketingSpec). This is the 100 TB answer to the reference's
-    * repeated per-request joins (`database/app.py:66-82`): pay the
-    * shuffle once at load, never per query. */
+  /** Bucketed warehouse table, registered in the catalog over the
+    * parquet files at `path`: co-locates rows by join key so repeated
+    * large⋈large joins on `bucketCols` skip the shuffle entirely — both
+    * sides arrive pre-partitioned (verified plan-level in BucketingSpec
+    * and on q_sink_bucketed in PlanQualitySpec). This is the 100 TB
+    * answer to the reference's repeated per-request joins
+    * (`database/app.py:66-82`): pay the shuffle once at load, never per
+    * query. */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-                    numBuckets: Int): Unit =
+                    numBuckets: Int, path: String): Unit =
     df.write.mode("overwrite")
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
+      .option("path", path)
       .saveAsTable(table)
 
   /** Small-files compaction: rewrite a directory of many small parquet

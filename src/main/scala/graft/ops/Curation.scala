@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfns.HashFunctions.sha256_prefix
 
 /** Corpus-curation operators for training-data pipelines: sliding-window
   * document chunking, int8 embedding quantization, TF-IDF term scoring
@@ -24,7 +25,7 @@ object Curation {
     * than natural prose even when no n-gram repeats verbatim). One
     * Deflater per PARTITION (native zlib state is expensive to create,
     * cheap to `reset()`), rows stream through without materializing the
-    * partition — the [[Multimodal.extractFeatures]] binary-kernel shape.
+    * partition.
     * Returns (id, n_bytes, comp_bytes). No shuffle: scan → narrow map.
     * Level 6 deflate of the same bytes is deterministic within a JVM;
     * across zlib builds the LENGTH can drift by a few bytes, which is
@@ -191,8 +192,7 @@ object Curation {
     require(buckets > 0, s"need buckets > 0, got $buckets")
     df.select(col(idCol), explode(TextSim.tokens(col(textCol))).as("tok"))
       .withColumn("bucket",
-        conv(substring(sha2(col("tok"), 256), 1, 7), 16, 10)
-          .cast("long") % buckets)
+        sha256_prefix(col("tok"), 7) % buckets)
       .groupBy(idCol, "bucket")
       .agg(count(lit(1)).as("n"))
   }
@@ -233,20 +233,24 @@ object Curation {
     *
     * `expectedN` must upper-bound the DISTINCT eval fingerprints or the
     * realized fpp degrades beyond the requested bound — size it from
-    * the eval corpus's row count, never guess low. */
+    * the eval corpus's row count, never guess low. An eval set with no
+    * text builds no filter and removes nothing. */
   def decontaminateBloom(corpus: DataFrame, textCol: String,
                          evalDocs: DataFrame, evalTextCol: String,
                          expectedN: Long, fpp: Double): DataFrame = {
     val tagged = corpus.withColumn("text_sha", sha2(col(textCol), 256))
-    val bf = evalDocs
-      .select(sha2(col(evalTextCol), 256).as("eval_sha")).distinct()
-      .stat.bloomFilter("eval_sha", expectedN, fpp)
-    val bcast = corpus.sparkSession.sparkContext.broadcast(bf)
-    // null-safe: a null text (⇒ null sha) KEEPS the row, exactly the
-    // anti-join's null-never-matches semantics — and never NPEs the probe
-    val maybeContaminated = udf((sha: String) =>
-      sha != null && bcast.value.mightContainString(sha))
-    tagged.filter(!maybeContaminated(col("text_sha")))
+    val bf = org.apache.spark.sql.graftfns.BloomFilters.build(
+      evalDocs.select(sha2(col(evalTextCol), 256).as("eval_sha"))
+        .distinct(), "eval_sha", expectedN, fpp)
+    bf.fold(tagged) { f =>
+      val bcast = corpus.sparkSession.sparkContext.broadcast(f)
+      // null-safe: a null text (⇒ null sha) KEEPS the row, exactly the
+      // anti-join's null-never-matches semantics — and never NPEs the
+      // probe
+      val maybeContaminated = udf((sha: String) =>
+        sha != null && bcast.value.mightContainString(sha))
+      tagged.filter(!maybeContaminated(col("text_sha")))
+    }
   }
 
   /** N-gram-level decontamination — the collision test production

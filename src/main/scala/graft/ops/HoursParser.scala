@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{lit, when}
 import org.apache.spark.sql.graftfns.HoursFunctions.parse_hours
 
 /** Opening-hours string parser — the reference's one domain-specific
@@ -31,12 +30,10 @@ import org.apache.spark.sql.graftfns.HoursFunctions.parse_hours
 object HoursParser {
 
   /** `array<struct<open_time, close_time>>` of the string's intervals in
-    * text order; NULL when it fails the grammar. */
+    * text order; NULL when it fails the grammar (the reference raises
+    * ValueError on garbage, `parse_and_upload_to_db.py:78-79`; the
+    * open_hours table drops the NULL set-wise instead). */
   def parse(hoursStr: Column): Column = parse_hours(hoursStr)
-
-  /** Row-wise validity (reference raises ValueError on garbage,
-    * `parse_and_upload_to_db.py:78-79`; we quarantine instead). */
-  def isParseable(s: Column): Column = parse(s).isNotNull
 
   /** Opening times of each range, text order. */
   def opens(hoursStr: Column): Column = parse(hoursStr).getField("open_time")
@@ -44,14 +41,6 @@ object HoursParser {
   /** Closing times of each range, text order. */
   def closes(hoursStr: Column): Column =
     parse(hoursStr).getField("close_time")
-
-  /** Overnight membership: is `probeSec` inside [open, close), where
-    * close < open wraps past midnight — the 3-disjunct filter of
-    * `database/app.py:177-193` as a single reusable predicate. */
-  def isOpenAt(openSec: Column, closeSec: Column, probeSec: Column): Column =
-    when(openSec === closeSec, lit(false))
-      .when(closeSec > openSec, probeSec >= openSec && probeSec < closeSec)
-      .otherwise(probeSec >= openSec || probeSec < closeSec)
 
   /** Minutes until close from `nowSec`, rolling past midnight when the
     * close time is "tomorrow" — the reference's one client-side pandas

@@ -4,21 +4,18 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns: images/audio/video as opaque `binary` payloads with
-  * typed metadata, plus partition-batched decode/feature/frame operators —
-  * the training-data-pipeline shape for non-text modalities.
+  * typed metadata, plus byte-stat, frame-sampling and perceptual-hash
+  * operators — the training-data-pipeline shape for non-text modalities.
   *
   * The Spark-side plumbing is real: pinned schema, binary expressions
-  * (`length`/`sha2`) that stay in codegen, and iterator-based
-  * `mapPartitions` for the decode stage (one decoder init per partition,
-  * streaming through rows — the JVM analog of `mapInPandas` batching; at
-  * 1000 executors each task decodes its partition independently, no
-  * driver involvement).
+  * (`length`/`sha2`) that stay in codegen, and typed per-row maps for
+  * the decode stage (at 1000 executors each task decodes its partition
+  * independently, no driver involvement).
   *
   * The codec itself is a STUB: real image/audio decoding libraries are not
-  * in this build, so [[FakeCodec]] deterministically derives
-  * dimensions/frames/features from the payload bytes. Swapping in a real
-  * codec changes only the function body marked below — schema, batching
-  * and partitioning are production-shaped.
+  * in this build, so [[FakeCodec]] deterministically derives frames from
+  * the payload bytes. Swapping in a real codec changes only its bodies —
+  * schema, batching and partitioning are production-shaped.
   */
 object Multimodal {
 
@@ -27,29 +24,11 @@ object Multimodal {
                       width: Option[Int], height: Option[Int],
                       sample_rate: Option[Int], duration_ms: Option[Long])
 
-  case class MediaFeatures(media_id: Long, media_type: String,
-                           n_bytes: Long, features: Array[Float])
-
   case class Frame(media_id: Long, frame_idx: Int, frame_bytes: Array[Byte])
 
   /** STUB decoder — deterministic fake standing in for the absent codec
     * libraries. Every method is a pure function of the payload bytes. */
   object FakeCodec {
-    val featureDim = 16
-
-    /** "Decode + feature-extract": a 16-dim byte-histogram signature.
-      * Real impl would decode pixels/samples and run a feature net. */
-    def features(payload: Array[Byte]): Array[Float] = {
-      val hist = new Array[Float](featureDim)
-      var i = 0
-      while (i < payload.length) {
-        hist((payload(i) & 0xff) % featureDim) += 1f
-        i += 1
-      }
-      val n = math.max(payload.length, 1).toFloat
-      hist.map(_ / n)
-    }
-
     /** "Frame-sample a video": fixed-size chunks as fake frames. */
     def frames(payload: Array[Byte], frameBytes: Int): Seq[Array[Byte]] =
       payload.grouped(frameBytes).toSeq
@@ -68,21 +47,6 @@ object Multimodal {
       .withColumn("payload_sha", sha2(col("payload"), 256))
       .withColumn("is_empty", coalesce(length(col("payload")), lit(0)) === 0)
 
-  /** Decode + feature-extract, batched per partition: decoder state is
-    * initialized once per partition (the `iter =>` closure), rows stream
-    * through without materializing the partition. */
-  def extractFeatures(ds: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { iter =>
-      // real codec: init decoder here, once per partition
-      iter.map { m =>
-        MediaFeatures(m.media_id, m.media_type,
-          Option(m.payload).map(_.length.toLong).getOrElse(0L),
-          FakeCodec.features(Option(m.payload).getOrElse(Array.empty)))
-      }
-    }
-  }
-
   /** Frame-sample video payloads: one output row per kept frame
     * (`every`-th frame, resized) — the generator shape of §2.J explode,
     * over binary data. */
@@ -98,12 +62,6 @@ object Multimodal {
           }
       }
   }
-
-  /** Exact payload dedup on content hash — same operator family as
-    * q_text_dedup_exact, applied to binary. */
-  def dedupPayloads(df: DataFrame): DataFrame =
-    Relational.dedupKeepFirst(
-      withByteStats(df), Seq(col("payload_sha")), Seq(col("media_id")))
 
   /** Fixed on-disk media fixture for the registered q_media_dedup query
     * and its DuckDB oracle: [[syntheticMedia]] written once to a stable

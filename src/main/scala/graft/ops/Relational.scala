@@ -281,41 +281,31 @@ object Relational {
     * not twice, and unpersisted as soon as the result plan is built —
     * the finishing semi-join recomputes the (column-pruned, co-keyed)
     * distinct inside the caller's job rather than pinning a
-    * billion-key cache for the session. Broadcast lifetime: the
-    * filter's executor copies are reclaimed by Spark's ContextCleaner
-    * once the returned plan (whose probe closure holds the only
-    * reference) is dropped; callers that need DETERMINISTIC release —
-    * e.g. a long-lived session running many purge waves — should use
-    * [[bloomSemiLongManaged]] and invoke the release thunk after the
-    * result's jobs complete (`unpersist`, not `destroy`: executor
-    * blocks are freed but the handle stays usable, so a re-executed
-    * plan just re-fetches from the driver). */
+    * billion-key cache for the session. An empty key list builds no
+    * filter: the result is the exact semi-join, empty. Broadcast
+    * lifetime: the filter's executor copies are reclaimed by Spark's
+    * ContextCleaner once the returned plan (whose probe closure holds
+    * the only reference) is dropped. */
   def bloomSemiLong(fact: DataFrame, factKey: String,
                     keys: DataFrame, keyCol: String,
-                    fpp: Double = 0.01): DataFrame =
-    bloomSemiLongManaged(fact, factKey, keys, keyCol, fpp)._1
-
-  /** [[bloomSemiLong]] plus an explicit broadcast-release thunk — call
-    * it once the returned DataFrame's jobs have completed to free the
-    * executor-side filter copies (~1.2 GB/executor at the 10⁹-key,
-    * 1% fpp design point) without waiting for driver GC. */
-  def bloomSemiLongManaged(fact: DataFrame, factKey: String,
-                           keys: DataFrame, keyCol: String,
-                           fpp: Double = 0.01): (DataFrame, () => Unit) = {
+                    fpp: Double = 0.01): DataFrame = {
     val distinctKeys =
       keys.select(col(keyCol).cast("long").as(factKey)).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = math.max(distinctKeys.count(), 1L) // fills the cache
-    val bf = distinctKeys.stat.bloomFilter(factKey, n, fpp) // reads it
-    val bcast = fact.sparkSession.sparkContext.broadcast(bf)
-    // null-safe: a null key never matches (anti of nothing) — same
-    // null-never-joins semantics as the exact semi-join it feeds
-    val mightContain = udf((k: java.lang.Long) =>
-      k != null && bcast.value.mightContainLong(k))
-    val out = fact.filter(mightContain(col(factKey)))
-      .join(distinctKeys, Seq(factKey), "semi")
+    val bf = org.apache.spark.sql.graftfns.BloomFilters
+      .build(distinctKeys, factKey, n, fpp) // reads it
+    val probed = bf.fold(fact) { f =>
+      val bcast = fact.sparkSession.sparkContext.broadcast(f)
+      // null-safe: a null key never matches (anti of nothing) — same
+      // null-never-joins semantics as the exact semi-join it feeds
+      val mightContain = udf((k: java.lang.Long) =>
+        k != null && bcast.value.mightContainLong(k))
+      fact.filter(mightContain(col(factKey)))
+    }
+    val out = probed.join(distinctKeys, Seq(factKey), "semi")
     distinctKeys.unpersist(blocking = false)
-    (out, () => bcast.unpersist(blocking = false))
+    out
   }
 
   /** Gap-based sessionization: appends a per-key `sess_idx` column —

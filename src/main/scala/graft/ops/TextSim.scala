@@ -119,9 +119,10 @@ object TextSim {
       .distinct()
   }
 
-  /** Exact Jaccard similarity of two token-set columns (verification
-    * companion to MinHash; used by the spec suite). try_divide: two
-    * EMPTY sets have union size 0, and a plain `/` under ANSI mode
+  /** Exact Jaccard similarity of two token-set columns (the exact
+    * companion to MinHash; q_text_ngram_jaccard over word 3-gram
+    * shingles). try_divide: two EMPTY sets (two docs shorter than the
+    * shingle width) have union size 0, and a plain `/` under ANSI mode
     * aborts on that pair — NULL (similarity undefined), DuckDB's
     * x/0. */
   def jaccard(a: Column, b: Column): Column =
@@ -165,44 +166,6 @@ object TextSim {
     org.apache.spark.sql.graftfns.VectorFunctions.simhash64(
       org.apache.spark.sql.graftfns.QuantFunctions
         .token_hashes(tokens(text)))
-
-  /** SimHash near-duplicate candidates: fingerprints are cut into 4
-    * 16-bit bands; by pigeonhole, any pair within Hamming distance ≤ 3
-    * shares at least one exact band → one equi-join shuffle on (band,
-    * value) finds all such pairs, then `bit_count(a xor b)` filters
-    * exactly. Same scale shape as MinHash banding. */
-  def simhashCandidates(df: DataFrame, docId: Column, text: Column,
-                        maxHamming: Int = 3): DataFrame = {
-    val fp = df.select(docId.as("doc_id"), simhash(text).as("fp"))
-    val banded = fp.select(col("doc_id"), col("fp"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("fp"), b * 16).bitwiseAND(0xffffL)): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_val")
-    val a = banded.select(col("band"), col("band_val"),
-      col("doc_id").as("doc_a"), col("fp").as("fp_a"))
-    val b = banded.select(col("band"), col("band_val"),
-      col("doc_id").as("doc_b"), col("fp").as("fp_b"))
-    a.join(b, Seq("band", "band_val"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("long")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** Word n-gram Jaccard similarity between two text columns (set
-    * semantics — the exact-measure companion to MinHash's estimate).
-    * try_divide: two docs with < n tokens each yield EMPTY shingle
-    * sets (shingles' short-doc guard), union size 0, and a plain `/`
-    * under ANSI mode would abort the whole job on that one pair —
-    * NULL instead, which is the oracle's len/len → DuckDB x/0. */
-  def ngramJaccard(a: Column, b: Column, n: Int): Column = {
-    val (ga, gb) = (shingles(a, n), shingles(b, n))
-    round(try_divide(size(array_intersect(ga, gb)).cast("double"),
-      size(array_union(ga, gb)).cast("double")), 4)
-  }
 
   // ───── text analysis (language-ID, quality, tokens, fingerprint) ─────
 
@@ -249,12 +212,6 @@ object TextSim {
   def contentFingerprint(text: Column): Column =
     sha2(regexp_replace(trim(lower(text)), "\\s+", " "), 256)
 
-  /** Winnowing-style rolling fingerprint: minimum hash over word
-    * k-grams. Not cross-engine-stable (xxhash64), verified against a
-    * scalar reference in TextSimSpec. */
-  def rollingFingerprint(text: Column, k: Int = 4): Column =
-    array_min(transform(shingles(text, k), x => xxhash64(x)))
-
   // ───── vector ANN: LSH-bucketed scale path ─────
 
   /** Deterministic random hyperplanes for sign-LSH (seeded — the bucket
@@ -278,9 +235,8 @@ object TextSim {
     * One codegen'd expression ([[org.apache.spark.sql.graftfns
     * .SignBuckets]]) evaluates all tables in a single pass; the planes
     * are regenerated from the seed on each executor (never shipped,
-    * never codegen literals), so the collision model may ask for
-    * arbitrarily many tables × bits without hitting Janino's method
-    * limit — the τ=0.9 dedup params (57×14) broke the literal form. */
+    * never codegen literals), so any tables × bits fits under Janino's
+    * method limit (57 tables × 14 bits broke the literal form). */
   def lshBuckets(vec: Column, nTables: Int, bits: Int,
                  dim: Int = 64): Column =
     org.apache.spark.sql.graftfns.VectorFunctions.sign_buckets(
@@ -324,85 +280,9 @@ object TextSim {
         col("rn").cast("long").as("rn"))
   }
 
-  /** Chosen sign-LSH configuration for a threshold dedup:
-    * `expectedCoverage` is the modeled fraction of *random* (≈ orthogonal)
-    * pairs that become candidates — the quadratic-work knob. */
-  final case class LshDedupParams(bits: Int, nTables: Int,
-                                  expectedCoverage: Double)
-
-  /** Per-table collision probability of a pair at cosine `s` under `bits`
-    * sign-hyperplanes: each plane separates the pair with probability
-    * arccos(s)/π (Goemans–Williamson), a table collides iff all `bits`
-    * planes agree. */
-  def lshCollisionProb(s: Double, bits: Int): Double =
-    math.pow(1.0 - math.acos(math.max(-1.0, math.min(1.0, s))) / math.Pi,
-      bits)
-
-  /** Collision-model parameter choice for threshold dedup — the
-    * cost-awareness gate the LSH path must pass before it is used.
-    *
-    * For each band width `bits`, the table count needed for
-    * `targetRecall` at the threshold is T = ⌈ln(1−recall)/ln(1−p(τ))⌉;
-    * the price is the background candidate coverage
-    * 1 − (1 − 2^−bits)^T — the probability a RANDOM (orthogonal) pair
-    * still collides somewhere, i.e. the fraction of C(N,2) the rescore
-    * stage pays. Returns the feasible (coverage ≤ `maxCoverage`,
-    * T ≤ `maxTables`) config with minimal coverage, or None when no
-    * configuration prunes — which is a theorem, not a tuning failure:
-    * coverage ≤ maxCoverage needs T·2^−bits small while recall needs
-    * T ≈ ln(1/ε)/p(τ)^… — at low thresholds (τ ≈ 0.42, ρ ≈ 0.65 vs the
-    * orthogonal background) the two collide until T is in the thousands.
-    * Callers must then use [[cosineDedupBlockedExact]]: exact recall at
-    * honestly-quadratic cost beats quadratic cost disguised as LSH. */
-  def lshDedupParams(threshold: Double, targetRecall: Double = 0.999,
-                     maxCoverage: Double = 0.2,
-                     maxTables: Int = 64): Option[LshDedupParams] = {
-    require(targetRecall > 0 && targetRecall < 1,
-      s"targetRecall ($targetRecall) must be in (0,1)")
-    val feasible = (1 to 30).flatMap { bits =>
-      val p = math.min(lshCollisionProb(threshold, bits), 1.0 - 1e-12)
-      if (p <= 0.0) None
-      else {
-        val t = math.ceil(
-          math.log(1.0 - targetRecall) / math.log1p(-p)).toInt.max(1)
-        val coverage = 1.0 - math.pow(1.0 - math.pow(0.5, bits), t.toDouble)
-        if (t <= maxTables && coverage <= maxCoverage)
-          Some(LshDedupParams(bits, t, coverage))
-        else None
-      }
-    }
-    feasible.sortBy(p => (p.expectedCoverage, p.nTables)).headOption
-  }
-
-  /** Embedding-cosine near-duplicate pairs (sim ≥ threshold): cost-model
-    * dispatch between the two scale shapes.
-    *
-    * If [[lshDedupParams]] finds a sign-LSH configuration whose modeled
-    * background coverage is bounded (the pruning regime — thresholds
-    * ≳ 0.8 in practice), candidates come from multi-table LSH buckets
-    * ([[cosineDedupLsh]]) and the work is sub-quadratic. Otherwise — low
-    * thresholds where ANY cosine-LSH family degenerates to ≈ all pairs —
-    * the operator runs the block-partitioned exact join
-    * ([[cosineDedupBlockedExact]]): the same O(N²) pair work the "LSH"
-    * would have paid, minus the nTables-way explode and the distinct over
-    * the full pair set, and with recall exactly 1 (so the DuckDB
-    * brute-force oracle matches by construction, with no dependence on
-    * seeded hyperplanes). Measured at sf0.1 (2000 vectors, τ=0.42): the
-    * full-recall LSH form covered 98 % of C(N,2) and took 7.7 s; the
-    * blocked exact join does the same pairs once, no distinct, in well
-    * under 2 s. */
-  def cosineDedup(emb: DataFrame, threshold: Double, dim: Int = 64,
-                  targetRecall: Double = 0.999, maxCoverage: Double = 0.2,
-                  maxTables: Int = 64, blocks: Int = 16): DataFrame =
-    lshDedupParams(threshold, targetRecall, maxCoverage, maxTables) match {
-      case Some(LshDedupParams(bits, nTables, _)) =>
-        cosineDedupLsh(emb, threshold, nTables, bits, dim)
-      case None => cosineDedupBlockedExact(emb, threshold, blocks)
-    }
-
-  /** Exact cosine near-duplicate pairs via a block-partitioned self-join —
-    * the deterministic path for thresholds where sign-LSH cannot prune
-    * ([[lshDedupParams]] → None).
+  /** Exact cosine near-duplicate pairs (sim ≥ threshold) via a
+    * block-partitioned self-join — q_vec_cosine_dedup, q_vec_dedup_groups
+    * (τ=0.42) and q_vec_dedup_sweep.
     *
     * Rows are hashed into `blocks` blocks; each unordered block pair
     * (i ≤ j) is one join key, the left replica carries a block-i row to
@@ -414,7 +294,11 @@ object TextSim {
     * evenly across the cluster — parallelism scales with `blocks`², not
     * with data skew. This is the canonical distributed exact all-pairs
     * shape; the work is inherently quadratic because exact recall at a
-    * low threshold on weakly-clustered vectors admits no pruning. */
+    * low threshold on weakly-clustered vectors admits no pruning: at
+    * τ=0.42 a full-recall sign-LSH needs tables in the thousands, and
+    * its candidates cover ≈ all of C(N,2) (measured at sf0.1, 2000
+    * vectors: 98 % of the pairs in 7.7 s, against well under 2 s for
+    * this join, which does each pair once and needs no distinct). */
   def cosineDedupBlockedExact(emb: DataFrame, threshold: Double,
                               blocks: Int = 16): DataFrame = {
     require(blocks > 0, s"blocks ($blocks) must be positive")
@@ -450,52 +334,6 @@ object TextSim {
       .filter(col("sim") >= threshold)
       .select(least(col("id_l"), col("id_r")).as("id_a"),
         greatest(col("id_l"), col("id_r")).as("id_b"), col("sim"))
-  }
-
-  /** Embedding-cosine near-duplicate pairs via multi-table sign-LSH
-    * bucketing + exact rescore — the sub-quadratic path, valid ONLY in
-    * the pruning regime (use [[cosineDedup]] which gates on the collision
-    * model; calling this directly at a low threshold silently does ≈
-    * all-pairs work through the bucket join).
-    *
-    * Shape: the corpus is bucketed once per table (one explode + one
-    * shuffle on bucket id), pairs are generated only inside buckets by an
-    * equi-join, each candidate is rescored with the exact dot product, and
-    * the threshold filter is exact — so precision is always 1. Recall is
-    * governed by (nTables, bits): a pair at cosine s collides in one table
-    * with probability (1 - arccos(s)/π)^bits and must collide in at least
-    * one of nTables — [[lshDedupParams]] solves for the cheapest pair
-    * meeting a recall target with bounded background coverage. The join is
-    * a shuffled equi-join — no BroadcastNestedLoopJoin anywhere in the
-    * plan (PlanQualitySpec gates this). */
-  def cosineDedupLsh(emb: DataFrame, threshold: Double,
-                     nTables: Int = 32, bits: Int = 3,
-                     dim: Int = 64): DataFrame = {
-    // bucket join carries IDS ONLY: a pair colliding in many of the
-    // nTables tables would otherwise be rescored once per collision
-    // (32× the dot products) and drag 64-double payloads through the
-    // join — distinct first, fetch vectors once per unique pair after
-    val bucketed = emb.select(col("vec_id"),
-        explode(lshBuckets(col("embedding").cast("array<double>"),
-          nTables, bits, dim)).as("bucket"))
-    val pairs = bucketed.select(col("bucket"), col("vec_id").as("id_a"))
-      .join(bucketed.select(col("bucket"), col("vec_id").as("id_b")),
-        Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    val vecs = emb.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("vec"))
-      .withColumn("norm", l2Norm(col("vec")))
-    pairs
-      .join(vecs.select(col("vec_id").as("id_a"), col("vec").as("va"),
-        col("norm").as("na")), Seq("id_a"))
-      .join(vecs.select(col("vec_id").as("id_b"), col("vec").as("vb"),
-        col("norm").as("nb")), Seq("id_b"))
-      .withColumn("sim",
-        roundedSim(col("va"), col("vb"), col("na"), col("nb")))
-      .filter(col("sim") >= threshold)
-      .select("id_a", "id_b", "sim")
   }
 
   /** TRUE round-up to the next power of two: `highestOneBit(x-1)*2` is

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfns.HashFunctions.sha256_prefix
 
 /** §2.D aggregations. All group-bys are Spark's default two-phase
   * HashAggregate (partial map-side combine → final), which is the shape
@@ -1842,11 +1843,10 @@ object AggQueries {
   private val aggCaptureRecapture: Q = (s, dir) => {
     val d = Tables.load(s, dir, "documents")
       .withColumn("ba",
-        conv(substring(sha2(col("doc_id").cast("string"), 256), 1, 7),
-          16, 10).cast("long") % 100 < 20)
+        sha256_prefix(col("doc_id").cast("string"), 7) % 100 < 20)
       .withColumn("bb",
-        conv(substring(sha2(concat(col("doc_id").cast("string"),
-          lit("salt")), 256), 1, 7), 16, 10).cast("long") % 100 < 20)
+        sha256_prefix(concat(col("doc_id").cast("string"), lit("salt")), 7)
+          % 100 < 20)
     d.agg(count(lit(1)).as("n_total"),
       count(when(col("ba"), 1)).as("n1"),
       count(when(col("bb"), 1)).as("n2"),
@@ -2799,9 +2799,8 @@ object AggQueries {
     val repDiffs = perUser
       .withColumn("b", explode(sequence(lit(0), lit(reps - 1))))
       .withColumn("arm",
-        (conv(substring(sha2(concat(col("u").cast("string"), lit(":"),
-          col("b").cast("string")), 256), 1, 7), 16, 10).cast("long") % 2)
-          .cast("int"))
+        (sha256_prefix(concat(col("u").cast("string"), lit(":"),
+          col("b").cast("string")), 7) % 2).cast("int"))
       .groupBy("b", "arm")
       .agg(sum("sv").as("s"), sum("cnt").as("c"))
       .groupBy("b")

@@ -5,6 +5,7 @@ import graft.etl.Normalize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfns.HashFunctions.sha256_prefix
 
 /** §2.O pipeline patterns — multi-stage dataflows a production warehouse
   * runs daily: ordered-funnel attribution over the event stream and the
@@ -1078,7 +1079,7 @@ object PipelineQueries {
       .withColumn("value", col("value") * 2)
       .write.partitionBy("event_date").mode("overwrite")
       .option("partitionOverwriteMode", "dynamic").parquet(out)
-    s.read.parquet(out)
+    s.read.schema(ev.schema).parquet(out)
       .groupBy("event_date")
       .agg(count(lit(1)).as("n"),
         expr("CAST(round(sum(CAST(value AS DECIMAL(18,2))), 4) AS DOUBLE)")
@@ -1526,7 +1527,7 @@ object PipelineQueries {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("event_type").parquet(out)
-    s.read.parquet(out)
+    s.read.schema(ev.schema).parquet(out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         expr("CAST(round(sum(CAST(value AS DECIMAL(18,2))), 4) " +
@@ -2172,8 +2173,8 @@ object PipelineQueries {
     Tables.load(s, dir, "events")
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n_rows"),
-        sum(conv(substring(sha2(col("event_id").cast("string"), 256),
-          1, 7), 16, 10).cast("long")).as("key_checksum"),
+        sum(sha256_prefix(col("event_id").cast("string"), 7))
+          .as("key_checksum"),
         sum(col("value").cast("decimal(18,2)")).as("value_total"),
         count(when(col("user_id").isNull, 1)).as("null_users"))
       .select(col("day"), col("n_rows").cast("long").as("n_rows"),

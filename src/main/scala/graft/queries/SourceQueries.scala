@@ -273,11 +273,11 @@ object SourceQueries {
     // — `value` was written and never consumed; projecting it away
     // halves the sink bytes without touching the per-file layout or
     // the read-back result (guide §2.3, project before the exchange)
-    Tables.load(s, dir, "events")
+    val days = Tables.load(s, dir, "events")
       .select(col("event_id"), to_date(col("ts")).as("event_date"))
-      .repartition(col("event_date"))
+    days.repartition(col("event_date"))
       .write.partitionBy("event_date").mode("overwrite").parquet(out)
-    s.read.parquet(out)
+    s.read.schema(days.schema).parquet(out)
       .select(col("event_id"), col("event_date"),
         col("_metadata.file_path").as("fp"))
       .withColumn("path_date",
@@ -379,7 +379,7 @@ object SourceQueries {
       .select("event_id", "user_id", "event_type", "value")
     graft.etl.Sinks.writeWarehouseTable(ev, out, Seq("event_type"))
     graft.etl.Sinks.writeWarehouseTable(ev, out, Seq("event_type"))
-    roundTripAgg(s.read.parquet(out))
+    roundTripAgg(s.read.schema(ev.schema).parquet(out))
   }
 
   /** Per-thread previous Derby db url, shut down (unmounted from the
@@ -451,10 +451,10 @@ object SourceQueries {
     * reports the pushed partition filter and one matched partition. */
   private val srcPartitionPrune: Q = (s, dir) => {
     val out = freshSinkDir("part_prune")
-    Tables.load(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
-      .write.partitionBy("event_type").mode("overwrite").parquet(out)
-    s.read.parquet(out)
+    ev.write.partitionBy("event_type").mode("overwrite").parquet(out)
+    s.read.schema(ev.schema).parquet(out)
       .filter(col("event_type") === "purchase")
       .agg(count(lit(1)).as("n"),
         expr("CAST(round(sum(CAST(value AS DECIMAL(18,2))), 4) AS DOUBLE)")
@@ -484,10 +484,9 @@ object SourceQueries {
     Option(lastBucketedTable.get())
       .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
     lastBucketedTable.set(tbl)
-    Tables.load(s, dir, "events")
-      .select("event_id", "user_id", "event_type", "value")
-      .write.bucketBy(8, "user_id").sortBy("user_id")
-      .option("path", out).mode("overwrite").saveAsTable(tbl)
+    graft.etl.Sinks.writeBucketed(Tables.load(s, dir, "events")
+        .select("event_id", "user_id", "event_type", "value"),
+      tbl, Seq("user_id"), 8, out)
     val t = s.table(tbl)
     val clicks = t.filter(col("event_type") === "click")
       .groupBy("user_id").agg(count(lit(1)).as("n_clicks"))
@@ -667,16 +666,16 @@ object SourceQueries {
     * partitioned warehouse. */
   private val joinDpp: Q = (s, dir) => {
     val out = freshSinkDir("dpp_fact")
-    Tables.load(s, dir, "events")
+    val fact = Tables.load(s, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
-      .write.partitionBy("event_type").mode("overwrite").parquet(out)
+    fact.write.partitionBy("event_type").mode("overwrite").parquet(out)
     val dim = Tables.load(s, dir, "events")
       .select("event_type").distinct()
       .withColumn("kind",
         when(col("event_type").isin("purchase", "signup"), "conversion")
           .otherwise("other"))
       .filter(col("kind") === "conversion")
-    s.read.parquet(out)
+    s.read.schema(fact.schema).parquet(out)
       .join(broadcast(dim), Seq("event_type"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),

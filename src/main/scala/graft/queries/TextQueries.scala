@@ -5,6 +5,7 @@ import graft.ops.{Curation, Relational, TextSim}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfns.HashFunctions.sha256_prefix
 
 /** §2.M text / similarity / vector extensions over `documents` and
   * `embeddings` — the training-data-pipeline operators (dedup, ANN,
@@ -392,8 +393,8 @@ object TextQueries {
       .orderBy("doc_id")
 
   /** q_text_fingerprint — normalization-invariant content fingerprint
-    * ([[TextSim.contentFingerprint]]); the winnowing rolling hash is the
-    * Q-tier companion covered in TextSimSpec. */
+    * ([[TextSim.contentFingerprint]]); q_text_winnowing is the
+    * partial-overlap companion (winnowed n-gram fingerprints). */
   private val fingerprint: Q = (s, dir) =>
     Tables.load(s, dir, "documents")
       .withColumn("fp", TextSim.contentFingerprint(col("text")))
@@ -583,8 +584,8 @@ object TextQueries {
   }
 
   /** q_text_ngram_jaccard — exact word-3-gram Jaccard over adjacent doc
-    * pairs ([[TextSim.ngramJaccard]]): the exact-measure companion to the
-    * MinHash estimate. */
+    * pairs ([[TextSim.jaccard]] of the two shingle sets, rounded to 4
+    * places): the exact-measure companion to the MinHash estimate. */
   private val ngramJaccardQ: Q = (s, dir) => {
     // parallelized + shingles BEFORE the join (r17 cold-anchor sweep):
     // the interpreted shingle HOF used to sit in the post-join
@@ -603,9 +604,7 @@ object TextQueries {
       TextSim.shingles(col("text"), 3).as("gb"))
     a.join(b, col("doc_b") === col("doc_a") + 1)
       .withColumn("jaccard",
-        round(try_divide(
-          size(array_intersect(col("ga"), col("gb"))).cast("double"),
-          size(array_union(col("ga"), col("gb"))).cast("double")), 4))
+        round(TextSim.jaccard(col("ga"), col("gb")), 4))
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a")
   }
@@ -726,15 +725,13 @@ object TextQueries {
   }
 
   /** q_vec_cosine_dedup — embedding-cosine near-duplicate pairs above a
-    * corpus-calibrated threshold ([[TextSim.cosineDedup]]): the collision
-    * model dispatches between LSH bucket candidates (pruning regime,
-    * τ ≳ 0.8) and the block-partitioned exact equi-join (low thresholds,
-    * where any cosine-LSH family degenerates to all pairs — τ=0.42 here,
-    * so this runs the blocked-exact shape and recall is exactly 1). No
-    * nested-loop join on either path — PlanQualitySpec gates it;
+    * corpus-calibrated threshold: the block-partitioned exact equi-join
+    * ([[TextSim.cosineDedupBlockedExact]]), recall exactly 1. At
+    * τ=0.42 any cosine-LSH family degenerates to all pairs, so there is
+    * no pruning to buy. No nested-loop join — PlanQualitySpec gates it;
     * TextSimSpec pins equality with the brute-force pair set. */
   private val cosineDedup: Q = (s, dir) =>
-    TextSim.cosineDedup(Tables.load(s, dir, "embeddings"), 0.42)
+    TextSim.cosineDedupBlockedExact(Tables.load(s, dir, "embeddings"), 0.42)
       .orderBy("id_a", "id_b")
 
   /** q_vec_dedup_groups — pairs → dedup GROUPS: connected components
@@ -746,7 +743,7 @@ object TextQueries {
     * same components with a recursive transitive-closure CTE. */
   private val dedupGroupsQ: Q = (s, dir) => {
     val emb = Tables.load(s, dir, "embeddings")
-    val pairs = TextSim.cosineDedup(emb, 0.42)
+    val pairs = TextSim.cosineDedupBlockedExact(emb, 0.42)
     TextSim.dedupGroups(emb.select("vec_id"),
         pairs.select("id_a", "id_b"))
       .withColumn("is_canonical",
@@ -766,8 +763,7 @@ object TextQueries {
   private val sampleHash: Q = (s, dir) =>
     Tables.load(s, dir, "documents")
       .withColumn("bucket",
-        conv(substring(sha2(col("doc_id").cast("string"), 256), 1, 7), 16, 10)
-          .cast("long") % 100)
+        sha256_prefix(col("doc_id").cast("string"), 7) % 100)
       .withColumn("split",
         when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "val").otherwise("test"))
@@ -921,8 +917,7 @@ object TextQueries {
       .select(col("doc_id"),
         posexplode(TextSim.shingles(col("text"), 3)).as(Seq("i", "gram")))
       .withColumn("h",
-        conv(substring(sha2(col("gram"), 256), 1, 13), 16, 10)
-          .cast("long"))
+        sha256_prefix(col("gram"), 13))
     val w = Window.partitionBy("doc_id").orderBy("i").rowsBetween(0, 3)
     val fps = grams
       .withColumn("mh", min("h").over(w))
@@ -1086,8 +1081,7 @@ object TextQueries {
       .withColumn("w",
         least(lit(1.0), col("n_chars").cast("double") / lit(1000.0)))
       .withColumn("u",
-        conv(substring(sha2(concat(col("doc_id").cast("string"),
-          lit(":imp")), 256), 1, 13), 16, 10)
+        sha256_prefix(concat(col("doc_id").cast("string"), lit(":imp")), 13)
           .cast("double") / lit(4503599627370496.0)) // 16^13 = 2^52
       .withColumn("keep", (col("u") < col("w")).cast("int"))
       .groupBy("lang")
@@ -1663,8 +1657,7 @@ object TextQueries {
     * expression, no shuffle before the aggregate. */
   private val sampleStratified: Q = (s, dir) => {
     val bucket =
-      conv(substring(sha2(col("event_id").cast("string"), 256), 1, 7),
-        16, 10).cast("long") % 100
+      sha256_prefix(col("event_id").cast("string"), 7) % 100
     val keepPct = when(col("event_type") === "purchase", 100)
       .when(col("event_type") === "view", 10)
       .otherwise(50)
@@ -1703,8 +1696,7 @@ object TextQueries {
       .withColumn("thresh", floor(col("rate") * 1e6).cast("long"))
     Tables.load(s, dir, "documents")
       .withColumn("bucket",
-        conv(substring(sha2(col("doc_id").cast("string"), 256), 1, 7),
-          16, 10).cast("long") % 1000000)
+        sha256_prefix(col("doc_id").cast("string"), 7) % 1000000)
       .join(broadcast(rates), Seq("lang"))
       .groupBy("lang")
       .agg(max("n_docs").as("n_docs"),
@@ -1733,8 +1725,7 @@ object TextQueries {
   private val sampNegative: Q = (s, dir) => {
     val ringed = Tables.load(s, dir, "embeddings")
       .withColumn("ring",
-        conv(substring(sha2(col("vec_id").cast("string"), 256), 1, 7),
-          16, 10).cast("long"))
+        sha256_prefix(col("vec_id").cast("string"), 7))
     graft.ops.PrefixSweep.lookaheadFrame(
         ringed, Seq("ring", "vec_id"), 20) { w =>
       Seq("cands" -> collect_list(
@@ -1807,8 +1798,7 @@ object TextQueries {
   private val sampBalanced: Q = (s, dir) => {
     val docs = Tables.load(s, dir, "documents")
       .withColumn("bucket",
-        conv(substring(sha2(col("doc_id").cast("string"), 256), 1, 7),
-          16, 10).cast("long"))
+        sha256_prefix(col("doc_id").cast("string"), 7))
     val quota = docs.groupBy("lang").agg(count(lit(1)).as("n"))
       .agg(min("n").as("quota"))
     val w = Window.partitionBy("lang")
@@ -1914,8 +1904,7 @@ object TextQueries {
         floor(exp(col("age").cast("double") / lit(-30.0)) * 1e6)
           .cast("long"))
       .withColumn("bucket",
-        conv(substring(sha2(col("event_id").cast("string"), 256), 1, 7),
-          16, 10).cast("long") % 1000000)
+        sha256_prefix(col("event_id").cast("string"), 7) % 1000000)
       .groupBy(floor(col("age") / lit(7)).cast("long").as("wk_age"))
       .agg(count(lit(1)).as("n"),
         count(when(col("bucket") < col("thresh"), 1)).as("n_kept"),
@@ -2180,30 +2169,15 @@ object TextQueries {
     * shuffled, identical on every executor and every rerun — and rides
     * into the plan as k literal rows consumed by the codegen'd
     * [[org.apache.spark.sql.graftfns.DotProduct]] kernel: one narrow
-    * map, no shuffle, no UDF. Q-tier (no DuckDB twin for the seeded
-    * matrix); the distance-preservation claim is spec-gated in
-    * TextSimSpec over sampled pairs. */
-  private[graft] def vecRprojScores(s: SparkSession, dir: String)
-      : DataFrame = {
-    val proj = TextSim.jlMatrix(seed = 42, k = 16, d = 64)
-    val v = col("embedding").cast("array<double>")
-    Tables.load(s, dir, "embeddings")
-      .select(Seq(col("vec_id"), col("label")) ++
-        proj.zipWithIndex.map { case (row, i) =>
-          round(org.apache.spark.sql.graftfns.VectorFunctions
-            .dot_product(v, typedLit(row.toSeq)), 4).as(s"p$i")
-        }: _*)
-      .orderBy("vec_id")
-  }
-
-  /** O-bound registration (r15): the JL distance-preservation claim,
+    * map, no shuffle, no UDF.
+    *
+    * O-bound registration (r15): the JL distance-preservation claim,
     * self-certified over the first-60-vector pair grid — the exact
     * ORIGINAL squared distances are DuckDB-recomputable (index-order
     * fold, the vec_normalize parity device), so the non-degenerate
     * pair census anchors bit-for-bit, and the TextSimSpec gates (mean
     * ratio within 0.15 of 1; >90% of pairs inside the loose JL
-    * envelope) become verdict booleans the oracle asserts TRUE.
-    * Projected VALUES stay spec-checked via [[vecRprojScores]]. */
+    * envelope) become verdict booleans the oracle asserts TRUE. */
   private val vecRproj: Q = (s, dir) => {
     val proj = TextSim.jlMatrix(seed = 42, k = 16, d = 64)
     val v = col("embedding").cast("array<double>")
@@ -2438,8 +2412,7 @@ object TextQueries {
   private val sampGroupSplit: Q = (s, dir) => {
     val bucketed = Tables.load(s, dir, "documents")
       .withColumn("bucket",
-        conv(substring(sha2(col("source"), 256), 1, 7), 16, 10)
-          .cast("long") % 100)
+        sha256_prefix(col("source"), 7) % 100)
       .withColumn("split",
         when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "val").otherwise("test"))
@@ -3185,9 +3158,8 @@ object TextQueries {
     val docs = Tables.load(s, dir, "documents")
       .filter(col("text").isNotNull && col("n_chars") > 0)
     val top = docs
-      .withColumn("h", conv(substring(sha2(
-          concat(lit("pps:"), col("doc_id").cast("string")), 256),
-          1, 7), 16, 10).cast("long"))
+      .withColumn("h", sha256_prefix(
+          concat(lit("pps:"), col("doc_id").cast("string")), 7))
       .withColumn("u",
         (col("h") + 1).cast("double") / lit(268435456.0))
       .withColumn("k8", round(log(col("u")) /

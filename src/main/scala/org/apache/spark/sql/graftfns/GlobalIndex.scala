@@ -28,12 +28,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * broadcast join. The offsets array is numPartitions longs — the only
   * driver-scale piece. */
 object GlobalIndex {
-  def attach(df: DataFrame, rankCol: String): DataFrame =
-    attachWithTotal(df, rankCol)._1
 
-  /** attach + the total row count — the count is a BYPRODUCT of the
-    * offsets job this pattern already runs, so a caller needing N
-    * (e.g. a ring modulus) saves a whole separate count job. */
+  /** `df` with `rankCol` attached, and the total row count — the count
+    * is a BYPRODUCT of the offsets job this pattern already runs, so a
+    * caller needing N (e.g. a ring modulus) saves a whole separate
+    * count job. */
   def attachWithTotal(df: DataFrame, rankCol: String)
       : (DataFrame, Long) = {
     val spark = df.sparkSession

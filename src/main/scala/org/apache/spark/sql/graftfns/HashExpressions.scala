@@ -13,9 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * VectorExpressions.scala for the shim-package rationale).
   *
   * The Poisson-bootstrap / hash-sampling family derives its uniform
-  * draws as `conv(substring(sha2(key, 256), 1, nHex), 16, 10)` —
-  * digest, hex-ENCODE the 32 bytes to a string, SUBSTRING the first
-  * nHex chars, then string-PARSE them back to the integer they encode.
+  * draws from the SQL chain sha2(key, 256) → substring(·, 1, nHex) →
+  * conv(·, 16, 10) — digest, hex-ENCODE the 32 bytes to a string,
+  * SUBSTRING the first nHex chars, then string-PARSE them back to the
+  * integer they encode.
   * The three string trips cost more than the digest itself (measured
   * ~2.4× on the bootstrap's ×16-draws-per-row projection); this
   * expression computes the identical value straight from the digest
@@ -32,6 +33,9 @@ case class Sha256PrefixBits(child: Expression, nHex: Int)
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "sha256_prefix_bits"
+  // NULL in, NULL out, like the chain: a filter over the draw lets the
+  // optimizer infer (and push) IsNotNull on the key, as it does for conv
+  override def nullIntolerant: Boolean = true
 
   override def nullSafeEval(in: Any): Any =
     Sha256PrefixBits.prefix(in.asInstanceOf[UTF8String], nHex)
@@ -58,7 +62,7 @@ object Sha256PrefixBits {
   private[graftfns] def threadDigest(): MessageDigest = md.get()
 
   /** First `nHex` hex digits of sha256(bytes of s) as the integer they
-    * spell — exactly `conv(substring(sha2(s, 256), 1, nHex), 16, 10)`. */
+    * spell — exactly the SQL chain above, as a long. */
   def prefix(s: UTF8String, nHex: Int): Long = {
     val d = md.get()
     d.reset()
@@ -78,8 +82,8 @@ object Sha256PrefixBits {
 
 /** All `reps` derandomized draws of the Poisson-bootstrap family in ONE
   * call: element b = the 52-bit sha256 prefix of `key ++ ":" ++ b` —
-  * exactly `conv(substring(sha2(concat(key, ':', b), 256), 1, 13), 16,
-  * 10)` per replicate. One expression invocation per row digests all
+  * exactly the 13-digit SQL chain over concat(key, ':', b) per
+  * replicate. One expression invocation per row digests all
   * replicates off a shared key-byte buffer (the per-draw concat →
   * UTF8String → hex round trips of the spelled-out form are the
   * dominant cost, not the digests). */
@@ -133,6 +137,9 @@ object Sha256Prefix52Seq {
 }
 
 object HashFunctions {
+  /** The one sha-prefix draw every query uses: the first `nHex` hex
+    * digits of sha256(key) as a long ([[Sha256PrefixBits]]); the DuckDB
+    * oracle spells out the same chain. */
   def sha256_prefix(key: Column, nHex: Int): Column =
     ExpressionUtils.column(
       Sha256PrefixBits(ExpressionUtils.expression(key), nHex))

@@ -15,8 +15,10 @@ class BucketingSpec extends SparkSpecBase {
       .select("l_orderkey", "l_quantity")
     val o = Tables.load(spark, sf0001, "orders")
       .select("o_orderkey", "o_totalprice")
-    Sinks.writeBucketed(li, "li_bucketed", Seq("l_orderkey"), 8)
-    Sinks.writeBucketed(o, "o_bucketed", Seq("o_orderkey"), 8)
+    val dir = java.nio.file.Files.createTempDirectory("bucketed").toString
+    Sinks.writeBucketed(li, "li_bucketed", Seq("l_orderkey"), 8,
+      s"$dir/li")
+    Sinks.writeBucketed(o, "o_bucketed", Seq("o_orderkey"), 8, s"$dir/o")
 
     val joined = spark.table("li_bucketed")
       .join(spark.table("o_bucketed"),
@@ -39,6 +41,7 @@ class BucketingSpec extends SparkSpecBase {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.sql("DROP TABLE IF EXISTS li_bucketed")
       spark.sql("DROP TABLE IF EXISTS o_bucketed")
+      Sinks.rmTree(new java.io.File(dir))
     }
   }
 }

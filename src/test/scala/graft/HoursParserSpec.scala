@@ -88,7 +88,7 @@ class HoursParserSpec extends SparkSpecBase {
       "1:5 PM - 2:00 PM", //   single-digit minute: must not re-tokenize
       "11:00 AM - 3:00 PM4:30 PM - 10:00 PM", // glued ranges are valid
       "4:00 PM - 12:00 AM (Next day)", "11 AM - 3 PM")
-      .toDF("s").select(HoursParser.isParseable(col("s"))).as[Boolean]
+      .toDF("s").select(HoursParser.parse(col("s")).isNotNull).as[Boolean]
       .collect()
     assert(flags.toSeq ==
       Seq(false, true, true, false, false, false, false, false,
@@ -121,27 +121,6 @@ class HoursParserSpec extends SparkSpecBase {
       assert(i == gi)
       val expected = secs.grouped(2).map(p => (p.head, p(1))).toSeq
       assert(o.zip(c) == expected, s"case $i: '$str'")
-    }
-  }
-
-  test("property: overnight membership matches naive circle membership") {
-    val rnd = new scala.util.Random(7)
-    val cases = (0 until 500).map { i =>
-      (i, rnd.nextInt(86400).toLong, rnd.nextInt(86400).toLong,
-        rnd.nextInt(86400).toLong)
-    } ++ Seq((500, 100L, 100L, 100L), (501, 0L, 86399L, 86399L),
-      (502, 50000L, 10000L, 10000L), (503, 50000L, 10000L, 9999L))
-    val got = cases.toDF("i", "o", "c", "p")
-      .select(col("i"), HoursParser.isOpenAt(col("o"), col("c"), col("p"))
-        .as("open"))
-      .orderBy("i").as[(Int, Boolean)].collect()
-    cases.zip(got).foreach { case ((i, o, c, p), (gi, isOpen)) =>
-      assert(i == gi)
-      val expected =
-        if (o == c) false
-        else if (c > o) p >= o && p < c
-        else p >= o || p < c
-      assert(isOpen == expected, s"case $i: open=$o close=$c probe=$p")
     }
   }
 
@@ -216,7 +195,7 @@ class HoursParserSpec extends SparkSpecBase {
       val rows = try df.select(col("i"),
           coalesce(RegexParser.isParseable(col("s")), lit(false)),
           RegexParser.opens(col("s")), RegexParser.closes(col("s")),
-          HoursParser.parse(col("s")), HoursParser.isParseable(col("s")),
+          HoursParser.parse(col("s")), HoursParser.parse(col("s")).isNotNull,
           HoursParser.opens(col("s")), HoursParser.closes(col("s")))
         .orderBy("i").collect()
       finally confs.foreach { case (k, _) => spark.conf.unset(k) }

@@ -3,8 +3,8 @@ package graft
 import graft.ops.Multimodal
 import org.apache.spark.sql.functions._
 
-/** Multimodal plumbing: schema, partition-batched decode, frame sampling,
-  * binary dedup. The codec is the documented deterministic stub. */
+/** Multimodal plumbing: schema, frame sampling, binary dedup, perceptual
+  * hashing. The codec is the documented deterministic stub. */
 class MultimodalSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -17,17 +17,6 @@ class MultimodalSpec extends SparkSpecBase {
     assert(r.getLong(0) == 64)
     assert(r.getString(1).length == 64)
     assert(!r.getBoolean(2))
-  }
-
-  test("feature extraction is deterministic and partition-batched") {
-    val f1 = Multimodal.extractFeatures(media).collect()
-      .map(f => f.media_id -> f.features.toSeq).toMap
-    val f2 = Multimodal.extractFeatures(media.repartition(7)).collect()
-      .map(f => f.media_id -> f.features.toSeq).toMap
-    assert(f1 == f2, "features depend on partitioning")
-    assert(f1(0L).length == Multimodal.FakeCodec.featureDim)
-    // histogram features are a distribution
-    assert(math.abs(f1(0L).sum - 1.0f) < 1e-5)
   }
 
   test("frame sampling explodes every Nth fixed-size frame") {
@@ -60,19 +49,25 @@ class MultimodalSpec extends SparkSpecBase {
     // generator changes, bump Multimodal.fixturePath's version suffix.
     val n = Multimodal.fixtureRows
     assert(n == 2400)
-    val groups = Multimodal.dedupPayloads(
+    // the generator itself, not the cached on-disk fixture: a drifted
+    // generator must fail here even while an old fixture dir survives
+    val groups = Multimodal.withByteStats(
         Multimodal.syntheticMedia(spark, n).toDF())
+      .groupBy("payload_sha").agg(min("media_id").as("media_id"))
       .select("media_id").as[Long].collect().toSet
     assert(groups == (0L until 1280L).toSet,
       "keeper set drifted — fixture version bump required")
   }
 
   test("payload dedup keeps first media_id per content hash") {
-    val dup = media.toDF().unionByName(
-      media.toDF().withColumn("media_id", col("media_id") + 100))
-    val kept = Multimodal.dedupPayloads(dup)
-      .select("media_id").as[Long].collect().toSet
-    assert(kept == (0L until 30L).toSet, "kept wrong copies")
+    // q_media_dedup against a scalar group-by over the fixture's bytes
+    val rows = spark.read.parquet(Multimodal.mediaFixture(spark))
+      .select("media_id", "payload").as[(Long, Array[Byte])].collect()
+    val want = rows.groupBy(_._2.toSeq).values
+      .map(g => g.map(_._1).min -> g.length.toLong).toMap
+    val kept = SparkEntry.queries("q_media_dedup")(spark, sf0001)
+      .select("media_id", "n_copies").as[(Long, Long)].collect().toMap
+    assert(kept == want, "kept wrong copies")
   }
 
   test("phash64 is deterministic and byte-flip local") {

@@ -530,6 +530,39 @@ class PipelinePatternSpec extends SparkSpecBase {
       .map(r => (r, 0L, 0L, true)))
   }
 
+  test("Bloom builders: an empty key set builds no filter") {
+    // bloom_filter_agg over no rows yields a NULL buffer, which
+    // stat.bloomFilter cannot read: an empty key list gives the empty
+    // semi-join, an empty eval set removes nothing
+    val fact = Tables.load(spark, sf0001, "orders")
+      .select("o_orderkey", "o_custkey")
+    val semi = graft.ops.Relational.bloomSemiLong(fact, "o_custkey",
+      Seq.empty[Long].toDF("k"), "k")
+    assert(semi.columns.toSet == fact.columns.toSet)
+    assert(semi.count() == 0L)
+    val docs = Tables.load(spark, sf0001, "documents")
+    val kept = graft.ops.Curation.decontaminateBloom(docs, "text",
+      docs.filter(lit(false)), "text", expectedN = 1L << 16, fpp = 0.01)
+    assert(kept.count() == docs.count())
+  }
+
+  test("schema-only tables: the Bloom and sink read-back queries run") {
+    // the sinks read back with the schema of the frame they wrote: a
+    // directory written from no rows holds no parquet footer to infer
+    // one from (UNABLE_TO_INFER_SCHEMA)
+    val dir = nullFixtureDir("empty_all")
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings").foreach { t =>
+      spark.read.parquet(s"$sf0001/$t.parquet").limit(0)
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect().toSeq
+    assert(rows("q_etl_purge_bloom") == rows("q_etl_purge"))
+    Seq("q_text_decon_bloom", "q_sink_warehouse",
+      "q_etl_partition_overwrite", "q_etl_backfill", "q_src_file_meta",
+      "q_join_dpp", "q_src_partition_prune").foreach(rows)
+  }
+
   test("q_evt_anomaly: zero-variance groups emit no outliers (never throw)") {
     val dir = nullFixtureDir("anomaly_const")
     // 'const' has σ = 0: a plain `/` under ANSI would kill the scan on

@@ -91,58 +91,35 @@ class TextSimSpec extends SparkSpecBase {
     }
   }
 
-  test("simhash: near-dups land within small Hamming distance, found by bands") {
+  test("simhash: near-dups land within small Hamming distance") {
+    // q_text_simhash's fingerprint: one changed token of 60 moves few
+    // bits, a disjoint text many, an identical text none
     val base = (1 to 60).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 60).map(i =>
       if (i == 30) "CHANGED" else s"tok$i").mkString(" ")
     val disjoint = (200 to 260).map(i => s"tok$i").mkString(" ")
-    val docs = Seq((1L, base), (2L, nearDup), (3L, disjoint))
+    val fp = Seq((1L, base), (2L, nearDup), (3L, disjoint), (4L, base))
       .toDF("doc_id", "text")
-    val cand = TextSim.simhashCandidates(docs, col("doc_id"), col("text"),
-        maxHamming = 16)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(cand.contains((1L, 2L)), "near-dup pair missed")
-    assert(!cand.exists(p => p._1 == 3L || p._2 == 3L),
-      "disjoint doc produced a candidate")
-    // identical docs: Hamming 0
-    val same = TextSim.simhashCandidates(
-      Seq((1L, base), (2L, base)).toDF("doc_id", "text"), col("doc_id"),
-      col("text"), maxHamming = 0)
-      .select("hamming").as[Long].collect()
-    assert(same.toSeq == Seq(0L))
+      .select(col("doc_id"), TextSim.simhash(col("text")))
+      .as[(Long, Long)].collect().toMap
+    def hamming(a: Long, b: Long) = java.lang.Long.bitCount(fp(a) ^ fp(b))
+    assert(hamming(1L, 2L) <= 16, s"near-dup at Hamming ${hamming(1L, 2L)}")
+    assert(hamming(1L, 3L) > 16, s"disjoint at Hamming ${hamming(1L, 3L)}")
+    assert(hamming(1L, 4L) == 0)
   }
 
-  test("ngramJaccard matches scalar set arithmetic") {
+  test("jaccard over word 3-gram shingles matches scalar set arithmetic") {
+    // q_text_ngram_jaccard's measure: jaccard of the two shingle sets
     def gramsOf(s: String) = s.toLowerCase.split(" ").sliding(3)
       .map(_.mkString(" ")).toSet
     val a = "a b c d e f"; val b = "a b c d x y"
-    val expected = BigDecimal(
-      gramsOf(a).intersect(gramsOf(b)).size.toDouble /
-        gramsOf(a).union(gramsOf(b)).size)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val expected = gramsOf(a).intersect(gramsOf(b)).size.toDouble /
+      gramsOf(a).union(gramsOf(b)).size
     val got = Seq((a, b)).toDF("x", "y")
-      .select(TextSim.ngramJaccard(col("x"), col("y"), 3))
+      .select(TextSim.jaccard(TextSim.shingles(col("x"), 3),
+        TextSim.shingles(col("y"), 3)))
       .as[Double].head()
     assert(math.abs(got - expected) < 1e-9)
-  }
-
-  test("rollingFingerprint matches a scalar winnowing reference") {
-    val texts = Tables.load(spark, sf0001, "documents")
-      .filter(col("doc_id") < 5).select("doc_id", "text")
-      .as[(Long, String)].collect()
-    val got = Tables.load(spark, sf0001, "documents")
-      .filter(col("doc_id") < 5)
-      .select(col("doc_id"), TextSim.rollingFingerprint(col("text")))
-      .as[(Long, Long)].collect().toMap
-    // reference: min xxhash64 over word 4-grams — recompute via Spark's
-    // own hash on a literal to confirm the expression composes correctly
-    texts.foreach { case (id, text) =>
-      val grams = text.toLowerCase.split(" ").sliding(4).map(_.mkString(" "))
-        .toSeq
-      val expected = grams.map(g =>
-        Seq(g).toDF("g").select(xxhash64(col("g"))).as[Long].head()).min
-      assert(got(id) == expected, s"doc $id")
-    }
   }
 
   test("executor-regenerated LSH planes equal the driver-side reference") {
@@ -492,14 +469,13 @@ class TextSimSpec extends SparkSpecBase {
   }
 
   test("cosineDedup equals the brute-force pair set at the registered τ") {
-    // τ=0.42 is below the LSH pruning regime → the dispatcher runs the
-    // blocked-exact path, so equality holds by construction on ANY
-    // corpus (no dependence on seeded hyperplanes — the round-2 ADVICE
-    // fragility). sf0.1 (2000 vectors, 441 qualifying pairs) is the
-    // bench corpus.
+    // q_vec_cosine_dedup (TextSim.cosineDedupBlockedExact at τ=0.42):
+    // the exact join holds by construction on ANY corpus (no dependence
+    // on seeded hyperplanes). sf0.1 (2000 vectors, 441 qualifying
+    // pairs) is the bench corpus.
     for (sf <- Seq(sf0001, sf001, sf01)) {
-      val got = TextSim.cosineDedup(Tables.load(spark, sf, "embeddings"),
-        0.42).as[(Long, Long, Double)].collect().toSet
+      val got = SparkEntry.queries("q_vec_cosine_dedup")(spark, sf)
+        .as[(Long, Long, Double)].collect().toSet
       val brute = bruteDedupPairs(sf, 0.42)
       assert(got == brute,
         s"$sf: missed=${brute -- got} spurious=${got -- brute}")
@@ -546,8 +522,8 @@ class TextSimSpec extends SparkSpecBase {
     assert(got == want)
     // and on a real pair graph: group ids equal a scalar union-find
     val emb = Tables.load(spark, sf0001, "embeddings")
-    val realPairs = TextSim.cosineDedup(emb, 0.42).select("id_a", "id_b")
-      .as[(Long, Long)].collect()
+    val realPairs = TextSim.cosineDedupBlockedExact(emb, 0.42)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
     val ids = emb.select("vec_id").as[Long].collect()
     val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
     def find(x: Long): Long =
@@ -558,7 +534,7 @@ class TextSimSpec extends SparkSpecBase {
     }
     val wantReal = ids.map(i => i -> find(i)).toMap
     val gotReal = TextSim.dedupGroups(emb.select("vec_id"),
-        TextSim.cosineDedup(emb, 0.42).select("id_a", "id_b"))
+        TextSim.cosineDedupBlockedExact(emb, 0.42).select("id_a", "id_b"))
       .as[(Long, Long)].collect().toMap
     assert(gotReal == wantReal)
   }
@@ -659,56 +635,6 @@ class TextSimSpec extends SparkSpecBase {
       // dimension mismatch is loud-empty
       assert(g.topCells(ArrayData.toArrayData(vec :+ 0.0), cents, k).isEmpty)
     }
-  }
-
-  test("lshDedupParams: no pruning regime at τ=0.42, bounded at τ=0.9") {
-    // at the registered threshold the collision model must refuse LSH —
-    // full recall there forces ≈ all-pairs coverage (the round-2 verdict)
-    assert(TextSim.lshDedupParams(0.42).isEmpty,
-      "model claims LSH prunes at τ=0.42")
-    val p = TextSim.lshDedupParams(0.9)
-    assert(p.nonEmpty, "model refuses LSH in the pruning regime")
-    assert(p.get.expectedCoverage <= 0.2 && p.get.nTables <= 64,
-      s"infeasible params: $p")
-    // a near-exact threshold needs almost no tables
-    val hi = TextSim.lshDedupParams(0.99).get
-    assert(hi.expectedCoverage < p.get.expectedCoverage ||
-      hi.nTables <= p.get.nTables)
-  }
-
-  test("cosineDedup at τ=0.9 takes the LSH path and equals brute force") {
-    // planted clustered corpus: 24 clusters of 5 near-identical unit
-    // vectors (cosine ≥ 0.99 inside a cluster; cross-cluster pairs are
-    // ≈ orthogonal 64-dim Gaussians, far below 0.9). Deterministic seed +
-    // seeded hyperplanes → this either always passes or the params model
-    // is wrong.
-    val rnd = new scala.util.Random(7)
-    val rows = (0 until 24).flatMap { c =>
-      val base = Array.fill(64)(rnd.nextGaussian())
-      (0 until 5).map { m =>
-        val v = base.map(x => (x + 0.02 * rnd.nextGaussian()).toFloat)
-        (c * 5L + m, v.toSeq)
-      }
-    }
-    val emb = rows.toDF("vec_id", "embedding")
-    val e = emb.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-    val a = e.select(col("vec_id").as("id_a"), col("v").as("va"))
-      .withColumn("na", TextSim.l2Norm(col("va")))
-    val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"))
-      .withColumn("nb", TextSim.l2Norm(col("vb")))
-    val brute = a.join(b, col("id_a") < col("id_b"))
-      .withColumn("sim", round(
-        TextSim.dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
-      .filter(col("sim") >= 0.9)
-      .select("id_a", "id_b", "sim")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(brute.size >= 24 * 10 * 9 / 10, // ≥ 90% of C(5,2)·24 planted
-      s"fixture lost its clusters: ${brute.size} pairs")
-    val got = TextSim.cosineDedup(emb, 0.9)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(got == brute,
-      s"missed=${brute -- got} spurious=${got -- brute}")
   }
 
   test("annCosineIvf recall vs exact kNN is usable; nProbe=nCells is exact") {

@@ -11,8 +11,10 @@ by query name, so the two directories may use different suffixes. Before
 comparing, each plan is normalized: expression ids (`#123`), `plan_id=`,
 RDD ids and the source lines that created them (`MapPartitionsRDD[12] at
 localCheckpoint at Foo.scala:34`), broadcast ids (`Broadcast(7)`), UUIDs,
-JVM lambda class names and identity hashes, and the stamp suffixes of
-`target/tmp` directories. Prints `same` or `differs` per query, with a
+JVM lambda class names and identity hashes, the checkout root before
+`target/tmp` and `target/spark-warehouse` (so a `git archive` export of
+another commit, run from its own directory, pairs with the working tree)
+and the stamp suffixes of `target/tmp` directories. Prints `same` or `differs` per query, with a
 unified diff of the normalized plans for each differing query, and a
 query found in one directory only as `only in <dir>`. Exits 1 if any
 query differs or is missing on one side.
@@ -23,6 +25,8 @@ import re
 import sys
 
 NORMALIZE = [
+    (re.compile(r"/[^\s,\[\]]*?/target/(?=tmp/|spark-warehouse/)"),
+     "<root>/target/"),
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"RDD\[\d+\]( at \w+ at )[\w$.]+:\d+"), r"RDD[]\1<site>"),
