@@ -33,11 +33,6 @@ object Bench {
     // untimed warm-up: session/codegen/scheduler startup should not be
     // attributed to whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
-    // fixture materialization (NDJSON dump for the file sources) happens
-    // outside the timed region — the operators under test are the scans,
-    // not the one-off fixture write
-    graft.queries.SourceQueries.prepareFixtures(spark, sfDir)
-    graft.ops.Multimodal.mediaFixture(spark)
     // warm the probe paths once so the first per-query reading is not
     // codegen-cold (which would overstate the first query's correction)
     (1 to 3).foreach { _ => probeOnce(spark); cpuProbeOnce(spark) }

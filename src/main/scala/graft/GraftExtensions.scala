@@ -42,62 +42,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     if (args.length != n) throw new IllegalArgumentException(
       s"$fn requires exactly $n arguments, got ${args.length}")
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (args: Seq[Expression]) => {
-        arity("dot_product", args, 2)
-        DotProduct(args(0), args(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (args: Seq[Expression]) => {
-        arity("simhash64", args, 1)
-        SimHash64(args(0))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("minhashes"),
-      new ExpressionInfo(classOf[MinHashes].getName, "minhashes"),
-      (args: Seq[Expression]) => {
-        arity("minhashes", args, 2)
-        MinHashes(args(0), litInt("minhashes", args(1), 1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (args: Seq[Expression]) => {
-        arity("shingle_hashes", args, 2)
-        ShingleHashes(args(0), litInt("shingle_hashes", args(1), 1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("token_hashes"),
-      new ExpressionInfo(classOf[TokenHashes].getName, "token_hashes"),
-      (args: Seq[Expression]) => {
-        arity("token_hashes", args, 1)
-        TokenHashes(args(0))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("token_bigrams"),
-      new ExpressionInfo(classOf[TokenBigrams].getName, "token_bigrams"),
-      (args: Seq[Expression]) => {
-        arity("token_bigrams", args, 1)
-        TokenBigrams(args(0))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("token_ngrams"),
-      new ExpressionInfo(classOf[TokenNgrams].getName, "token_ngrams"),
-      (args: Seq[Expression]) => {
-        arity("token_ngrams", args, 2)
-        TokenNgrams(args(0), litInt("token_ngrams", args(1), 1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("parse_hours"),
-      new ExpressionInfo(classOf[ParseHours].getName, "parse_hours"),
-      (args: Seq[Expression]) => {
-        arity("parse_hours", args, 1)
-        ParseHours(args(0))
-      }))
-  }
+  /** One SQL function: its name, expression class, argument count, the
+    * argument positions that must be INT literals ([[litInt]]) and the
+    * constructor, which gets those positions as `Int`s and the others
+    * as expressions. */
+  private case class Fn(name: String, cls: Class[_ <: Expression],
+                        arity: Int, intLits: Set[Int],
+                        make: Seq[Any] => Expression)
+
+  private val functions = Seq(
+    Fn("dot_product", classOf[DotProduct], 2, Set.empty,
+      { case Seq(a: Expression, b: Expression) => DotProduct(a, b) }),
+    Fn("simhash64", classOf[SimHash64], 1, Set.empty,
+      { case Seq(a: Expression) => SimHash64(a) }),
+    Fn("minhashes", classOf[MinHashes], 2, Set(1),
+      { case Seq(a: Expression, n: Int) => MinHashes(a, n) }),
+    Fn("shingle_hashes", classOf[ShingleHashes], 2, Set(1),
+      { case Seq(a: Expression, n: Int) => ShingleHashes(a, n) }),
+    Fn("token_hashes", classOf[TokenHashes], 1, Set.empty,
+      { case Seq(a: Expression) => TokenHashes(a) }),
+    Fn("token_bigrams", classOf[TokenBigrams], 1, Set.empty,
+      { case Seq(a: Expression) => TokenBigrams(a) }),
+    Fn("token_ngrams", classOf[TokenNgrams], 2, Set(1),
+      { case Seq(a: Expression, n: Int) => TokenNgrams(a, n) }),
+    Fn("parse_hours", classOf[ParseHours], 1, Set.empty,
+      { case Seq(a: Expression) => ParseHours(a) }))
+
+  override def apply(e: SparkSessionExtensions): Unit =
+    functions.foreach { f =>
+      e.injectFunction((
+        FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name),
+        (args: Seq[Expression]) => {
+          arity(f.name, args, f.arity)
+          f.make(args.zipWithIndex.map { case (a, i) =>
+            if (f.intLits(i)) litInt(f.name, a, i) else a })
+        }))
+    }
 }

@@ -495,16 +495,16 @@ object PipelineQueries {
     val stage = SourceQueries.freshSinkDir("wap_stage")
     val pub = SourceQueries.freshSinkDir("wap_pub")
     val produced = org.apache.spark.sql.Observation()
-    Tables.load(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .observe(produced, count(lit(1)).as("rows"))
+    orders.observe(produced, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(stage)
     graft.etl.Sinks.publishAudited(s, stage, pub,
       keyCol = "o_orderkey",
       expectedRows = produced.get.apply("rows").asInstanceOf[Long])
     // (Observation.get blocks until the write's QueryExecution ends, so
     // the audit always sees the final count)
-    s.read.parquet(pub)
+    s.read.schema(orders.schema).parquet(pub)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"),
         expr("CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 4) " +
@@ -524,12 +524,11 @@ object PipelineQueries {
   private val etlCompact: Q = (s, dir) => {
     val small = SourceQueries.freshSinkDir("compact_small")
     val out = SourceQueries.freshSinkDir("compact_out")
-    Tables.load(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
-      .repartition(16)
-      .write.mode("overwrite").parquet(small)
+    ev.repartition(16).write.mode("overwrite").parquet(small)
     graft.etl.Sinks.compact(s, small, out, targetFiles = 2)
-    s.read.parquet(out)
+    s.read.schema(ev.schema).parquet(out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         expr("CAST(round(sum(CAST(value AS DECIMAL(18,2))), 4) AS DOUBLE)")
@@ -1407,15 +1406,15 @@ object PipelineQueries {
     * must be value-preserving for them to agree. */
   private val etlZorder: Q = (s, dir) => {
     val out = SourceQueries.freshSinkDir("zorder")
-    Tables.load(s, dir, "events")
+    val z = Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"),
         dayofyear(col("ts")).cast("long").as("doy"))
       .withColumn("zv",
         graft.ops.Relational.zOrder2(col("user_id"), col("doy")))
-      .repartitionByRange(8, col("zv"))
+    z.repartitionByRange(8, col("zv"))
       .sortWithinPartitions("zv")
       .write.mode("overwrite").parquet(out)
-    s.read.parquet(out)
+    s.read.schema(z.schema).parquet(out)
       .groupBy(shiftright(col("zv"), 8).as("zbucket"))
       .agg(count(lit(1)).as("n"),
         min("user_id").as("min_user"), max("user_id").as("max_user"),
@@ -1448,9 +1447,9 @@ object PipelineQueries {
     def partial(df: DataFrame) = df.groupBy("day", "event_type")
       .agg(count(lit(1)).as("n"), sum("v").as("sv"))
     val stateDir = SourceQueries.freshSinkDir("incr_state")
-    partial(tagged.filter(col("day") < col("max_day") && !late))
-      .coalesce(2).write.mode("overwrite").parquet(stateDir)
-    val state = s.read.parquet(stateDir)
+    val history = partial(tagged.filter(col("day") < col("max_day") && !late))
+    history.coalesce(2).write.mode("overwrite").parquet(stateDir)
+    val state = s.read.schema(history.schema).parquet(stateDir)
     val delta = partial(
       tagged.filter(col("day") === col("max_day") || late))
     state.unionByName(delta)
@@ -1581,7 +1580,7 @@ object PipelineQueries {
         ev.filter(col("event_id") % 4 < v), out, v)
     }
     val (before, after) = graft.etl.Sinks.vacuumVersions(out, keep = 1)
-    s.read.parquet(s"$out/v3")
+    s.read.schema(ev.schema).parquet(s"$out/v3")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         expr("CAST(round(sum(CAST(value AS DECIMAL(18,2))), 4) " +

@@ -17,66 +17,63 @@ object SourceQueries {
     * under [[graft.GraftSession.root]]. */
   private[graft] val scratch = s"${graft.GraftSession.target}/tmp"
 
-  /** Per-thread previous scratch output dir per sink query, deleted on
-    * the thread's next invocation (same rationale as [[lastStreamSink]]:
-    * bounded scratch growth without one run deleting a dir a concurrent
-    * run still reads). */
-  private val lastSinkDir =
-    new ThreadLocal[scala.collection.mutable.Map[String, String]] {
+  /** This thread's release action per kind of per-call scratch (a
+    * sink dir, a memory-sink view, a bucketed catalog table). Each call
+    * first releases this thread's previous resource of its kind, so a
+    * serial harness holds one per kind, and a run never releases what a
+    * concurrent run on another thread still reads. */
+  private val held =
+    new ThreadLocal[scala.collection.mutable.Map[String, () => Unit]] {
       override def initialValue() = scala.collection.mutable.Map.empty
     }
 
-  /** Age horizon for the global scratch sweep: far beyond any single
-    * query's read window, so the sweep can never delete a dir a live
-    * concurrent invocation still reads. Test-settable. */
-  @volatile private[graft] var sinkDirMaxAgeMs: Long = 10 * 60 * 1000L
+  /** Release this thread's previous `kind` resource, then hold `release`
+    * for the one the caller is about to make. */
+  private def hold(kind: String)(release: () => Unit): Unit = {
+    val mine = held.get()
+    mine.remove(kind).foreach(_())
+    mine(kind) = release
+  }
 
-  /** ALL live scratch dirs (dir → creation millis), across threads —
-    * the global complement to [[lastSinkDir]]: the thread-local delete
-    * keeps steady-state scratch at one dir per kind for a serial
-    * harness, but a thread that dies would otherwise pin its last dir
-    * until JVM exit, so every allocation also sweeps dirs older than
-    * [[sinkDirMaxAgeMs]] regardless of owning thread. */
-  private val liveSinkDirs =
-    scala.collection.mutable.LinkedHashMap.empty[String, Long]
+  /** Age horizon of the on-disk sweep: far beyond any single query's
+    * read window, so the sweep never deletes a dir a live run still
+    * reads. A dir's mtime is never earlier than its allocation, so a
+    * dir past the horizon on disk is past it since allocation too. */
+  private[graft] val sinkDirMaxAgeMs: Long = 10 * 60 * 1000L
 
   /** Basename shape of every [[freshSinkDir]] allocation: kind + 32-hex
     * stripped UUID. Deliberately does NOT match the stamp-keyed
     * persistent fixtures (`ndjson_*`, `etl_wh_*` — their content-stamp
-    * tails are ≤16 hex and their keys contain dots), so the cross-JVM
-    * sweep can never reclaim a fixture that is MEANT to outlive the
-    * process. */
+    * tails are ≤16 hex and their keys contain dots), so the sweep can
+    * never reclaim a fixture that is MEANT to outlive the process. */
   private val sinkDirNameRe = java.util.regex.Pattern
     .compile("[a-z_]+_[0-9a-f]{32}")
 
-  private[graft] def freshSinkDir(kind: String): String = {
+  private def uuid(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "")
+
+  /** `drop` on `s`, unless `s` was stopped since: its catalog went with
+    * it. */
+  private def inSession(s: SparkSession)(drop: SparkSession => Unit): Unit =
+    if (!s.sparkContext.isStopped) drop(s)
+
+  private[graft] def freshSinkDir(kind: String): String =
+    freshSinkDir(kind, _ => ())
+
+  /** A fresh scratch dir of `kind`. This thread's previous one is
+    * released first: `close` runs on it (a Derby shutdown, a catalog
+    * drop), then it is deleted. Dirs that dead threads or JVMs left
+    * behind are swept by name shape once older than
+    * [[sinkDirMaxAgeMs]]. */
+  private def freshSinkDir(kind: String, close: String => Unit): String = {
+    val d = s"$scratch/${kind}_${uuid()}"
+    hold(kind) { () => close(d); graft.etl.Sinks.rmTree(new java.io.File(d)) }
     val now = System.currentTimeMillis()
-    val dirs = lastSinkDir.get()
-    val mine = dirs.get(kind)
-    val d = s"$scratch/${kind}_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    // sink dirs abandoned by DEAD JVMs are invisible to the in-memory
-    // registry; reclaim them by name shape + mtime age (a crashed bench
-    // or verify run would otherwise grow scratch forever)
-    val onDisk = Option(new java.io.File(scratch).listFiles())
+    Option(new java.io.File(scratch).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && sinkDirNameRe.matcher(f.getName).matches()
         && now - f.lastModified > sinkDirMaxAgeMs)
-      .map(_.getPath).toSeq
-    val doomed = liveSinkDirs.synchronized {
-      mine.foreach(liveSinkDirs.remove)
-      val expired = liveSinkDirs.collect {
-        case (dir, born) if now - born > sinkDirMaxAgeMs => dir
-      }.toSeq
-      expired.foreach(liveSinkDirs.remove)
-      // never sweep a dir this JVM registered but whose age is still
-      // inside the horizon — a live concurrent run may be reading it
-      val stale = onDisk.filterNot(liveSinkDirs.contains)
-      liveSinkDirs(d) = now
-      (mine.toSeq ++ expired ++ stale).distinct
-    }
-    doomed.foreach(old => graft.etl.Sinks.rmTree(new java.io.File(old)))
-    dirs(kind) = d
+      .foreach(graft.etl.Sinks.rmTree)
     d
   }
 
@@ -193,16 +190,6 @@ object SourceQueries {
       new java.io.File(s"$path/_SUCCESS").createNewFile(): Unit
     }
 
-  /** Pre-build fixtures outside any timed region (Bench calls this before
-    * the timing loop). */
-  def prepareFixtures(s: SparkSession, dir: String): Unit = {
-    ndjsonFixture(s, dir)
-    csvFixture(s, dir)
-    orcFixture(s, dir)
-    xmlFixture(s, dir)
-    binFixture(s, dir): Unit
-  }
-
   /** q_src_parquet — schema-pinned columnar scan with projection (ref
     * Postgres table read `database/app.py:76-82`; our at-rest format is
     * parquet, SURVEY.md §1.4). The 3-column select prunes the read schema
@@ -309,21 +296,12 @@ object SourceQueries {
     * same logical rows from the events parquet; MemoryStream-driven
     * incremental coverage in StreamingSpec. The memory-sink name is
     * unique per invocation so concurrent runs in one session cannot
-    * clobber each other's table. */
-  /** THIS THREAD's previous memory-sink name, dropped on the thread's
-    * next invocation so repeated runs don't accumulate unbounded
-    * in-memory sink tables. Thread-local on purpose: a global register
-    * would let invocation A drop the sink a concurrent invocation B is
-    * still reading (the drop fires before B's DataFrame is consumed) —
-    * the exact cross-run interference the unique names exist to prevent.
-    * A thread only ever drops a sink whose result IT produced earlier. */
-  private val lastStreamSink = new ThreadLocal[String]
-
+    * clobber each other's table; the view is dropped by this thread's
+    * next invocation ([[hold]]). */
   private val srcStreamFile: Q = (s, dir) => {
     val path = ndjsonFixture(s, dir)
-    val sink = s"src_stream_file_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    Option(lastStreamSink.get()).foreach(old => s.catalog.dropTempView(old))
-    lastStreamSink.set(sink)
+    val sink = s"src_stream_file_${uuid()}"
+    hold("src_stream_file")(() => inSession(s)(_.catalog.dropTempView(sink)))
     val stream = s.readStream
       .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
       .json(path)
@@ -382,12 +360,15 @@ object SourceQueries {
     roundTripAgg(s.read.schema(ev.schema).parquet(out))
   }
 
-  /** Per-thread previous Derby db url, shut down (unmounted from the
-    * engine) on the next invocation BEFORE [[freshSinkDir]] reclaims its
-    * directory — otherwise the engine would keep dead databases booted
-    * for the JVM lifetime (same bounded-scratch rationale as
-    * [[lastBucketedTable]]). */
-  private val lastJdbcUrl = new ThreadLocal[String]
+  /** A fresh Derby database url of `kind`, in a [[freshSinkDir]] whose
+    * release shuts the database down (unmounts it from the engine)
+    * before the dir is deleted: otherwise the engine would keep dead
+    * databases booted for the JVM lifetime. */
+  private def freshDerbyUrl(kind: String): String = {
+    val out = freshSinkDir(kind,
+      d => graft.etl.Sinks.shutdownDerby(s"jdbc:derby:$d/db"))
+    s"jdbc:derby:$out/db;create=true"
+  }
 
   /** q_sink_jdbc — REAL `format("jdbc")` serving-DB load (ref ORM load
     * into Postgres `database/parse_and_upload_to_db.py:99-100,173-175`,
@@ -402,10 +383,7 @@ object SourceQueries {
     * `event_id % 5` subset — row-based INSERT throughput is the target
     * DB's ceiling, not Spark's, at any scale. */
   private val sinkJdbc: Q = (s, dir) => {
-    Option(lastJdbcUrl.get()).foreach(graft.etl.Sinks.shutdownDerby)
-    val out = freshSinkDir("sink_jdbc")
-    val url = s"jdbc:derby:$out/db;create=true"
-    lastJdbcUrl.set(url)
+    val url = freshDerbyUrl("sink_jdbc")
     val ev = Tables.load(s, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") % 5 === 0)
@@ -428,10 +406,7 @@ object SourceQueries {
     * copy — a boundary off-by-one (row lost to `<` vs `<=` at a slice
     * edge, or counted by two slices) breaks the hash. */
   private val srcJdbc: Q = (s, dir) => {
-    Option(lastJdbcUrl.get()).foreach(graft.etl.Sinks.shutdownDerby)
-    val out = freshSinkDir("src_jdbc")
-    val url = s"jdbc:derby:$out/db;create=true"
-    lastJdbcUrl.set(url)
+    val url = freshDerbyUrl("src_jdbc")
     val ev = Tables.load(s, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") % 3 === 0)
@@ -462,12 +437,6 @@ object SourceQueries {
         min("event_id").as("min_id"), max("event_id").as("max_id"))
   }
 
-  /** Per-thread previous bucketed catalog table, dropped on the next
-    * invocation (same bounded-scratch rationale as [[freshSinkDir]];
-    * the table is external so the data dir is reclaimed by
-    * freshSinkDir's delete, the DROP reclaims the catalog entry). */
-  private val lastBucketedTable = new ThreadLocal[String]
-
   /** q_sink_bucketed — bucketed warehouse table + shuffle-free
     * aggregation/join: events written `bucketBy(8, user_id)`, then two
     * per-user aggregates and their join all reuse the bucket layout —
@@ -476,14 +445,12 @@ object SourceQueries {
     * shuffle once at write time, every downstream user_id-keyed
     * query — daily — reads pre-partitioned data. Ref: the load layout
     * choice `database/parse_and_upload_to_db.py:173-175`, re-expressed
-    * as a Spark bucketed table. */
+    * as a Spark bucketed table. The table is external: its release
+    * drops the catalog entry, then deletes the data dir. */
   private val sinkBucketed: Q = (s, dir) => {
-    val out = freshSinkDir("sink_bucketed")
-    val tbl = s"bucketed_events_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    Option(lastBucketedTable.get())
-      .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-    lastBucketedTable.set(tbl)
+    val tbl = s"bucketed_events_${uuid()}"
+    val out = freshSinkDir("sink_bucketed",
+      _ => inSession(s)(_.sql(s"DROP TABLE IF EXISTS $tbl"): Unit))
     graft.etl.Sinks.writeBucketed(Tables.load(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value"),
       tbl, Seq("user_id"), 8, out)
@@ -709,7 +676,10 @@ object SourceQueries {
         ']')""").as("value"))
       .repartition(1)
       .write.mode("overwrite").text(out)
-    nationsByRegion(s.read.option("multiLine", "true").json(out))
+    // the types JSON inference gives the written keys, pinned: no
+    // inference job, and an empty array reads back as no rows
+    nationsByRegion(s.read.option("multiLine", "true")
+      .schema("n_nationkey LONG, n_name STRING, n_regionkey LONG").json(out))
   }
 
   /** The per-region rollup the nation round-trips must reproduce from

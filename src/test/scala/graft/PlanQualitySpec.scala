@@ -66,14 +66,14 @@ class PlanQualitySpec extends SparkSpecBase {
       p.contains("BroadcastHashJoin"), "expected an equi-join on bucket id")
   }
 
-  test("q_vec_cosine_dedup has no nested-loop join (LSH buckets, not all-pairs)") {
+  test("q_vec_cosine_dedup joins its blocks on bkey, no nested loop") {
     val p = plan("q_vec_cosine_dedup")
     assert(!p.contains("BroadcastNestedLoopJoin") &&
       !p.contains("CartesianProduct"),
       "cosine dedup regressed to an all-pairs join:\n" +
         p.linesIterator.take(20).mkString("\n"))
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
-      p.contains("BroadcastHashJoin"), "expected an equi-join on bucket id")
+      p.contains("BroadcastHashJoin"), "expected an equi-join on bkey")
   }
 
   // the two ANN plan gates pin the RAW kernels (the production
@@ -335,6 +335,21 @@ class PlanQualitySpec extends SparkSpecBase {
       "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .head().getDouble(0)
     assert(r == 11.0)
+  }
+
+  test("GraftExtensions: a wrong arity or a non-literal width names the function") {
+    def failure(sql: String): String = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val arity = failure("SELECT dot_product(array(1.0d, 2.0d))")
+    assert(arity.contains("dot_product requires exactly 2 arguments, got 1"),
+      arity)
+    val width = failure(
+      "SELECT minhashes(array(id, id + 1), CAST(id AS INT)) FROM range(1)")
+    assert(width.contains("minhashes: argument 2 must be an INT literal"),
+      width)
   }
 
   test("GraftExtensions: the SQL hash family matches the column API") {

@@ -84,8 +84,10 @@ class SinksAndApproxSpec extends SparkSpecBase {
   test("sink scratch dirs from dead threads are reclaimed by the age sweep") {
     import graft.queries.SourceQueries
     val scratchDir = new java.io.File(SourceQueries.scratch)
-    def appendDirs = Option(scratchDir.listFiles()).getOrElse(Array.empty)
-      .count(_.getName.startsWith("sink_append_"))
+    def appendDirSet = Option(scratchDir.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith("sink_append_")).toSet
+    def appendDirs = appendDirSet.size
+    val before = appendDirSet
     // short-lived threads each run the sink query once and die: their
     // ThreadLocal cleanup can never fire again, so each leaves one dir.
     // A bare Thread swallows exceptions — under parallel-suite load a
@@ -106,15 +108,43 @@ class SinksAndApproxSpec extends SparkSpecBase {
     assert(ok.get >= 1, "every sink thread failed — not a sweep issue")
     assert(appendDirs >= ok.get,
       s"expected >=${ok.get} leftover dirs, got $appendDirs")
-    // age horizon 0 → the next allocation (any kind, any thread) sweeps
-    // every dead thread's dir; only the fresh invocation's dir survives
-    val saved = SourceQueries.sinkDirMaxAgeMs
-    try {
-      SourceQueries.sinkDirMaxAgeMs = 0L
-      SparkEntry.queries("q_sink_append")(spark, sf0001).count(): Unit
-      assert(appendDirs <= 2,
-        s"age sweep left $appendDirs sink_append dirs behind")
-    } finally SourceQueries.sinkDirMaxAgeMs = saved
+    // the dead threads' dirs aged past the horizon → the next
+    // allocation (any kind, any thread) sweeps them; only the fresh
+    // invocation's dir survives
+    val past = System.currentTimeMillis() - SourceQueries.sinkDirMaxAgeMs -
+      60 * 1000L
+    (appendDirSet -- before).foreach(_.setLastModified(past): Unit)
+    SparkEntry.queries("q_sink_append")(spark, sf0001).count(): Unit
+    assert(appendDirs <= 2,
+      s"age sweep left $appendDirs sink_append dirs behind")
+  }
+
+  test("each scratch kind releases only this thread's previous resource") {
+    import graft.queries.SourceQueries
+    def scratchDirs = Option(new java.io.File(SourceQueries.scratch)
+      .listFiles()).getOrElse(Array.empty).map(_.getName).toSet
+    def catalogNames =
+      spark.catalog.listTables().collect().map(_.name).toSet
+    val (dirsBefore, namesBefore) = (scratchDirs, catalogNames)
+    // a fresh thread: its register starts empty, so what it leaves
+    // behind is exactly what it holds
+    var failure: Option[Throwable] = None
+    val t = new Thread(() =>
+      try (1 to 3).foreach { _ =>
+        Seq("q_sink_bucketed", "q_src_stream_file", "q_sink_jdbc",
+            "q_src_jdbc")
+          .foreach(q => SparkEntry.queries(q)(spark, sf0001).count(): Unit)
+      } catch { case e: Throwable => failure = Some(e) })
+    t.start(); t.join()
+    failure.foreach(e => fail(s"a register query failed: $e", e))
+    val dirs = scratchDirs -- dirsBefore
+    val names = catalogNames -- namesBefore
+    def count(set: Set[String], prefix: String) =
+      set.count(_.startsWith(prefix))
+    assert(count(names, "bucketed_events_") <= 1, names)
+    assert(count(names, "src_stream_file_") <= 1, names)
+    assert(count(dirs, "sink_jdbc_") == 1, dirs)
+    assert(count(dirs, "src_jdbc_") == 1, dirs)
   }
 
   test("stamped fixtures: a new code stamp rebuilds and sweeps the old dir") {
