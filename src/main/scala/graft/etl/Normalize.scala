@@ -1,15 +1,10 @@
 package graft.etl
 
-import java.util.UUID
-import java.util.concurrent.{CompletableFuture, ExecutionException,
-  Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicReference
-
 import graft.Schemas
 import graft.ops.{HoursParser, Relational}
-import org.apache.spark.sql.{DataFrame, SparkSession, classic}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfns.GlobalIndex
 
 /** NDJSON → 11-table normalized warehouse: the set-oriented replacement of
   * the reference's sequential per-record loader
@@ -18,22 +13,25 @@ import org.apache.spark.sql.functions._
   * Where the reference pays one Postgres round-trip per record plus an
   * N+1 `get_or_create` per attribute value (`:31-47`), this pipeline is
   * five declarative stages — read → validate/quarantine → hub →
-  * per-collection explode/distinct/join-back → write — whose only
-  * synchronization points are the distinct/window shuffles. Every
+  * per-collection explode/join-back → write — whose only synchronization
+  * points are the dedup, distinct and range shuffles. Every
   * `get_or_create` becomes one broadcast hash join against a distinct'd
   * dim; at 100 TB the dims stay broadcastable because they are bounded
   * vocabularies, and the fact-side work is embarrassingly parallel.
   *
-  * Surrogate ids are global row numbers over the natural key
+  * Surrogate ids are deterministic across runs and cluster layouts
+  * (SURVEY.md §7.5.4); the reference's autoincrement ids are
+  * insertion-order-dependent and unreproducible. Two global numberings
   * ([[Relational.globalRowNumber]]: range-partitioned local ranks +
-  * per-partition offsets, no single-partition window) — deterministic
-  * across runs and cluster layouts (SURVEY.md §7.5.4); the reference's
-  * autoincrement ids are insertion-order-dependent and unreproducible.
-  * Each numbering runs its range-sample and count jobs before its
-  * DataFrame exists; once the hub is numbered, the nine numberings that
-  * read it (open_hours, four dims, four bridges) depend on nothing but
-  * the hub, so [[normalize]] submits them concurrently instead of paying
-  * nine rounds of per-job latency one after another.
+  * per-partition offsets, no single-partition window) assign them all:
+  *  - the hub's, by bizId. Each hub row carries its five child
+  *    collections as sorted arrays, and the numbering also attaches the
+  *    running sum of each array's size. A child row's id is then its
+  *    business's offset plus its position in the array (Dremel's
+  *    parent-and-position addressing), so the child rows come from
+  *    narrow `posexplode`s, with no shuffle or numbering of their own;
+  *  - the dims', over the distinct (kind, name) pairs of all four name
+  *    dims at once, with one running count per kind.
   */
 object Normalize {
 
@@ -58,102 +56,68 @@ object Normalize {
     (raw.filter(ok), raw.filter(!coalesce(ok, lit(false))))
   }
 
-  /** Build a 1-column name dim with deterministic ids from the non-null
-    * names of a bridge's rows (the set form of `get_or_create`,
-    * `parse_and_upload_to_db.py:31-47`). */
-  private def dim(rows: DataFrame): DataFrame =
-    Relational.globalRowNumber(rows.select("name").distinct(),
-      Seq(col("name")), rankCol = "id")
-      .select("id", "name")
-
-  /** One collection attribute: its dim, its bridge, the bridge's dim-id
-    * column, and the exploded (business_id, name, payload...) rows. The
-    * rows hold no null name: the dim join would drop one only after the
-    * bridge is numbered, leaving a gap in the bridge ids. */
-  private final case class Collection(dim: String, bridge: String,
-                                      dimIdCol: String, rows: DataFrame) {
-    def payload: Seq[String] =
-      rows.columns.toSeq.filterNot(Set("business_id", "name"))
-
-    /** Bridge ids, numbered before the dim exists ([[normalize]] says
-      * why (business_id, name) order is (business_id, dim id) order). */
-    def numbered: DataFrame = Relational.globalRowNumber(rows,
-      Seq(col("business_id"), col("name")), rankCol = "id")
-
-    /** The numbered bridge with each name replaced by its dim id. */
-    def joined(dimDf: DataFrame, numberedDf: DataFrame): DataFrame =
-      numberedDf.join(broadcast(dimDf.select(col("id").as(dimIdCol),
-          col("name"))), "name")
-        .select(("id" +: "business_id" +: dimIdCol +: payload).map(col): _*)
+  /** A name dim, its bridge, the bridge's dim-id column, and the
+    * bridge's payload column, read from the child array's elements
+    * (amenity's `is_available`). A child array of a dim with a payload
+    * holds structs whose `name` field is the name. */
+  private final case class NameDim(dim: String, bridge: String,
+      idCol: String, payload: Option[String] = None) {
+    /** The name of child element `e`, or the names of child array `e`. */
+    def name(e: Column): Column = if (payload.isEmpty) e else e("name")
   }
 
-  /** Runs `body` with a `submit` that starts a build on its own thread of
-    * a pool of `threads`, through `SQLExecution.withThreadLocalCaptured`,
-    * so the jobs the build starts carry the caller's job group, local
-    * properties and active session, plus a job tag of this call. Returns
-    * the builds' results by name once every build has ended: no job of
-    * this call outlives it and no pool thread is left. The first build to
-    * fail has its own exception rethrown; from that moment, and likewise
-    * when the caller is interrupted, the other builds' jobs are cancelled
-    * by the tag, also those they start later, so a failure does not wait
-    * for the longest branch. */
-  private[graft] def inBranches(spark: SparkSession, threads: Int)(
-      body: ((=> DataFrame) => CompletableFuture[DataFrame]) =>
-        Seq[(String, CompletableFuture[DataFrame])]
-  ): Seq[(String, DataFrame)] = {
-    val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
-      val t = new Thread(r, "normalize-branch")
-      t.setDaemon(true)
-      t
-    })
-    val session = spark.asInstanceOf[classic.SparkSession]
-    val sc = spark.sparkContext
-    val tag = s"normalize-branches-${UUID.randomUUID()}"
-    val failure = new AtomicReference[Throwable]
-    def submit(build: => DataFrame) =
-      SQLExecution.withThreadLocalCaptured(session, pool) {
-        sc.addJobTag(tag)
-        try build
-        catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
-      }
-    // polls, so a job a build starts after a cancellation is cancelled too
-    def drain(cancel: => Boolean): Unit = {
-      pool.shutdown()
-      while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS))
-        if (cancel) sc.cancelJobsWithTag(tag)
-    }
-    try {
-      val branches = body(submit)
-      drain(failure.get != null)
-      Option(failure.get).foreach(e => throw e)
-      branches.map { case (name, b) => name -> b.join() }
-    } finally drain(cancel = true)
-  }
+  private val nameDims = Seq(
+    NameDim("food_category", "business_food_category", "food_category_id"),
+    NameDim("search_term", "business_search_term", "search_term_id"),
+    NameDim("highlight", "business_highlight", "highlight_id"),
+    // amenities carry a payload on the bridge (model.py:80-85)
+    NameDim("amenity", "business_amenity", "amenity_id",
+      Some("is_available")))
 
-  /** A branch's result, or the branch's own exception. */
-  private def await(branch: CompletableFuture[DataFrame]): DataFrame =
-    try branch.get()
-    catch { case e: ExecutionException => throw e.getCause }
+  /** A record's children, one sorted array per child table, each element
+    * one row of that table: the reference's per-attribute loops
+    * (parse_and_upload_to_db.py:111-175) as array expressions. Null
+    * arrays and null names are dropped, and open_hours drops unknown
+    * weekdays, "Closed" (no intervals) and strings the parse rejects
+    * (NULL), like the reference's raise-per-record but set-wise.
+    * Sorting makes a child's position its rank by the table's natural
+    * key: (weekday_id, open_time) for open_hours, the name for a
+    * bridge (amenity: then is_available). */
+  private def children: Seq[(String, Column)] = {
+    def kept(a: Column, p: Column => Column = _.isNotNull): Column =
+      filter(coalesce(a, array()), p)
+    def weekdayId(day: Column): Column =
+      array_position(typedlit(weekdays), day("weekday"))
+    Seq(
+      "open_hours" -> flatten(kept(transform(
+        kept(col("open_hours"), weekdayId(_) > 0),
+        day => transform(HoursParser.parse(day("open_hours")), iv => struct(
+          weekdayId(day).as("weekday_id"), iv("open_time").as("open_time"),
+          iv("close_time").as("close_time")))))),
+      "food_category" -> kept(col("food_category")),
+      "search_term" -> kept(col("related_search_terms")),
+      "highlight" -> kept(col("highlights")),
+      "amenity" -> transform(kept(col("amenities"), _("amenity").isNotNull),
+        am => struct(am("amenity").as("name"),
+          am("is_available").as("is_available"))))
+      .map { case (c, a) => c -> sort_array(a) }
+  }
 
   /** Full normalization: valid records → the 11 tables of SURVEY.md §1.3,
     * keyed by reference table name.
     *
-    * After the hub, the nine numbered tables (open_hours, four dims, four
-    * bridges) are built concurrently, one thread each, because no
-    * numbering reads another: a bridge is numbered by (business_id, name)
-    * from its own exploded rows, and only then waits for its dim, whose
-    * ids it broadcast-joins on lazily.
-    * That numbering equals the reference order (business_id, dim id):
-    * each dim numbers its distinct names in name order, so dim id order
-    * is name order and ties on one key are ties on the other.
+    * Bridge ids follow the reference order (business_id, dim id): each
+    * dim numbers its names in name order, so a bridge's positions in
+    * name order are positions in dim id order.
     *
-    * @param stageDir when set, the deduped + id-assigned hub is written
-    *   to this path and read back with the schema it was written with
-    *   (no inference job), so the 9 downstream table builds scan the
-    *   staged parquet instead of each re-running the dedup window and id
-    *   shuffles over the raw input (8 redundant passes at scale — the
-    *   standard multi-output staging pattern). [[run]] always stages;
-    *   `None` keeps the fully-lazy plan for in-memory/spec use. */
+    * @param stageDir when set, the deduped + id-assigned hub, with its
+    *   child arrays and their offsets, is written to this path and read
+    *   back with the schema it was written with (no inference job), so
+    *   the 10 downstream table builds scan the staged parquet instead of
+    *   each re-running the dedup window and id shuffles over the raw
+    *   input (the standard multi-output staging pattern). [[run]] always
+    *   stages; `None` keeps the fully-lazy plan for in-memory/spec use.
+    */
   def normalize(valid: DataFrame,
                 stageDir: Option[String] = None): Map[String, DataFrame] = {
     val spark = valid.sparkSession
@@ -161,85 +125,75 @@ object Normalize {
     // Resume-append inputs can repeat a bizId (the scraper's NDJSON is
     // append-only, web_scraping.py:221-224); keep one record per bizId
     // deterministically — get_or_create's keep-existing semantics — then
-    // assign hub ids. `withId` keeps the nested collections for the
-    // explode stages below, `business` is the scalar hub projection.
-    val deduped = Relational.dedupKeepFirst(valid, Seq(col("bizId")),
-      Seq(col("ranking").asc_nulls_first, col("name").asc_nulls_first))
-    val withIdLazy = Relational.globalRowNumber(deduped, Seq(col("bizId")),
-      rankCol = "id")
+    // number the hub, with each child array's running size as the
+    // offset of its first row. The children are built before the dedup's
+    // shuffle, so once: the numbering's sample and shuffle jobs both
+    // read that shuffle's output.
+    val kids = children.map(_._1)
+    val withChildren = Relational.dedupKeepFirst(
+        valid.select(Seq("bizId", "ranking", "name", "website",
+            "phone_number", "address", "price", "health_score").map(col) ++
+          children.map { case (c, a) => a.as(c) }: _*),
+        Seq(col("bizId")),
+        Seq(col("ranking").asc_nulls_first, col("name").asc_nulls_first))
+      .withColumns(kids.map(c => s"${c}_n" -> size(col(c)).cast("long")).toMap)
+    val withIdLazy = Relational.globalRowNumberWithCount(withChildren,
+        Seq(col("bizId")), "id", kids.map(c => s"${c}_n" -> s"${c}_off"))._1
+      .drop("bizId" +: "ranking" +: kids.map(c => s"${c}_n"): _*)
     val withId = stageDir match {
       case Some(dir) =>
         withIdLazy.write.mode("overwrite").parquet(dir)
         spark.read.schema(withIdLazy.schema).parquet(dir)
       case None => withIdLazy
     }
-    val business = withId
-      .select("id", "bizId", "name", "website", "phone_number", "address",
-        "price", "health_score")
-      // bizId is carried for joins below; the reference hub table
-      // (model.py:9-17) does not persist it — dropped at write time.
+    val business = withId.select("id", "name", "website", "phone_number",
+      "address", "price", "health_score")
 
     val weekday = spark.createDataFrame(
       weekdays.zipWithIndex.map { case (w, i) => (i + 1L, w) })
       .toDF("id", "name")
 
-    // open_hours: explode day rows, then each day's parsed intervals
-    // (the §2.L generator) → one row per contiguous open interval
-    // (parse_and_upload_to_db.py:111-118). The outer explode yields a
-    // null interval for an unparseable string (parse NULL) and for
-    // "Closed" (no intervals); filtering it drops them like the
-    // reference's raise-per-record, but set-wise. The inner explode would
-    // let InferFiltersFromGenerate add `size(parse) > 0`, a second run
-    // of the parse per day row.
-    def openHours: DataFrame = withId.select(col("id").as("business_id"),
-        explode(col("open_hours")).as("oh"))
-      .select(col("business_id"), col("oh.weekday").as("weekday_name"),
-        explode_outer(HoursParser.parse(col("oh.open_hours"))).as("iv"))
-      .filter(col("iv").isNotNull)
-      .select(col("business_id"), col("weekday_name"),
-        col("iv.open_time").as("open_time"),
-        col("iv.close_time").as("close_time"))
-      .join(broadcast(weekday.select(col("id").as("weekday_id"),
-        col("name").as("weekday_name"))), "weekday_name")
-      .transform(df => Relational.globalRowNumber(df,
-        Seq(col("business_id"), col("weekday_id"), col("open_time")),
-        rankCol = "id"))
-      .select("id", "business_id", "open_time", "close_time", "weekday_id")
+    /** Child table `c`'s rows: id, business_id and the array element
+      * `el`. No exchange: the id is the business's offset plus the
+      * element's position. */
+    def child(c: String): DataFrame = withId
+      .select(col("id").as("business_id"), col(s"${c}_off"),
+        posexplode(col(c)).as(Seq("pos", "el")))
+      .select((GlobalIndex.notNull(col(s"${c}_off")) + col("pos") + 1)
+        .as("id"), col("business_id"), col("el"))
 
-    def names(attr: String): DataFrame = withId
-      .select(col("id").as("business_id"), explode(col(attr)).as("name"))
-      .filter(col("name").isNotNull)
-    val collections = Seq(
-      Collection("food_category", "business_food_category",
-        "food_category_id", names("food_category")),
-      Collection("search_term", "business_search_term", "search_term_id",
-        names("related_search_terms")),
-      Collection("highlight", "business_highlight", "highlight_id",
-        names("highlights")),
-      // amenities carry a payload on the bridge (model.py:80-85)
-      Collection("amenity", "business_amenity", "amenity_id",
-        withId.select(col("id").as("business_id"),
-            explode(col("amenities")).as("am"))
-          .select(col("business_id"), col("am.amenity").as("name"),
-            col("am.is_available").as("is_available"))
-          .filter(col("name").isNotNull)))
+    val openHours = child("open_hours").select(col("id"),
+      col("business_id"), col("el.open_time").as("open_time"),
+      col("el.close_time").as("close_time"),
+      GlobalIndex.notNull(col("el.weekday_id")).as("weekday_id"))
 
-    // One thread per branch. A bridge thread numbers its rows first, then
-    // waits for its dim; the broadcast join onto the dim's ids stays lazy
-    // and runs when the bridge is written. Dims never wait, so none
-    // starves.
-    // A bridge whose dim failed rethrows the dim's exception.
-    val built = inBranches(spark, 1 + 2 * collections.size) { submit =>
-      ("open_hours" -> submit(openHours)) +: collections.flatMap { c =>
-        val d = submit(dim(c.rows))
-        Seq(c.dim -> d, c.bridge -> submit {
-          val numbered = c.numbered
-          c.joined(await(d), numbered)
-        })
-      }
+    // The four dims in one numbering: the distinct (kind, name) pairs in
+    // (kind, name) order, each with the count of same-kind names before
+    // it, from a one-hot weight per kind.
+    val named = nameDims.zipWithIndex.map { case (d, k) =>
+        withId.select(lit(k).as("kind"), explode(d.name(col(d.dim))).as("name"))
+      }.reduce(_ union _).distinct()
+      .withColumns(nameDims.indices.map(k =>
+        s"w$k" -> (col("kind") === k).cast("long")).toMap)
+    val ranked = Relational.globalRowNumberWithCount(named,
+      Seq(col("kind"), col("name")), "rank",
+      nameDims.indices.map(k => s"w$k" -> s"before$k"))._1
+    val dims = nameDims.zipWithIndex.map { case (d, k) =>
+      d -> ranked.filter(col("kind") === k)
+        .select((col(s"before$k") + 1).as("id"), col("name"))
     }
-    (("business" -> business.drop("bizId")) +: ("weekday" -> weekday) +:
-      built).toMap
+
+    val bridges = dims.map { case (d, dimDf) =>
+      d.bridge -> child(d.dim)
+        .select(Seq(col("id"), col("business_id"), d.name(col("el"))
+          .as("name")) ++ d.payload.map(p => col("el")(p).as(p)): _*)
+        .join(broadcast(dimDf.select(col("id").as(d.idCol), col("name"))),
+          "name")
+        .select((Seq("id", "business_id", d.idCol) ++ d.payload).map(col): _*)
+    }
+    (Seq("business" -> business, "weekday" -> weekday,
+      "open_hours" -> openHours) ++ dims.map { case (d, df) => d.dim -> df } ++
+      bridges).toMap
   }
 
   /** End-to-end: NDJSON path → warehouse dir. Returns (row counts per

@@ -57,9 +57,12 @@ object Relational {
 
   /** [[globalRowNumber]] + the total row count for free — the count
     * is a byproduct of GlobalIndex's offsets job, so callers that
-    * need N (ring moduli, ntile denominators) skip a count job. */
+    * need N (ring moduli, ntile denominators) skip a count job.
+    * `runningSums` attaches exclusive running sums of LONG weights in
+    * rank order ([[org.apache.spark.sql.graftfns.GlobalIndex]]). */
   def globalRowNumberWithCount(df: DataFrame, orderCols: Seq[Column],
-                               rankCol: String = "rn")
+                               rankCol: String = "rn",
+                               runningSums: Seq[(String, String)] = Nil)
       : (DataFrame, Long) = {
     require(orderCols.nonEmpty, "globalRowNumber needs a total order")
     // fail loudly instead of silently replacing a caller column
@@ -69,7 +72,7 @@ object Relational {
     org.apache.spark.sql.graftfns.GlobalIndex.attachWithTotal(
       df.repartitionByRange(orderCols: _*)
         .sortWithinPartitions(orderCols: _*),
-      rankCol)
+      rankCol, runningSums)
   }
 
   /** Deterministic offset pagination (reference `database/app.py:74-82`:

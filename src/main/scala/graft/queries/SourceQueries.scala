@@ -98,7 +98,8 @@ object SourceQueries {
     * of the operator under test with sink throughput. `build(path)`
     * runs only while `path/<marker>` is missing, and first deletes this
     * prefix's and key's directories under other stamps, so scratch
-    * does not grow with every compile. The one protocol for every
+    * does not grow with every compile, and this prefix's directories
+    * whose recorded source dir is gone. The one protocol for every
     * persistent fixture, so the stamp/caching/sweeper-name contract
     * (see [[sinkDirNameRe]]) lives in one place. */
   private[graft] def stampedFixture(prefix: String, dir: String,
@@ -114,13 +115,27 @@ object SourceQueries {
           .getOrElse(Array.empty[java.io.File])
           // the optional `vN_` form is the retired reader-versioned
           // stamp, swept the same way
-          .filter(f => f.getName.startsWith(head) && f.getName != name &&
-            f.getName.drop(head.length).matches("(v[0-9]+_)?[0-9a-f]+"))
+          .filter(f => f.getName != name && (f.getName.startsWith(head) &&
+            f.getName.drop(head.length).matches("(v[0-9]+_)?[0-9a-f]+") ||
+            f.getName.startsWith(s"${prefix}_") && sourceGone(f)))
           .foreach(graft.etl.Sinks.rmTree)
         build(path)
+        java.nio.file.Files.writeString(new java.io.File(path, sourceFile)
+          .toPath, new java.io.File(dir).getAbsolutePath)
       }
       path
     }
+
+  /** The file in each fixture that names the source dir it was built
+    * from; the leading `_` hides it from Spark's file listings. */
+  private val sourceFile = "_SOURCE_DIR"
+
+  /** Whether `fixture` records a source dir that no longer exists. */
+  private def sourceGone(fixture: java.io.File): Boolean = {
+    val f = new java.io.File(fixture, sourceFile)
+    f.isFile && !new java.io.File(java.nio.file.Files.readString(f.toPath))
+      .exists()
+  }
 
   /** Events-table fixture of columns `cols`, written by `write`. */
   private def eventsFixture(s: SparkSession, dir: String, prefix: String,

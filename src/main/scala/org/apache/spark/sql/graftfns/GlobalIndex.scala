@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftfns
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Attaches a 1-based global row index to an ALREADY partitioned+sorted
@@ -25,38 +27,65 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale shape: one full-data shuffle (the caller's range partition), a
   * metadata-cheap counting job over shuffle output, then a streaming
   * per-partition map. No window, no SinglePartition exchange, no
-  * broadcast join. The offsets array is numPartitions longs — the only
-  * driver-scale piece. */
+  * broadcast join. The offsets array is numPartitions × (1 + weights)
+  * longs — the only driver-scale piece. */
 object GlobalIndex {
 
   /** `df` with `rankCol` attached, and the total row count — the count
     * is a BYPRODUCT of the offsets job this pattern already runs, so a
     * caller needing N (e.g. a ring modulus) saves a whole separate
-    * count job. */
-  def attachWithTotal(df: DataFrame, rankCol: String)
+    * count job.
+    *
+    * Each `(weight, sumCol)` of `runningSums` names a LONG column of
+    * `df` and the column to attach: the sum of `weight` over the rows
+    * before this one, in index order (a null weight counts 0). The
+    * same counting job sums the weights per partition, so the running
+    * sums cost no job of their own. */
+  def attachWithTotal(df: DataFrame, rankCol: String,
+                      runningSums: Seq[(String, String)] = Nil)
       : (DataFrame, Long) = {
     val spark = df.sparkSession
     val rdd = df.queryExecution.toRdd
-    val counts = spark.sparkContext.runJob(rdd,
-      (it: Iterator[InternalRow]) => {
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        n
-      })
-    val offsets = counts.scanLeft(0L)(_ + _)
+    val weights = runningSums.map(w => df.schema.fieldIndex(w._1)).toArray
+    require(weights.forall(df.schema(_).dataType == LongType),
+      "running-sum weights must be LONG")
+    // per partition: the row count, then each weight's sum
+    val totals = spark.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) =>
+      it.foldLeft(new Array[Long](1 + weights.length))(add(_, _, weights)))
+    val offsets = totals.scanLeft(new Array[Long](1 + weights.length))(
+      (a, b) => a.zip(b).map { case (x, y) => x + y })
     val offBc = spark.sparkContext.broadcast(offsets)
     val out = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var i = offBc.value(pid)
+      val acc = offBc.value(pid).clone()
       it.map { row =>
-        i += 1
+        // the index counts this row, the running sums do not
+        val attached = acc.map(v => v: Any)
+        attached(0) = acc(0) + 1
+        add(acc, row, weights)
         // copy: the scan iterator reuses its UnsafeRow backing buffer
         new JoinedRow(row.copy(),
-          new GenericInternalRow(Array[Any](i))): InternalRow
+          new GenericInternalRow(attached)): InternalRow
       }
     }
-    val schema = StructType(df.schema.fields :+
-      StructField(rankCol, LongType, nullable = false))
+    val schema = StructType(df.schema.fields ++
+      (rankCol +: runningSums.map(_._2))
+        .map(StructField(_, LongType, nullable = false)))
     (spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(out, schema), offsets.last)
+      .internalCreateDataFrame(out, schema), offsets.last(0))
   }
+
+  /** Counts `row` into `acc(0)` and adds its weights into the rest. */
+  private def add(acc: Array[Long], row: InternalRow,
+                  weights: Array[Int]): Array[Long] = {
+    acc(0) += 1
+    for (j <- weights.indices if !row.isNullAt(weights(j)))
+      acc(j + 1) += row.getLong(weights(j))
+    acc
+  }
+
+  /** `c`, declared non-null; a null throws. Parquet reads every column
+    * back as nullable, so an id computed from a staged index or running
+    * sum needs this to keep the NOT NULL it was written with. */
+  def notNull(c: Column): Column =
+    ExpressionUtils.column(AssertNotNull(ExpressionUtils.expression(c)))
 }

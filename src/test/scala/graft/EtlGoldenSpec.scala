@@ -5,11 +5,16 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import graft.etl.Normalize
-import org.apache.spark.TaskContext
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, Encoders, Row}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Golden end-to-end ETL test (SURVEY.md §5.2): the committed fixture
   * NDJSON (FIXTURES.md §2 coverage list) through [[Normalize]] must yield
@@ -60,15 +65,83 @@ class EtlGoldenSpec extends SparkSpecBase {
       (5L, 5L, 28800L, 39600L))) // Golf Fri (Thu gibberish dropped)
   }
 
-  test("open_hours keeps its written schema: names, types, nullability") {
+  /** Every table's schema, as [[Normalize.normalize]] returns it. */
+  private val schemas: Map[String, StructType] = Map(
+    "business" -> ("id BIGINT NOT NULL, name STRING, website STRING, " +
+      "phone_number STRING, address STRING, price STRING, " +
+      "health_score STRING"),
+    "weekday" -> "id BIGINT NOT NULL, name STRING",
     // times come out of the parse's interval structs, whose fields are
     // nullable like the (opens, closes) array pair they replaced
-    assert(tables("open_hours").schema == StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("business_id", LongType, nullable = false),
-      StructField("open_time", LongType),
-      StructField("close_time", LongType),
-      StructField("weekday_id", LongType, nullable = false))))
+    "open_hours" -> ("id BIGINT NOT NULL, business_id BIGINT NOT NULL, " +
+      "open_time BIGINT, close_time BIGINT, weekday_id BIGINT NOT NULL"),
+    "food_category" -> "id BIGINT NOT NULL, name STRING",
+    "search_term" -> "id BIGINT NOT NULL, name STRING",
+    "highlight" -> "id BIGINT NOT NULL, name STRING",
+    "amenity" -> "id BIGINT NOT NULL, name STRING",
+    "business_food_category" -> ("id BIGINT NOT NULL, " +
+      "business_id BIGINT NOT NULL, food_category_id BIGINT NOT NULL"),
+    "business_search_term" -> ("id BIGINT NOT NULL, " +
+      "business_id BIGINT NOT NULL, search_term_id BIGINT NOT NULL"),
+    "business_highlight" -> ("id BIGINT NOT NULL, " +
+      "business_id BIGINT NOT NULL, highlight_id BIGINT NOT NULL"),
+    "business_amenity" -> ("id BIGINT NOT NULL, " +
+      "business_id BIGINT NOT NULL, amenity_id BIGINT NOT NULL, " +
+      "is_available BOOLEAN")).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
+  /** The schemas [[Normalize.run]] writes: the staged hub reads back
+    * nullable, like every parquet read, so the hub id and the
+    * business_id of every child table lose their NOT NULL. */
+  private val writtenSchemas: Map[String, StructType] = schemas.map {
+    case (t, st) => t -> StructType(st.map(f =>
+      if (f.name == "business_id" || (t, f.name) == ("business", "id"))
+        f.copy(nullable = true)
+      else f))
+  }
+
+  /** The Spark schema in the footer of each parquet file of `dir`, and
+    * the parquet schema Spark derives from it. */
+  private def footerSchemas(dir: String): Seq[(StructType, MessageType)] =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .toSeq.map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new Path(f.getPath), new Configuration()))
+        try {
+          val meta = reader.getFooter.getFileMetaData
+          (DataType.fromJson(meta.getKeyValueMetaData.get(
+            "org.apache.spark.sql.parquet.row.metadata"))
+            .asInstanceOf[StructType], meta.getSchema)
+        } finally reader.close()
+      }
+
+  /** Every file of every table of `wh` holds the schema `run` writes:
+    * names, types, nullability and field metadata, in the Spark row
+    * metadata and in the parquet schema itself. */
+  private def assertWrittenSchemas(wh: String): Unit = {
+    val toParquet = new SparkToParquetSchemaConverter(spark.sessionState.conf)
+    writtenSchemas.foreach { case (t, st) =>
+      val footers = footerSchemas(s"$wh/$t")
+      assert(footers.nonEmpty, s"$t has no parquet file")
+      footers.foreach { case (sparkSchema, parquetSchema) =>
+        assert(sparkSchema == st, t)
+        assert(parquetSchema == toParquet.convert(st), t)
+      }
+    }
+  }
+
+  /** A staged run of the golden fixture: (warehouse dir, row counts per
+    * table, quarantined count). */
+  private lazy val goldenRun = {
+    val whDir = java.nio.file.Files
+      .createTempDirectory("graft_etl_run").toString + "/wh"
+    val (counts, nQuarantined) = Normalize.run(spark, fixture, whDir)
+    (whDir, counts, nQuarantined)
+  }
+
+  test("every table keeps its written schema: names, types, nullability") {
+    assert(tables.keySet == schemas.keySet)
+    schemas.foreach { case (t, st) => assert(tables(t).schema == st, t) }
+    assertWrittenSchemas(goldenRun._1)
   }
 
   test("dims are distinct names with deterministic ids") {
@@ -135,9 +208,7 @@ class EtlGoldenSpec extends SparkSpecBase {
     // staging dir is silently listed as EMPTY by Hadoop's hidden-file
     // filter, which once turned the whole warehouse into zero-row tables
     // with only a WARN
-    val whDir = java.nio.file.Files
-      .createTempDirectory("graft_etl_run").toString + "/wh"
-    val (counts, nQuarantined) = Normalize.run(spark, fixture, whDir)
+    val (whDir, counts, nQuarantined) = goldenRun
     assert(nQuarantined == 2L) // biz-echo, biz-foxtrot
     assert(counts("business") == 6L)
     assert(counts("weekday") == 7L)
@@ -150,6 +221,22 @@ class EtlGoldenSpec extends SparkSpecBase {
     assert(backBiz.columns.toSet ==
       Set("id", "name", "website", "phone_number", "address", "price",
         "health_score"))
+  }
+
+  test("an all-quarantined batch writes empty tables with the same schemas") {
+    val input = java.nio.file.Files.createTempDirectory("graft_etl_bad")
+    java.nio.file.Files.write(input.resolve("bad.ndjson"), java.util.List.of(
+      """{"bizId": "b1", "ranking": 1, "name": "X", "price": "cheap"}""",
+      """{"bizId": "b2", "ranking": 2, "name": "Y", "health_score": "zz"}""",
+      """{"bizId": "b3", "ranking": 3, "name": null}"""))
+    val wh = input.toString + "/wh"
+    val (counts, nQuarantined) =
+      Normalize.run(spark, input.resolve("bad.ndjson").toString, wh)
+    assert(nQuarantined == 3L)
+    assert(counts == schemas.keySet.map(t =>
+      t -> (if (t == "weekday") 7L else 0L)).toMap)
+    assertWrittenSchemas(wh)
+    graft.etl.Sinks.rmTree(input.toFile)
   }
 
   test("normalization is idempotent (re-run produces identical tables)") {
@@ -183,45 +270,50 @@ class EtlGoldenSpec extends SparkSpecBase {
       (4L, 2L, 2L)))
   }
 
-  test("a failing branch surfaces its own exception and leaves no thread") {
-    // open_hours is the only branch that reads the day struct's fields
+  test("normalize gives identical tables at 1 and 7 shuffle partitions") {
+    // biz-zulu repeats a category and an amenity name (with both
+    // availabilities), and has an unknown weekday and a Closed day
+    val zulu = """{"bizId": "biz-zulu", "ranking": 9, "name": "Zulu", """ +
+      """"food_category": ["Pubs", "Bars", "Pubs"], "open_hours": [""" +
+      """{"weekday": "Funday", "open_hours": "9:00 AM - 5:00 PM"}, """ +
+      """{"weekday": "Monday", "open_hours": "Closed"}, """ +
+      """{"weekday": "Sunday", "open_hours": "9:00 AM - 5:00 PM"}], """ +
+      """"amenities": [{"amenity": "Wi-Fi", "is_available": true}, """ +
+      """{"amenity": "Parking", "is_available": true}, """ +
+      """{"amenity": "Wi-Fi", "is_available": false}, """ +
+      """{"amenity": null, "is_available": true}]}"""
+    val valid = split._1.unionByName(Normalize.validate(
+      spark.read.schema(Schemas.scrapedBusiness)
+        .json(spark.createDataset(Seq(zulu))(Encoders.STRING)))._1)
+    def rowsAt(partitions: Int): Map[String, Seq[Row]] = {
+      val key = "spark.sql.shuffle.partitions"
+      val old = spark.conf.get(key)
+      spark.conf.set(key, partitions.toString)
+      try Normalize.normalize(valid).map { case (t, df) =>
+        t -> df.collect().toSeq.sortBy(_.getLong(0))
+      } finally spark.conf.set(key, old)
+    }
+    val one = rowsAt(1)
+    assert(rowsAt(7) == one)
+    // biz-zulu sorts after the six golden bizIds
+    def ofZulu(t: String) = one(t).filter(_.getLong(1) == 7L)
+    assert(ofZulu("open_hours").map(r => (r.getLong(4), r.getLong(2),
+      r.getLong(3))) == Seq((7L, 32400L, 61200L)))
+    assert(ofZulu("business_food_category").size == 3)
+    // the repeated amenity's ids follow (name, is_available)
+    val amenity = one("amenity").map(r => r.getString(1) -> r.getLong(0)).toMap
+    assert(ofZulu("business_amenity").map(r => (r.getLong(2), r.getBoolean(3)))
+      == Seq((amenity("Parking"), true), (amenity("Wi-Fi"), false),
+        (amenity("Wi-Fi"), true)))
+  }
+
+  test("a malformed open_hours struct fails normalize with its own AnalysisException") {
+    // open_hours is the only child that reads the day struct's fields
     val renamed = split._1.withColumn("open_hours", expr(
       "transform(open_hours, o -> named_struct('day', o.weekday, " +
         "'open_hours', o.open_hours))"))
     val e = intercept[AnalysisException](Normalize.normalize(renamed))
     assert(e.getMessage.contains("weekday"))
-    val branches = Thread.getAllStackTraces.keySet.asScala
-      .filter(_.getName == "normalize-branch")
-    branches.foreach(_.join(10000))
-    assert(!branches.exists(_.isAlive))
-  }
-
-  test("a failing branch cancels the other branches' jobs") {
-    val sc = spark.sparkContext
-    val t0 = System.nanoTime()
-    val e = intercept[IllegalStateException](
-      Normalize.inBranches(spark, 2) { submit =>
-        // one task that runs until its job is cancelled, or for 2 min
-        val slow = submit {
-          sc.parallelize(Seq(1), 1).map { x =>
-            val tc = TaskContext.get()
-            val end = System.nanoTime() + 120e9.toLong
-            while (!tc.isInterrupted() && System.nanoTime() < end)
-              Thread.sleep(10)
-            x
-          }.count()
-          spark.emptyDataFrame
-        }
-        val failing = submit {
-          Thread.sleep(500)
-          throw new IllegalStateException("branch failed")
-        }
-        Seq("slow" -> slow, "failing" -> failing)
-      })
-    assert(e.getMessage == "branch failed")
-    // inBranches waits for every branch, so only a cancelled slow job
-    // lets it return this early
-    assert(System.nanoTime() - t0 < 60e9.toLong)
   }
 
   test("every job normalize starts carries the caller's job group") {
@@ -250,8 +342,8 @@ class EtlGoldenSpec extends SparkSpecBase {
     val seen = groups.asScala.toSeq
     assert(seen.lastOption.contains("marker"))
     val normalizeJobs = seen.init
-    // at least the count job of each of the ten numberings
-    assert(normalizeJobs.size >= 10, normalizeJobs)
+    // at least the count job of each of the two numberings (hub, dims)
+    assert(normalizeJobs.size >= 2, normalizeJobs)
     assert(normalizeJobs.forall(_ == "etl-golden"), normalizeJobs)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.Relational
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Unit coverage for the reusable plan combinators in [[Relational]]. */
@@ -71,6 +73,30 @@ class RelationalOpsSpec extends SparkSpecBase {
       Seq((42L, "x")).toDF("k", "p"), Seq(col("k")))
       .select("rn", "k").as[(Long, Long)].collect().toSeq
     assert(one == Seq((1L, 42L)))
+  }
+
+  test("globalRowNumber running sums equal a preceding-rows window sum") {
+    // a running sum is the weight summed over the rows ranked before
+    // this one; a null weight counts 0, as it does in the window's sum
+    val before = Window.orderBy("k")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val rows = new scala.util.Random(11).shuffle((1 to 300).toList)
+      .map(i => (i, (i % 7).toLong, if (i % 5 == 0) None else Some(i * 3L)))
+    def check(df: DataFrame, label: String): Unit = {
+      val got = Relational.globalRowNumberWithCount(df, Seq(col("k")), "rn",
+          Seq("a" -> "a_before", "b" -> "b_before"))._1
+        .select("rn", "a_before", "b_before").as[(Long, Long, Long)]
+        .collect().sortBy(_._1).toSeq
+      val want = df.select(row_number().over(Window.orderBy("k")).cast("long"),
+          coalesce(sum("a").over(before), lit(0L)),
+          coalesce(sum("b").over(before), lit(0L)))
+        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(got == want, label)
+    }
+    val df = rows.toDF("k", "a", "b")
+    for (parts <- Seq(1, 4, 7)) check(df.repartition(parts), s"parts=$parts")
+    check(df.limit(0), "empty")
+    check(df.limit(1), "one row")
   }
 
   test("globalRowNumber never funnels raw rows through one partition") {

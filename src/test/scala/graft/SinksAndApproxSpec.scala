@@ -173,6 +173,34 @@ class SinksAndApproxSpec extends SparkSpecBase {
     Seq(b, keep).foreach { d => d.listFiles().foreach(_.delete()); d.delete() }
   }
 
+  test("stamped fixtures: a fixture whose source dir is gone is swept") {
+    import graft.queries.SourceQueries
+    def copyOfSf(name: String): java.nio.file.Path = {
+      val d = Files.createTempDirectory(name)
+      Files.copy(java.nio.file.Paths.get(sf0001, "events.parquet"),
+        d.resolve("events.parquet"))
+      d
+    }
+    def fixture(dir: java.nio.file.Path): java.io.File =
+      new java.io.File(SourceQueries.stampedFixture("orphantest",
+          dir.toString, "events") { p =>
+        new java.io.File(p).mkdirs()
+        new java.io.File(s"$p/_SUCCESS").createNewFile(): Unit
+      })
+    def rm(d: java.nio.file.Path): Unit = Sinks.rmTree(d.toFile)
+    val gone = copyOfSf("graft_orphan")
+    val orphan = fixture(gone)
+    rm(gone)
+    val live = copyOfSf("graft_live")
+    val kept = fixture(live)
+    assert(!orphan.exists(), "a fixture of a deleted source survived")
+    val other = copyOfSf("graft_other")
+    val third = fixture(other)
+    assert(kept.isDirectory, "swept the fixture of a live source")
+    Seq(live, other).foreach(rm)
+    Seq(kept, third).foreach(d => Sinks.rmTree(d))
+  }
+
   test("merged daily HLL sketches track exact distinct users (q_agg_sketch)") {
     // the property that matters at scale: union-of-daily-sketches must
     // estimate the same cardinality as one sketch over the whole span
